@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.BenchExtra <repeats> <query> [query ...]
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCHX_ACTION (count|noop).
   * Emits one JSON line: {"metric":"bench_extra","action":...,
-  * "samples":{"q":[s1,s2,...]}}.
+  * "samples":{"q":[s1,s2,...]},"failed":{"q":n}}. A repeat that throws is
+  * counted in `failed` and never timed as a sample.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -39,9 +40,9 @@ object BenchExtra {
       SparkEntry.queries("q1_agg")(spark, "/root/testdata/sf0.001").count()
       SparkEntry.queries("q_dedup_exact")(spark, "/root/testdata/sf0.001").count()
     } catch { case _: Throwable => () }
-    val samples = names.map { name =>
+    val runs = names.map { name =>
       val fn = SparkEntry.queries(name)
-      val times = (1 to repeats).map { _ =>
+      val outcomes = (1 to repeats).map { _ =>
         System.gc(); Thread.sleep(200)
         spark.sparkContext.setJobDescription(s"bench-extra: $name")
         val t0 = System.nanoTime()
@@ -49,14 +50,17 @@ object BenchExtra {
           val df = fn(spark, sfDir)
           if (action == "noop") df.write.format("noop").mode("overwrite").save()
           else { df.count(): Unit }
-        } catch { case t: Throwable => System.err.println(s"[bench-extra] $name failed: $t") }
-        (System.nanoTime() - t0) / 1e9
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch {
+          case t: Throwable => System.err.println(s"[bench-extra] $name failed: $t"); None
+        }
       }
-      name -> times
+      (name, outcomes.flatten, outcomes.count(_.isEmpty))
     }
-    val js = samples.map { case (n, ts) =>
+    val samples = runs.map { case (n, ts, _) =>
       s""""$n":${ts.map(t => f"$t%.3f").mkString("[", ",", "]")}"""
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"bench_extra","action":"$action","sf":"$sfDir","samples":$js}""")
+    val failed = runs.map { case (n, _, f) => s""""$n":$f""" }.mkString("{", ",", "}")
+    println(s"""{"metric":"bench_extra","action":"$action","sf":"$sfDir","samples":$samples,"failed":$failed}""")
   }
 }

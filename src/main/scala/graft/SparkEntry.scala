@@ -248,11 +248,12 @@ object SparkEntry {
     }),
 
     // ---------------- SimHash near-dup, exact-verified ----------------
-    // hamming-radius banding (pigeonhole-lossless at the radius) UNIONED
-    // with minhash-LSH candidates over the same base (near-threshold pairs
-    // can exceed any fixed radius — r6 fix, measured hamming 9/9/12 at
-    // sf0.001); the exact Jaccard verify decides membership either way, so
-    // the output is hash-independent and oracle-checkable.
+    // the exact shingle-Jaccard >= 0.9 pair set from the minhash-LSH
+    // generator alone: near-threshold pairs can exceed any fixed hamming
+    // radius (measured 9/9/12 vs radius 8 at sf0.001), and a radius channel
+    // added no verified pair beyond minhash at sf0.001/0.01/0.1 (see
+    // BENCH/BASELINE.md); the exact verify decides membership, so the
+    // output is hash-independent and oracle-checkable.
     "q_dedup_simhash" -> ((s, dir) => {
       TextDedup.simhashNearDups(plantedDocs(s, dir), 0.9)
         .select(col("a"), col("b"))

@@ -227,7 +227,8 @@ object MinHashSigsExpr {
     * signature exists (the Column form yields per-slot nulls; a null
     * signature keeps empty-text docs out of every LSH band instead of
     * colliding them all into one Long.MaxValue bucket). Unreachable from
-    * shingleHashes (always ≥1 element) but enforced here, not by a comment.
+    * the shingle base (docs with fewer than k words are dropped, so every
+    * array has ≥1 element) but enforced here, not by a comment.
     */
   def sigs(hashes: ArrayData, numHashes: Int): ArrayData = {
     val n = hashes.numElements()

@@ -210,73 +210,54 @@ object TextDedup {
       .select($"a", $"b", $"shared", $"na", $"nb")
   }
 
-  /** Exact Jaccard verification of candidate pairs: join each (a,b) pair
-    * back to the token table on both sides, count shared tokens, filter by
-    * the exact threshold. Cost is proportional to the CANDIDATE set (already
-    * pruned by LSH), never all-pairs — the standard verify stage after any
-    * sketch-based candidate generator.
-    */
-  def verifyJaccard(pairs: DataFrame, toks: DataFrame, threshold: Double): DataFrame = {
-    val t = hashedToks(toks)
-    val sizes = t.groupBy($"id").agg(count(lit(1)).as("n"))
-    val ta = t.select($"id".as("a"), $"tok")
-    val tb = t.select($"id".as("b"), $"tok")
-    val shared = pairs.select($"a", $"b")
-      .join(ta, Seq("a")).join(tb, Seq("b", "tok"))
-      .groupBy($"a", $"b").agg(count(lit(1)).as("shared"))
-    shared
-      .join(sizes.withColumnRenamed("id", "a").withColumnRenamed("n", "na"), "a")
-      .join(sizes.withColumnRenamed("id", "b").withColumnRenamed("n", "nb"), "b")
-      .withColumn("jaccard", $"shared" / ($"na" + $"nb" - $"shared"))
-      .filter($"jaccard" >= threshold)
-      .select($"a", $"b", $"shared", $"na", $"nb")
-  }
-
-  /** MinHash signature column: `numHashes` permutations approximated by
-    * seeded hashing over word shingles (min over shingle hashes per seed) —
-    * all inside codegen'd higher-order functions, no UDF.
-    */
-  def minhashSignature(textCol: Column, shingleSize: Int, numHashes: Int): Column =
-    minhashFromHashes(shingleHashes(textCol, shingleSize), numHashes)
-
-  /** Base shingle hashes, computed ONCE per doc (strings are hashed a single
-    * time; the N permutations below are arithmetic over these longs — the
-    * standard one-hash + N-mix MinHash construction. Without this split the
-    * string shingle array is re-built per permutation: measured 30×+ slower).
-    */
-  def shingleHashes(textCol: Column, shingleSize: Int): Column = {
-    val words = split(textCol, " ")
-    val n = size(words)
-    val shingles = when(n >= shingleSize,
-      transform(sequence(lit(0), n - lit(shingleSize)),
-        i => concat_ws(" ", slice(words, i + 1, lit(shingleSize)))))
-      .otherwise(array(concat_ws(" ", words)))
-    transform(shingles, s => xxhash64(s))
-  }
-
   /** i-th permutation = min over xxhash64(h, i) — re-hashing the base longs
     * is codegen'd, seed-indexed, and immune to ANSI-mode overflow (a
     * multiplicative family would throw under spark.sql.ansi.enabled).
+    * The Column-form reference the native `minhash_sigs` expression is
+    * pinned bit-identical against.
     */
   def minhashFromHashes(hashes: Column, numHashes: Int): Column =
     array((0 until numHashes).map { i =>
       array_min(transform(hashes, h => xxhash64(h, lit(i))))
     }: _*)
 
-  /** MinHash + LSH banding: signature → `bands` band keys → per-(band,
+  /** The minhash family's banding, defined once: every candidate generator
+    * and the persisted band index band identically, so a pair shares a
+    * band signature in the index iff it does in a live banding. Word
+    * 3-gram shingles, 32 hashes in 16 bands of 2 rows: a pair at Jaccard j
+    * collides with probability 1-(1-j²)¹⁶, so a j = 0.8 pair is missed
+    * w.p. (1-0.8²)¹⁶ ≈ 8·10⁻⁸ and a j = 0.9 pair w.p. ≈ 3·10⁻¹². Buckets
+    * above `MaxBucket` are shed (logged where the audit is on).
+    */
+  private val ShingleSize = 3
+  private val NumHashes = 32
+  private val Bands = 16
+  private val MaxBucket = 1000
+
+  /** Lowest verify threshold at which the fixed banding is effectively
+    * exhaustive (miss ≤ 8·10⁻⁸); at 0.5 the miss is ~1%. The bands are NOT
+    * derived from the threshold: that would make the persisted band index
+    * depend on it.
+    */
+  private val MinThreshold = 0.8
+
+  /** Rejects a minhash-verified threshold outside [0.8, 1]: below 0.8 the
+    * output would silently stop equalling the exhaustive Jaccard pair set,
+    * and above 1 no pair can qualify. `DedupStream.ingest` calls it before
+    * its stream starts.
+    */
+  private[graft] def requireThresholdInDomain(threshold: Double): Unit =
+    require(threshold >= MinThreshold && threshold <= 1.0,
+      s"jaccard threshold $threshold is outside [$MinThreshold, 1.0], the domain where " +
+        s"the fixed $Bands-band x ${NumHashes / Bands}-row minhash banding is exhaustive")
+
+  /** MinHash + LSH banding: signature → band keys → per-(band,
     * band-signature) buckets → candidate pairs by SELF-JOIN on the bucket
     * key (streamed pair expansion; see [[jaccardPairsFromTokens]]).
-    * Probability a pair with Jaccard j collides: 1-(1-j^r)^b, r=rows/band.
-    * Default 16 bands × 2 rows: a j=0.8 pair is missed with probability
-    * (1-0.8²)^16 ≈ 8·10⁻⁸ — effectively exhaustive at the 0.8 threshold.
-    * Degenerate buckets above maxBucket are shed and logged.
     */
   def minhashLshCandidates(docs: DataFrame, idCol: String = "doc_id",
-                           textCol: String = "text", shingleSize: Int = 3,
-                           numHashes: Int = 32, bands: Int = 16,
-                           maxBucket: Int = 1000, logDrops: Boolean = true): DataFrame =
-    minhashLshCandidatesFromBase(
-      shingleDocBase(docs, shingleSize, idCol, textCol), numHashes, bands, maxBucket, logDrops)
+                           textCol: String = "text", logDrops: Boolean = true): DataFrame =
+    minhashLshCandidatesFromBase(shingleDocBase(docs, ShingleSize, idCol, textCol), logDrops)
 
   /** LSH banding over the shared base: signatures are pure long arithmetic
     * (xxhash64 re-mix + array_min) over the materialized `toks`, so the
@@ -285,17 +266,16 @@ object TextDedup {
     * drop count AND the bucket filter both read it, so drop-logging costs a
     * count over a small cached table instead of re-running the banding agg.
     */
-  def minhashLshCandidatesFromBase(base: DataFrame, numHashes: Int = 32, bands: Int = 16,
-                                   maxBucket: Int = 1000, logDrops: Boolean = true): DataFrame = {
-    val banded = minhashBanded(base, numHashes, bands)
+  private def minhashLshCandidatesFromBase(base: DataFrame, logDrops: Boolean): DataFrame = {
+    val banded = minhashBanded(base)
     val counts = banded.groupBy($"band", $"bsig").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true) // one row per occupied bucket — small
     if (logDrops) {
-      val big = counts.filter($"cnt" > maxBucket).count()
-      logDrop("minhash-lsh", s"buckets larger than $maxBucket", big)
+      val big = counts.filter($"cnt" > MaxBucket).count()
+      logDrop("minhash-lsh", s"buckets larger than $MaxBucket", big)
     }
     val inBucket = banded.join(
-      counts.filter($"cnt" > 1 && $"cnt" <= maxBucket).select($"band", $"bsig"),
+      counts.filter($"cnt" > 1 && $"cnt" <= MaxBucket).select($"band", $"bsig"),
       Seq("band", "bsig"), "left_semi")
     inBucket.as("x").join(inBucket.as("y"),
       col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
@@ -310,12 +290,12 @@ object TextDedup {
     * which traverses the shingle array numHashes times and allocates an
     * intermediate array per permutation per row).
     */
-  private def minhashBanded(base: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val r = numHashes / bands
+  private def minhashBanded(base: DataFrame): DataFrame = {
+    val r = NumHashes / Bands
     graft.functions.expressions.GraftFunctions.register(base.sparkSession)
-    base.select($"id", expr(s"minhash_sigs(toks, $numHashes)").as("sig"))
+    base.select($"id", expr(s"minhash_sigs(toks, $NumHashes)").as("sig"))
       .select($"id", explode(
-        transform(sequence(lit(0), lit(bands - 1)),
+        transform(sequence(lit(0), lit(Bands - 1)),
           b => struct(b.as("band"), slice($"sig", b * r + 1, lit(r)).as("bsig")))).as("bk"))
       .select($"id", $"bk.band".as("band"), $"bk.bsig".as("bsig"))
   }
@@ -326,13 +306,13 @@ object TextDedup {
     * exact-Jaccard pair set (what the DuckDB oracle computes) — the sketch
     * only prunes the pair space, it never decides membership. Candidate
     * generation and verification share ONE materialized shingle base.
+    * Thresholds outside [0.8, 1] are rejected ([[requireThresholdInDomain]]).
     */
   def minhashNearDups(docs: DataFrame, threshold: Double,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 16,
-                      maxBucket: Int = 1000): DataFrame = {
-    val base = shingleDocBase(docs, shingleSize, idCol, textCol)
-    val cands = minhashLshCandidatesFromBase(base, numHashes, bands, maxBucket)
+                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    requireThresholdInDomain(threshold)
+    val base = shingleDocBase(docs, ShingleSize, idCol, textCol)
+    val cands = minhashLshCandidatesFromBase(base, logDrops = true)
     verifyJaccardOnBase(cands, base, threshold)
   }
 
@@ -372,21 +352,21 @@ object TextDedup {
     */
   def minhashNearDupsIncremental(corpus: DataFrame, delta: DataFrame, threshold: Double,
                                  idCol: String = "doc_id", textCol: String = "text",
-                                 shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 16,
-                                 maxBucket: Int = 1000, logDrops: Boolean = true): DataFrame = {
-    val baseD = shingleDocBase(delta, shingleSize, idCol, textCol)
+                                 logDrops: Boolean = true): DataFrame = {
+    requireThresholdInDomain(threshold)
+    val baseD = shingleDocBase(delta, ShingleSize, idCol, textCol)
     // eager for the same reason as the indexed form: every downstream eager
     // point holds this plan as a subtree
-    val bandedD = minhashBanded(baseD, numHashes, bands).localCheckpoint(true)
+    val bandedD = minhashBanded(baseD).localCheckpoint(true)
     val deltaKeys = bandedD.select($"band", $"bsig").distinct()
-    val corpusToks = shingleDocProjection(parallelFloor(corpus), shingleSize, idCol, textCol)
+    val corpusToks = shingleDocProjection(parallelFloor(corpus), ShingleSize, idCol, textCol)
     // delta-sized after the semi-join: only corpus rows in delta-occupied
     // buckets can pair with a delta doc
-    val bandedC = minhashBanded(corpusToks, numHashes, bands)
+    val bandedC = minhashBanded(corpusToks)
       .join(deltaKeys, Seq("band", "bsig"), "left_semi")
       .localCheckpoint(false)
     incrementalTail(corpus, baseD, bandedD, bandedC, threshold, idCol, textCol,
-      shingleSize, maxBucket, logDrops, "minhash-incremental")
+      logDrops, "minhash-incremental")
   }
 
   /** The (id, band, bsig, bkey) band-index rows of a document table — what a
@@ -398,173 +378,90 @@ object TextDedup {
     * corpus is the union of the indexes of its ingest batches — exactly the
     * invariant [[graft.streaming.DedupStream]] maintains commit-by-commit.
     */
-  def bandIndexOf(docs: DataFrame, shingleSize: Int = 3, numHashes: Int = 32,
-                  bands: Int = 16, idCol: String = "doc_id",
+  def bandIndexOf(docs: DataFrame, idCol: String = "doc_id",
                   textCol: String = "text"): DataFrame =
     withBkey(minhashBanded(
-      shingleDocProjection(parallelFloor(docs), shingleSize, idCol, textCol),
-      numHashes, bands))
+      shingleDocProjection(parallelFloor(docs), ShingleSize, idCol, textCol)))
 
   private def withBkey(banded: DataFrame): DataFrame =
     banded.withColumn("bkey", xxhash64($"band", $"bsig"))
 
-  /** [[minhashNearDupsIncremental]] against a PERSISTED band index instead
-    * of a live corpus banding scan: `bandIndex` carries the corpus's
-    * [[bandIndexOf]] rows (typically the union of a bucketed snapshot
-    * table's commit chunks), so candidate generation reads (id, band, bsig,
-    * bkey) rows — never corpus text — and when the delta occupies at most
-    * `inListCap` distinct buckets the read is narrowed further to
-    * `bkey IN (delta's keys)`: an 8-byte-key filter that pushes down to the
-    * index scans (parquet row-group stats + bucket pruning on a
-    * bucket-stored index — PlanSpec asserts `SelectedBucketsCount`). The
-    * cap exists because Catalyst's plan walk and parquet's stat check are
-    * linear in the literal count — a multi-thousand-key list costs more
-    * than it saves (measured ~5 s/batch at 4-8k literals); larger deltas
-    * rely on the (band, bsig) semi-join, or on the TABLE form below, whose
-    * file-level bucket skip has no plan-side cost at any key count. bkey
-    * collisions only ADD candidate rows; the exact (band, bsig) semi-join
-    * below removes them, so pruning never changes the output (MlSpec pins
-    * pruned == unpruned == recomputed). The verify stage still re-reads
-    * only candidate-pair ids from the raw corpus, as in the recomputing
-    * form. `pruneMaxKeys <= 0` disables key collection entirely.
+  /** Most distinct delta bkeys collected for the index prune; beyond it the
+    * whole index is read and the (band, bsig) semi-join alone narrows it.
     */
-  def minhashNearDupsIndexed(corpus: DataFrame, bandIndex: DataFrame, delta: DataFrame,
-                             threshold: Double,
-                             idCol: String = "doc_id", textCol: String = "text",
-                             shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 16,
-                             maxBucket: Int = 1000, logDrops: Boolean = true,
-                             pruneMaxKeys: Int = 1 << 15,
-                             inListCap: Int = defaultInListCap): DataFrame =
-    // keys above inListCap are useless to the DataFrame form (only the
-    // table form file-skips with them) — cap the collection so the driver
-    // never pays two jobs to gather tens of thousands of keys it discards
-    indexedCore(corpus, delta, threshold, idCol, textCol, shingleSize, numHashes,
-      bands, maxBucket, logDrops, math.min(pruneMaxKeys, inListCap),
-      keys => inFiltered(bandIndex, keys, inListCap))._1
+  private val PruneMaxKeys: Int = 1 << 15
 
-  /** [[minhashNearDupsIndexed]] reading the index straight from its
-    * SNAPSHOT TABLE, which unlocks the pruning that matters at scale:
-    * FILE-level bucket skip. The delta's collected `bkey`s map driver-side
-    * to the storage-bucket ids the index writer stamped into its file names
-    * ([[graft.snapshot.SnapshotStore.bucketIdOfLong]] — the same
-    * pmod(murmur3) `repartition(n, col)` used), and only matching files are
-    * listed into the scan — the read is O(occupied buckets / total buckets)
-    * of the index with no plan-side cost at all. The literal `bkey IN`
-    * row-group filter is still applied, but only when the key list is small
-    * (`inListCap`): Catalyst's analysis/folding walk and parquet's stat
-    * evaluation are LINEAR in the literal count, and a measured 4-8k-literal
-    * list cost ~5 s/micro-batch at sf0.1 — more than the whole unpruned
-    * index read it was saving. bkey collisions only ADD candidate rows and
-    * the exact (band, bsig) semi-join removes them, so neither pruning layer
-    * changes the output (MlSpec pins table == DataFrame == recomputed).
+  /** Literal-`IN` cap: Catalyst's plan walk and parquet's stat check are
+    * linear in the literal count — a measured 4-8k-literal list cost
+    * ~5 s/micro-batch at sf0.1, more than the unpruned read it saved.
+    */
+  private val InListCap: Int = 1024
+
+  /** [[minhashNearDupsIncremental]] against a PERSISTED band index: the
+    * corpus's [[bandIndexOf]] rows live in `indexTable`, a bkey-bucketed
+    * snapshot table, so candidate generation reads (id, band, bsig, bkey)
+    * rows — never corpus text. Returns (pairs, the delta's own band-index
+    * rows): the second element equals [[bandIndexOf]](delta) by
+    * construction and is already EAGERLY materialized, so an ingest loop
+    * that appends the delta to the index ([[graft.streaming.DedupStream]])
+    * reuses it instead of running the shingle + minhash pipeline twice.
+    *
+    * The index read is pruned by the delta's distinct `bkey`s, in one of
+    * three regimes chosen by their count:
+    *   - ≤ 1024 (`InListCap`): FILE-level bucket skip — the keys map
+    *     driver-side to the storage-bucket ids the index writer stamped
+    *     into its file names ([[graft.snapshot.SnapshotStore.bucketIdOfLong]]),
+    *     so only matching files are listed — plus a `bkey IN` row-group
+    *     filter;
+    *   - ≤ 2¹⁵ (`PruneMaxKeys`): the file skip alone, which has no
+    *     plan-side cost at any key count;
+    *   - more: the full index, narrowed only by the semi-join.
+    * bkey collisions only ADD candidate rows and the exact (band, bsig)
+    * semi-join removes them, so no regime changes the output (MlSpec pins
+    * each against the recomputing form). The verify stage re-reads only
+    * candidate-pair ids from the raw corpus. The bucket-cap drop audit is
+    * off: it is a second pass over the band rows per call, and the batch
+    * operators carry it.
     */
   def minhashNearDupsIndexed(corpus: DataFrame, indexTable: graft.snapshot.SnapshotTable,
-                             delta: DataFrame, threshold: Double,
-                             idCol: String, textCol: String,
-                             shingleSize: Int, numHashes: Int, bands: Int,
-                             maxBucket: Int, logDrops: Boolean,
-                             pruneMaxKeys: Int, inListCap: Int): DataFrame =
-    minhashNearDupsIndexedWithBandRows(corpus, indexTable, delta, threshold,
-      idCol, textCol, shingleSize, numHashes, bands, maxBucket, logDrops,
-      pruneMaxKeys, inListCap)._1
-
-  /** [[minhashNearDupsIndexed]] (table form) that ALSO returns the delta's
-    * own band-index rows `(id, band, bsig, bkey)` — equal to
-    * [[bandIndexOf]](delta) by construction (same projection, banding and
-    * bkey derivation) and already EAGERLY materialized for candidate
-    * generation. An ingest loop that must also append the delta to the
-    * persisted index (the [[graft.streaming.DedupStream]] shape) reuses
-    * these rows instead of re-running the shingle explode + minhash
-    * pipeline over the delta a second time per batch. MlSpec pins the
-    * row-set equality with `bandIndexOf`.
-    */
-  def minhashNearDupsIndexedWithBandRows(
-      corpus: DataFrame, indexTable: graft.snapshot.SnapshotTable,
-      delta: DataFrame, threshold: Double,
-      idCol: String = "doc_id", textCol: String = "text",
-      shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 16,
-      maxBucket: Int = 1000, logDrops: Boolean = true,
-      pruneMaxKeys: Int = 1 << 15,
-      inListCap: Int = defaultInListCap): (DataFrame, DataFrame) = {
+                             delta: DataFrame, threshold: Double): (DataFrame, DataFrame) = {
+    requireThresholdInDomain(threshold)
     val spark = delta.sparkSession
-    import spark.implicits._
-    def fullIndex: DataFrame = indexTable.readCommitChunks(spark)
-      .map(_.reduce(_ unionByName _))
-      .getOrElse(emptyIndex(spark))
-    indexedCore(corpus, delta, threshold, idCol, textCol, shingleSize, numHashes,
-      bands, maxBucket, logDrops, pruneMaxKeys, {
-        case Some(ks) =>
-          val occupied = scala.collection.mutable.HashMap.empty[Int, Set[Int]]
-          def keep(n: Int, b: Int): Boolean = occupied.getOrElseUpdate(n,
-            ks.iterator.map(graft.snapshot.SnapshotStore.bucketIdOfLong(_, n)).toSet)(b)
-          // "bkey" names the column our keys hash — dirs bucketed on any
-          // other column are read in full rather than mispruned
-          indexTable.readBucketSkipped(spark, "bkey", keep)
-            .map(df => inFiltered(df, Some(ks), inListCap))
-            .getOrElse(emptyIndex(spark))
-        case None => fullIndex
-      })
-  }
-
-  /** [[minhashNearDupsIndexed]] (table form) with the usual defaults. */
-  def minhashNearDupsIndexed(corpus: DataFrame, indexTable: graft.snapshot.SnapshotTable,
-                             delta: DataFrame, threshold: Double): DataFrame =
-    minhashNearDupsIndexed(corpus, indexTable, delta, threshold, "doc_id", "text",
-      3, 32, 16, 1000, true, 1 << 15, defaultInListCap)
-
-  /** Literal-`IN` cap: lists beyond this ride the semi-join alone. */
-  private val defaultInListCap: Int = 1024
-
-  private def emptyIndex(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Int, Array[Long], Long)].toDF("id", "band", "bsig", "bkey")
-  }
-
-  private def inFiltered(index: DataFrame, keys: Option[Array[Long]], inListCap: Int): DataFrame =
-    keys.filter(_.length <= inListCap) match {
-      case Some(ks) => index.where($"bkey".isInCollection(ks.toSeq))
-      case None => index
-    }
-
-  /** Shared body of the indexed forms: delta banding + key collection once,
-    * index supplied by `indexFor` (given the collected keys when there are
-    * at most `pruneMaxKeys`, None otherwise). Returns (pairs, the delta's
-    * materialized band rows) — the second element is what
-    * [[minhashNearDupsIndexedWithBandRows]] hands to ingest loops.
-    */
-  private def indexedCore(corpus: DataFrame, delta: DataFrame, threshold: Double,
-                          idCol: String, textCol: String, shingleSize: Int,
-                          numHashes: Int, bands: Int, maxBucket: Int,
-                          logDrops: Boolean, pruneMaxKeys: Int,
-                          indexFor: Option[Array[Long]] => DataFrame): (DataFrame, DataFrame) = {
-    val baseD = shingleDocBase(delta, shingleSize, idCol, textCol)
+    val baseD = shingleDocBase(delta, ShingleSize, "doc_id", "text")
     // EAGER: deltaKeys, the bucket-count base and the pair expansion all
     // contain this plan as a subtree — materializing it first means the
     // delta shingle+minhash pipeline runs once per batch, not once per
     // downstream eager point (measured 2-3× re-evaluation as a lazy
     // checkpoint: each eager consumer ran the full pipeline before any of
     // them populated the cache)
-    val bandedD = withBkey(minhashBanded(baseD, numHashes, bands)).localCheckpoint(true)
+    val bandedD = withBkey(minhashBanded(baseD)).localCheckpoint(true)
     val deltaKeys = bandedD.select($"band", $"bsig", $"bkey").distinct()
       .localCheckpoint(true) // one row per delta-occupied bucket — small
-    // ONE collect decides the prune: limit(cap+1) over the distinct bkeys —
-    // an overflowing probe means "too many keys, skip pruning" exactly like
-    // the old count()-then-collect pair, minus one driver job per batch.
-    // (Gating on DISTINCT BKEYS instead of (band, bsig) triples only
-    // prunes in more cases; pruning never changes the output — the exact
-    // (band, bsig) semi-join downstream is the authority, MlSpec pins it.)
-    val keys: Option[Array[Long]] =
-      if (pruneMaxKeys <= 0) None
+    // ONE collect picks the regime: limit(cap+1) over the distinct bkeys,
+    // an overflowing probe meaning "too many keys to prune by"
+    val ks = deltaKeys.select($"bkey").distinct()
+      .limit(PruneMaxKeys + 1).collect().map(_.getLong(0))
+    val index =
+      if (ks.length > PruneMaxKeys) indexTable.readCommitChunks(spark).map(_.reduce(_ unionByName _))
       else {
-        val ks = deltaKeys.select($"bkey").distinct()
-          .limit(pruneMaxKeys + 1).collect().map(_.getLong(0))
-        if (ks.length > pruneMaxKeys) None else Some(ks)
+        val occupied = scala.collection.mutable.HashMap.empty[Int, Set[Int]]
+        def keep(n: Int, b: Int): Boolean = occupied.getOrElseUpdate(n,
+          ks.iterator.map(graft.snapshot.SnapshotStore.bucketIdOfLong(_, n)).toSet)(b)
+        // "bkey" names the column our keys hash — dirs bucketed on any
+        // other column are read in full rather than mispruned
+        indexTable.readBucketSkipped(spark, "bkey", keep).map(df =>
+          if (ks.length <= InListCap) df.where($"bkey".isInCollection(ks.toSeq)) else df)
       }
-    val bandedC = indexFor(keys).select($"id", $"band", $"bsig")
+    val bandedC = index
+      .getOrElse {
+        import spark.implicits._
+        Seq.empty[(Long, Int, Array[Long], Long)].toDF("id", "band", "bsig", "bkey")
+      }
+      .select($"id", $"band", $"bsig")
       .join(deltaKeys.select($"band", $"bsig"), Seq("band", "bsig"), "left_semi")
       .localCheckpoint(false)
-    (incrementalTail(corpus, baseD, bandedD.drop("bkey"), bandedC, threshold, idCol,
-      textCol, shingleSize, maxBucket, logDrops, "minhash-indexed"), bandedD)
+    (incrementalTail(corpus, baseD, bandedD.drop("bkey"), bandedC, threshold, "doc_id",
+      "text", logDrops = false, "minhash-indexed"), bandedD)
   }
 
   /** Shared tail of the two incremental generators: bucket-cap accounting
@@ -573,18 +470,18 @@ object TextDedup {
     */
   private def incrementalTail(corpus: DataFrame, baseD: DataFrame, bandedD: DataFrame,
                               bandedC: DataFrame, threshold: Double,
-                              idCol: String, textCol: String, shingleSize: Int,
-                              maxBucket: Int, logDrops: Boolean, label: String): DataFrame = {
+                              idCol: String, textCol: String,
+                              logDrops: Boolean, label: String): DataFrame = {
     val all = bandedC.withColumn("isd", lit(false))
       .unionByName(bandedD.withColumn("isd", lit(true)))
     val counts = all.groupBy($"band", $"bsig").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true) // one row per delta-occupied bucket — small
     if (logDrops) {
-      val big = counts.filter($"cnt" > maxBucket).count()
-      logDrop(label, s"buckets larger than $maxBucket", big)
+      val big = counts.filter($"cnt" > MaxBucket).count()
+      logDrop(label, s"buckets larger than $MaxBucket", big)
     }
     val inBucket = all.join(
-      counts.filter($"cnt" > 1 && $"cnt" <= maxBucket).select($"band", $"bsig"),
+      counts.filter($"cnt" > 1 && $"cnt" <= MaxBucket).select($"band", $"bsig"),
       Seq("band", "bsig"), "left_semi")
     val cands = inBucket.as("x").join(inBucket.as("y"),
       col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
@@ -603,7 +500,7 @@ object TextDedup {
     // rate), so one explicit exchange is cheap at any scale and gives the
     // shingle verify full width regardless of how the semi-join planned.
     val target = corpusHits.sparkSession.sparkContext.defaultParallelism
-    val verifyBase = shingleDocProjection(corpusHits.repartition(target), shingleSize, idCol, textCol)
+    val verifyBase = shingleDocProjection(corpusHits.repartition(target), ShingleSize, idCol, textCol)
       .unionByName(baseD)
     verifyJaccardOnBase(cands, verifyBase, threshold)
   }
@@ -638,15 +535,6 @@ object TextDedup {
                         maxBucket: Int = 1000, logDrops: Boolean = true): DataFrame = {
     // codegen'd native simhash64 expression — one corpus scan, no ScalaUDF
     val withSh = docs.select(col(idCol).as("id"), simhash64Col(docs, textCol).as("sh"))
-    simhashBandedPairs(withSh, maxHamming, maxBucket, logDrops)
-  }
-
-  /** Banding + bucket self-join over an (id, sh) signature table — the body
-    * shared by [[simhashCandidates]] (signatures from a dedicated scan) and
-    * [[simhashNearDups]] (signatures rode the shared base scan).
-    */
-  private def simhashBandedPairs(withSh: DataFrame, maxHamming: Int,
-                                 maxBucket: Int, logDrops: Boolean): DataFrame = {
     val chunks = maxHamming + 1
     val bounds = (0 to chunks).map(i => i * 64 / chunks)
     val bandCols = (0 until chunks).map { c =>
@@ -675,10 +563,9 @@ object TextDedup {
     // cohabitants — n²/2^width of them, the asymptotically dominant term —
     // must die here, on an 8-byte bit_count inside the join's codegen,
     // NOT downstream where each false pair would ride the distinct() and
-    // then drag two shingle-set arrays through the Jaccard verify's
+    // then drag two shingle-set arrays through any Jaccard verify's
     // shuffle (measured at sf0.1: 3.3M bucket-cohabiting pairs vs 796
-    // radius-true ones — the unfiltered verify moved ~10 GB to reject
-    // 99.98% of its input)
+    // radius-true ones)
     inBucket.as("x").join(inBucket.as("y"),
       col("x.chunk") === col("y.chunk") && col("x.bits") === col("y.bits") &&
         col("x.id") < col("y.id") &&
@@ -688,62 +575,24 @@ object TextDedup {
       .distinct()
   }
 
-  /** SimHash near-dups, exact-verified: Hamming-radius candidates (lossless
-    * banding, radius enforced in the join) UNIONED with MinHash-LSH
-    * candidates over the same base, then filtered by the TRUE shingle-
-    * Jaccard threshold — the output is hash-independent and equals the
-    * exhaustive exact-Jaccard pair set.
+  /** SimHash near-dups, exact-verified: the exhaustive shingle-Jaccard ≥
+    * `jaccardThreshold` pair set, generated by [[minhashNearDups]]. The
+    * name survives for its callers; no hamming-radius channel feeds it.
     *
-    * Why two candidate channels (r6 correctness fix): the radius-covers-
-    * the-threshold claim a single simhash channel rests on is false for
-    * NEAR-THRESHOLD pairs. At J exactly at the threshold the differing
-    * token mass is a constant FRACTION of the document, so the expected
-    * bit-flip count is Θ(64 × that fraction) — independent of document
-    * length — and only pairs well ABOVE the threshold (tiny differing
-    * fraction) concentrate inside a fixed radius. Measured at sf0.001:
-    * three oracle pairs at hamming 9, 9 and 12 against radius 8 (an
-    * 11-word doc + its one-token-appended planted dup sits at J = 9/10
-    * exactly). No finite radius is sound, so completeness comes from the
-    * second channel: [[minhashLshCandidatesFromBase]] over the SAME
-    * materialized base (16 bands × 2 rows — misses a J ≥ 0.9 pair w.p.
-    * (1-0.9²)¹⁶ ≈ 3·10⁻¹², the q_dedup_minhash exhaustiveness argument),
-    * pure long arithmetic over the already-hashed `toks`, no extra text
-    * scan. The union can only ADD candidates; the exact verify decides
-    * membership, so the fix moves the output toward the oracle and nowhere
-    * else. The simhash channel stays for its hamming-radius semantics
-    * ([[simhashCandidates]] remains the radius-exact standalone operator).
-    *
-    * ONE corpus scan: the simhash signature and the hashed-shingle set are
-    * computed in the same projection and materialized together; both
-    * candidate channels and the exact-verify stage reuse that base.
-    * Restricting signatures to docs with ≥ `shingleSize` words only prunes
-    * candidates the verify's inner joins against the base would discard
-    * anyway.
+    * Why not the radius: near-threshold pairs do not concentrate inside
+    * any fixed radius — at J exactly at the threshold the differing token
+    * mass is a constant FRACTION of the document, so the expected bit-flip
+    * count is Θ(64 × that fraction) whatever the document length
+    * (measured at sf0.001: oracle pairs at hamming 9, 9 and 12 against
+    * radius 8). Measured at sf0.001, sf0.01 and sf0.1 (BENCH/BASELINE.md),
+    * a radius-8 channel unioned with the minhash one added no verified
+    * pair the minhash channel missed, so completeness rests on the
+    * minhash banding alone (miss w.p. ≈ 3·10⁻¹² at J ≥ 0.9).
+    * [[simhashCandidates]] remains the radius-exact standalone operator.
     */
   def simhashNearDups(docs: DataFrame, jaccardThreshold: Double,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      maxHamming: Int = 8, shingleSize: Int = 3,
-                      maxBucket: Int = 1000): DataFrame = {
-    val words = filter(split(col(textCol), " "), t => t =!= "")
-    val base = parallelFloor(docs).where(size(words) >= shingleSize)
-      .select(col(idCol).as("id"), simhash64Col(docs, textCol).as("sh"),
-        array_distinct(transform(sequence(lit(0), size(words) - lit(shingleSize)),
-          i => xxhash64(concat_ws(" ", slice(words, i + 1, lit(shingleSize)))))).as("toks"))
-      .localCheckpoint(false)
-    // the two channels run SEQUENTIALLY on purpose: a concurrent-futures
-    // variant (eager base + FAIR pools, the commit-window pattern) was
-    // tried and reverted — each channel's banding/occupancy jobs already
-    // fill the machine, so overlapping them just interleaves two saturated
-    // job sets (A/B: no gain, occasional regressions)
-    val candsHam = simhashBandedPairs(base.select($"id", $"sh"), maxHamming, maxBucket,
-      logDrops = true).select($"a", $"b")
-    // drop audit off on the completeness channel: same generator as
-    // q_dedup_minhash, audited there; bucket-cap semantics match
-    val candsMh = minhashLshCandidatesFromBase(base.select($"id", $"toks"),
-      maxBucket = maxBucket, logDrops = false)
-    verifyJaccardOnBase(candsHam.unionByName(candsMh).distinct(),
-      base.select($"id", $"toks"), jaccardThreshold)
-  }
+                      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    minhashNearDups(docs, jaccardThreshold, idCol, textCol)
 
   /** Connected components over near-dup candidate pairs → (doc_id, keep_id):
     * the cluster-resolution step a pipeline user needs after any pair

@@ -11,13 +11,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * micro-batch (the delta):
   *
   *  1. near-dup pairs = [[TextDedup.minhashNearDupsIndexed]](corpus-so-far,
-  *     band-index-so-far, delta): delta vs the accumulated corpus AND
+  *     band-index table, delta): delta vs the accumulated corpus AND
   *     delta-internal, with NO corpus text scan on the candidate side — the
-  *     delta's band keys prune the PERSISTED index read (`bkey IN (...)`
-  *     pushed into bucket-stored parquet: bucket pruning + row-group
-  *     stats), and the exact verify re-reads only candidate-pair ids. Per-
-  *     batch cost is O(delta + candidates), independent of corpus size —
-  *     the property that lets the stream run forever at 100 TB;
+  *     delta's band keys prune the PERSISTED index read (file-level bucket
+  *     skip, plus a `bkey IN (...)` row-group filter for small deltas), and
+  *     the exact verify re-reads only candidate-pair ids. Per-batch cost
+  *     is O(delta + candidates), independent of corpus size — the property
+  *     that lets the stream run forever at 100 TB;
   *  2. generation-guarded appends, in order: pairs, then (when a
   *     `redirectsTable` is given) the rewritten redirect rows of the
   *     clusters this batch's pairs touch, then the delta's
@@ -83,25 +83,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object DedupStream {
 
-  /** The stream's banding parameters, defined ONCE for both sides of the
-    * index: candidate generation (the probe's banding) and `bandIndexOf`
-    * (the persisted rows) MUST band identically or cross-batch pairs
-    * silently vanish — signatures computed under different parameters never
-    * match. Keeping each side on its own defaults would let a tuning change
-    * to one silently diverge the other.
-    */
-  private val ShingleSize = 3
-  private val NumHashes = 32
-  private val Bands = 16
-  private val MaxBucket = 1000
-
   /** Start the dedup stream over a documents directory. AvailableNow by
     * default (drain-what-exists, then stop); pass a processing-time trigger
     * for a live tail. `corpusTable` accumulates every streamed doc;
     * `indexTable` its band-index rows (bucketed by bkey); `pairsTable`
     * (a, b) near-dup pairs at `threshold`; `redirectsTable` (optional) the
     * latest-wins (doc_id, survivor_id, kept, gen) cluster-resolution rows
-    * under `quality`.
+    * under `quality`. A `threshold` outside [0.8, 1] is rejected here,
+    * before the stream starts (see [[TextDedup.minhashNearDups]]).
     */
   def ingest(spark: SparkSession, srcDir: String,
              corpusTable: SnapshotTable, pairsTable: SnapshotTable,
@@ -114,6 +103,7 @@ object DedupStream {
              redirectsTable: Option[SnapshotTable] = None,
              quality: Column => Column = TextAnalysis.qualityScore,
              redirectSkipMinRows: Long = DefaultRedirectSkipMinRows): StreamingQuery = {
+    TextDedup.requireThresholdInDomain(threshold)
     // self-heal ONCE at stream start: a restart against tables written
     // with a different bucket count (or pre-bucketing history) would
     // otherwise create mixed-spec chains, silently disabling the tiered
@@ -226,15 +216,11 @@ object DedupStream {
     if (needPairs || needRedirects) {
       val corpus = corpusTable.read(spark)
         .getOrElse(Seq.empty[(Long, String)].toDF("doc_id", "text"))
-      // drop audit off: the generator's bucket-cap audit is a second pass
-      // over the band rows per BATCH; audit the batch-mode run instead.
-      // The TABLE form prunes the index read by FILE (bucket ids in the
-      // file names) — per-batch read cost tracks the delta's occupied
-      // buckets, not the index size, with zero plan-side literal cost.
-      val (rawPairs, bandRows) = timed("candGen")(TextDedup
-        .minhashNearDupsIndexedWithBandRows(corpus, indexTable, delta, threshold,
-          "doc_id", "text", ShingleSize, NumHashes, Bands, MaxBucket,
-          false, 1 << 15, 1024))
+      // the index read is pruned by FILE (bucket ids in the file names) —
+      // per-batch read cost tracks the delta's occupied buckets, not the
+      // index size
+      val (rawPairs, bandRows) = timed("candGen")(
+        TextDedup.minhashNearDupsIndexed(corpus, indexTable, delta, threshold))
       deltaBandRows = Some(bandRows)
       val raw = rawPairs.select(col("a"), col("b"))
       // redirect maintenance consumes the pair set twice (endpoints, edges)
@@ -280,8 +266,7 @@ object DedupStream {
         // only on the replay path where pairs+redirects already committed
         // (bit-identical either way — the pipeline is deterministic)
         timed("indexAppend")(indexTable.appendBucketed(
-          deltaBandRows.getOrElse(
-            TextDedup.bandIndexOf(delta, ShingleSize, NumHashes, Bands)),
+          deltaBandRows.getOrElse(TextDedup.bandIndexOf(delta)),
           generation = gen, buckets = indexBuckets, bucketCol = "bkey"))
       }
       val corpF = if (!needCorpus) Future.successful(()) else pooled("commit-corpus") {
@@ -398,8 +383,9 @@ object DedupStream {
   }
 
   /** Driver-side cap for the affected-id collections that drive the
-    * redirects file skip (same bound as the band index's `pruneMaxKeys`):
-    * beyond it the batch falls back to full-scan semi-joins.
+    * redirects file skip (the same 2¹⁵ bound as the band-index key
+    * collection in [[TextDedup.minhashNearDupsIndexed]]): beyond it the
+    * batch falls back to full-scan semi-joins.
     */
   private val redirectIdCap: Int = 1 << 15
 

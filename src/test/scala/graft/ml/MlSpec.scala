@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.SparkTestSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -165,46 +166,47 @@ class MlSpec extends AnyFunSuite {
     assert(got == exact)
   }
 
-  test("incremental minhash equals the batch run restricted to delta-touching pairs") {
-    // corpus: the 60 base docs PLUS an internal corpus duplicate (id 500 =
-    // copy of doc 1) — the batch run pairs (1, 500), the incremental run
-    // must NOT surface it (it touches no delta doc). delta: the 6 planted
-    // near-copies plus 2 fresh unique docs that pair with nothing.
+  /** A doc of `words` hash-random words from a 10k vocabulary: pairs with nothing. */
+  private def freshDoc(seed: Int, words: Int): String =
+    (0 until words).map(j => s"f${graft.util.Hashing.bounded(graft.util.Hashing.det(9L, seed, j), 10000)}")
+      .mkString(" ")
+
+  /** Incremental fixture. corpus: the 60 base docs PLUS an internal corpus
+    * duplicate (id 500 = copy of doc 1). delta: the 6 planted near-copies
+    * plus 2 fresh unique docs that pair with nothing.
+    */
+  lazy val (incCorpus, incDelta) = {
     val rows = planted.as[(Long, String)].collect().toMap
-    val corpus = (rows.filterNot(_._1 >= 1000L).toSeq :+ (500L, rows(1L)))
-      .toDF("doc_id", "text")
-    val fresh = Seq(
-      (2000L, (0 until 50).map(j => s"f${graft.util.Hashing.bounded(graft.util.Hashing.det(9L, 1, j), 10000)}").mkString(" ")),
-      (2001L, (0 until 50).map(j => s"f${graft.util.Hashing.bounded(graft.util.Hashing.det(9L, 2, j), 10000)}").mkString(" ")))
-    val delta = (rows.filter(_._1 >= 1000L).toSeq ++ fresh).toDF("doc_id", "text")
+    val corpus = (rows.filterNot(_._1 >= 1000L).toSeq :+ (500L, rows(1L))).toDF("doc_id", "text")
+    val fresh = Seq((2000L, freshDoc(1, 50)), (2001L, freshDoc(2, 50)))
+    (corpus, (rows.filter(_._1 >= 1000L).toSeq ++ fresh).toDF("doc_id", "text"))
+  }
+
+  private def pairSet(df: DataFrame): Set[(Long, Long)] =
+    df.select($"a", $"b").as[(Long, Long)].collect().toSet
+
+  test("incremental minhash equals the batch run restricted to delta-touching pairs") {
+    // the batch run pairs (1, 500); the incremental run must NOT surface it
+    // (it touches no delta doc)
+    val (corpus, delta) = (incCorpus, incDelta)
     val deltaIds = delta.as[(Long, String)].collect().map(_._1).toSet
-    val batch = TextDedup.minhashNearDups(corpus.unionByName(delta), 0.8)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
+    val batch = pairSet(TextDedup.minhashNearDups(corpus.unionByName(delta), 0.8))
     val want = batch.filter { case (a, b) => deltaIds(a) || deltaIds(b) }
-    val got = TextDedup.minhashNearDupsIncremental(corpus, delta, 0.8)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
+    val got = pairSet(TextDedup.minhashNearDupsIncremental(corpus, delta, 0.8))
     assert(got == want, s"incremental != restricted batch; extra=${got -- want} missing=${want -- got}")
     assert(want == plantedPairs, "fixture sanity: delta-touching pairs are the planted ones")
     assert(batch.contains((1L, 500L)), "fixture sanity: the corpus-internal dup pairs in batch mode")
     assert(!got.contains((1L, 500L)), "corpus-internal pairs must not surface incrementally")
+  }
 
-    // indexed form: the persisted band index replaces the live corpus
-    // banding scan — identical output on the pruned (bkey IN) path, the
-    // unpruned path (pruneMaxKeys = 0), and vs the recomputing form
-    val index = TextDedup.bandIndexOf(corpus).localCheckpoint()
-    val gotIdx = TextDedup.minhashNearDupsIndexed(corpus, index, delta, 0.8)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
-    assert(gotIdx == want, s"indexed != restricted batch; extra=${gotIdx -- want} missing=${want -- gotIdx}")
-    val gotIdxNoPrune = TextDedup
-      .minhashNearDupsIndexed(corpus, index, delta, 0.8, pruneMaxKeys = 0)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
-    assert(gotIdxNoPrune == want, "bkey pruning must not change the pair set")
-
-    // TABLE form: the index persisted as a bkey-bucketed snapshot table and
-    // read with FILE-level bucket skip (64 buckets so the delta occupies a
-    // proper subset and whole files actually drop). Same pair set with the
-    // literal IN on (small keys) and fully off (inListCap = 0 — the shape
-    // large deltas take at scale, file skip + semi-join alone).
+  test("indexed minhash equals the incremental form in every index-prune regime, band rows = bandIndexOf(delta)") {
+    // the index persisted as a bkey-bucketed snapshot table in two commits
+    // (64 buckets so a small delta occupies a proper subset and whole files
+    // actually drop). The prune regime follows the delta's distinct bkey
+    // count (16 per doc): <= 1024 file skip + literal IN, 1025-32768 file
+    // skip alone, > 32768 the full index read. Unique filler docs push the
+    // delta across each boundary without adding pairs.
+    val corpus = incCorpus
     val store = graft.snapshot.SnapshotStore(
       java.nio.file.Files.createTempDirectory("graft-mlidx").toString)
     val idxT = store.table("band_index")
@@ -212,28 +214,44 @@ class MlSpec extends AnyFunSuite {
       generation = 1, buckets = 64, bucketCol = "bkey")
     idxT.appendBucketed(TextDedup.bandIndexOf(corpus.filter($"doc_id" >= 30)),
       generation = 2, buckets = 64, bucketCol = "bkey")
-    val gotTbl = TextDedup.minhashNearDupsIndexed(corpus, idxT, delta, 0.8)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
-    assert(gotTbl == want, s"table-form != restricted batch; extra=${gotTbl -- want} missing=${want -- gotTbl}")
-    val gotTblNoIn = TextDedup.minhashNearDupsIndexed(corpus, idxT, delta, 0.8,
-      "doc_id", "text", 3, 32, 16, 1000, true, 1 << 15, 0)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
-    assert(gotTblNoIn == want, "file-level bucket skip alone must not change the pair set")
+    def withFiller(n: Int): DataFrame =
+      incDelta.unionByName((0 until n).map(i => (3000L + i, freshDoc(100 + i, 20))).toDF("doc_id", "text"))
+    def bandRowSet(df: DataFrame): Set[(Long, Int, Seq[Long], Long)] =
+      df.as[(Long, Int, Array[Long], Long)].collect()
+        .map { case (id, b, sig, k) => (id, b, sig.toSeq, k) }.toSet
+    Seq(("file skip + IN", incDelta, 1, 1024), ("file skip only", withFiller(100), 1025, 1 << 15),
+      ("full index", withFiller(2100), (1 << 15) + 1, Int.MaxValue)).foreach { case (regime, delta, lo, hi) =>
+      val wantRows = bandRowSet(TextDedup.bandIndexOf(delta))
+      val nKeys = wantRows.map(_._4).size
+      assert(nKeys >= lo && nKeys <= hi, s"fixture sanity ($regime): $nKeys distinct delta bkeys")
+      val want = pairSet(TextDedup.minhashNearDupsIncremental(corpus, delta, 0.8))
+      assert(want == plantedPairs, s"fixture sanity ($regime): delta-touching pairs are the planted ones")
+      val (pairs, bandRows) = TextDedup.minhashNearDupsIndexed(corpus, idxT, delta, 0.8)
+      val got = pairSet(pairs)
+      assert(got == want, s"$regime: indexed != incremental; extra=${got -- want} missing=${want -- got}")
+      // DedupStream appends these rows to the persisted index in place of a
+      // second shingle+minhash pass, so any drift would lose cross-batch pairs
+      val gotRows = bandRowSet(bandRows)
+      assert(gotRows == wantRows,
+        s"$regime: band rows != bandIndexOf(delta); extra=${(gotRows -- wantRows).take(3)} missing=${(wantRows -- gotRows).take(3)}")
+    }
+  }
 
-    // WithBandRows form: the second element must be EXACTLY bandIndexOf(delta)
-    // — DedupStream appends it to the persisted index in place of a second
-    // shingle+minhash pass, so any drift would silently lose cross-batch pairs
-    val (pairsWBR, bandRows) =
-      TextDedup.minhashNearDupsIndexedWithBandRows(corpus, idxT, delta, 0.8)
-    assert(pairsWBR.select($"a", $"b").as[(Long, Long)].collect().toSet == want)
-    val wantRows = TextDedup.bandIndexOf(delta)
-      .as[(Long, Int, Array[Long], Long)].collect()
-      .map { case (id, b, sig, k) => (id, b, sig.toSeq, k) }.toSet
-    val gotRows = bandRows
-      .as[(Long, Int, Array[Long], Long)].collect()
-      .map { case (id, b, sig, k) => (id, b, sig.toSeq, k) }.toSet
-    assert(gotRows == wantRows,
-      s"band rows != bandIndexOf(delta); extra=${(gotRows -- wantRows).take(3)} missing=${(wantRows -- gotRows).take(3)}")
+  test("minhash-verified entries reject thresholds outside [0.8, 1] before any job runs") {
+    val store = graft.snapshot.SnapshotStore(
+      java.nio.file.Files.createTempDirectory("graft-mlthr").toString)
+    val idxT = store.table("band_index")
+    Seq(0.5, 0.79, 1.5, Double.NaN).foreach { t =>
+      Seq[(String, () => Any)](
+        "minhashNearDups" -> (() => TextDedup.minhashNearDups(planted, t)),
+        "simhashNearDups" -> (() => TextDedup.simhashNearDups(planted, t)),
+        "minhashNearDupsIncremental" -> (() => TextDedup.minhashNearDupsIncremental(incCorpus, incDelta, t)),
+        "minhashNearDupsIndexed" -> (() => TextDedup.minhashNearDupsIndexed(incCorpus, idxT, incDelta, t))
+      ).foreach { case (name, call) =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("[0.8, 1.0]"), s"$name($t): message must name the domain: ${e.getMessage}")
+      }
+    }
   }
 
   test("simhash verified near-dups equal the exhaustive exact-jaccard pair set") {

@@ -103,6 +103,19 @@ class DedupStreamSpec extends AnyFunSuite {
     assert(indexT.bucketSpec.contains((32, "bkey")), "index must be stored bucketed by bkey")
   }
 
+  test("ingest rejects a threshold outside [0.8, 1] before the stream starts") {
+    val store = SnapshotStore(Files.createTempDirectory("graft-dstream-thr").toString)
+    val ckpt = Files.createTempDirectory("graft-dstream-thr-ckpt")
+    val active = spark.streams.active.length
+    val e = intercept[IllegalArgumentException](DedupStream.ingest(spark, srcDir,
+      store.table("corpus"), store.table("near_dup_pairs"), store.table("band_index"),
+      ckpt.toString, threshold = 0.5))
+    assert(e.getMessage.contains("[0.8, 1.0]"), e.getMessage)
+    assert(spark.streams.active.length == active, "no streaming query may start")
+    val listing = Files.list(ckpt)
+    try assert(listing.count() == 0, "nothing may be written to the checkpoint") finally listing.close()
+  }
+
   test("replay interleavings: full replay is a no-op; a partial crash completes only the missing appends") {
     val store = SnapshotStore(Files.createTempDirectory("graft-dstream-replay").toString)
     val corpusT = store.table("corpus")
