@@ -549,8 +549,7 @@ object SparkEntry {
     // mod 3 spreads every host's events across all three files, so the
     // cumulative flatMapGroupsWithState count must survive micro-batch
     // boundaries to rank correctly); the drained top-k must equal the batch
-    // GROUP BY count — the same per-host statistic the crawl engine's
-    // hot-host tier routing reads from host_state
+    // GROUP BY count
     "q_stream_hosts" -> ((s, dir) => {
       import java.nio.file.{Files, attribute}
       val events = t(s, dir, "events")

@@ -420,8 +420,6 @@ object GraftFunctions {
       "bloom_or", exprs => BloomOrExpr(exprs(0), exprs(1)), "built-in")
     r.createOrReplaceTempFunction(
       "bloom_might_contain", exprs => BloomMightContainExpr(exprs(0), exprs(1)), "built-in")
-    r.createOrReplaceTempFunction(
-      "cuckoo_contains", exprs => CuckooContainsExpr(exprs(0), exprs(1)), "built-in")
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.functions.expressions
 
-import graft.operators.{BlockedBloom, CuckooFilter}
+import graft.operators.BlockedBloom
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -21,12 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    tier: no monolithic driver filter is ever materialized.
   *  - [[BloomOrExpr]]: `bloom_or(a, b)` — byte-wise OR for the incremental
   *    per-generation merge (old tier ⟕⟖ delta tier on bucket).
-  *  - [[BloomMightContainExpr]] / [[CuckooContainsExpr]]: codegen'd probes
-  *    over the serialized BINARY blobs — evaluated inside whole-stage
-  *    codegen on the candidate stream (the hottest expression in the
-  *    engine); a NULL blob (no filter for this bucket/host yet) is
-  *    definitively "not seen" → false, so the expressions are non-nullable
-  *    and the routing needs no extra null guards.
+  *  - [[BloomMightContainExpr]]: codegen'd probe over the serialized
+  *    BINARY blob — evaluated inside whole-stage codegen on the candidate
+  *    stream (the hottest expression in the engine); a NULL blob (no filter
+  *    for this bucket yet) is definitively "not seen" → false, so the
+  *    expression is non-nullable and the routing needs no extra null guard.
   */
 case class BloomBuildAgg(
     child: Expression,
@@ -135,44 +134,5 @@ case class BloomMightContainExpr(left: Expression, right: Expression)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): BloomMightContainExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `cuckoo_contains(cf, key)`: codegen'd probe of a serialized cuckoo filter
-  * (hot-host exact tier). NULL blob → false.
-  */
-case class CuckooContainsExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("cuckoo_contains requires (BINARY, STRING)")
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "cuckoo_contains"
-
-  override def eval(input: InternalRow): Any = {
-    val blob = left.eval(input)
-    val key = right.eval(input)
-    if (blob == null || key == null) false
-    else CuckooFilter.containsBytes(
-      blob.asInstanceOf[Array[Byte]], key.asInstanceOf[UTF8String].getBytes)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = left.genCode(ctx)
-    val s = right.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${s.code}
-        boolean ${ev.value} = false;
-        if (!${b.isNull} && !${s.isNull}) {
-          ${ev.value} = graft.operators.CuckooFilter.containsBytes(${b.value}, ${s.value}.getBytes());
-        }""", isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CuckooContainsExpr =
     copy(left = newLeft, right = newRight)
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Native codegen'd expressions for the vector/ANN hot paths
@@ -150,22 +150,26 @@ object VectorKernels {
   }
 
   /** argmin cell — replicates `array_sort(struct(dist, cell)).getItem(0)
-    * .getField("cell")`: ascending by (dist, cell), so strict `<` keeping
-    * the lowest index on ties is identical.
+    * .getField("cell")`: ascending by (dist, cell) under Spark's double
+    * ordering (NaN sorts after every number and equals NaN), so a strictly
+    * smaller distance keeping the lowest index on ties is identical.
     */
   def nearestCell(v: ArrayData, cb: Array[Array[Float]]): java.lang.Integer = {
     val ds = dists(v, cb)
     if (ds == null) return null
     var best = 0
     var c = 1
-    while (c < ds.length) { if (ds(c) < ds(best)) best = c; c += 1 }
+    while (c < ds.length) {
+      if (SQLOrderingUtil.compareDoubles(ds(c), ds(best)) < 0) best = c
+      c += 1
+    }
     best
   }
 
   /** First `take` cells ranked by (dist, cell) asc — replicates
     * `transform(slice(array_sort(struct(dist, cell)), 1, take), _.cell)`.
     * Insertion sort on the cell indices: comparison by (dist, index) with
-    * the index tiebreak implicit in a stable sort over distinct indices.
+    * dist under Spark's double ordering (NaN last, NaN == NaN).
     */
   def rankedCells(v: ArrayData, cb: Array[Array[Float]], take: Int): ArrayData = {
     val ds = dists(v, cb)
@@ -176,7 +180,10 @@ object VectorKernels {
       val cur = idx(i)
       val d = ds(cur)
       var j = i - 1
-      while (j >= 0 && (ds(idx(j)) > d || (ds(idx(j)) == d && idx(j) > cur))) {
+      while (j >= 0 && {
+        val k = SQLOrderingUtil.compareDoubles(ds(idx(j)), d)
+        k > 0 || (k == 0 && idx(j) > cur)
+      }) {
         idx(j + 1) = idx(j); j -= 1
       }
       idx(j + 1) = cur

@@ -19,7 +19,7 @@ import org.apache.spark.storage.StorageLevel
   * batch queries (driver, seeded shuffle — main.py:61-65 normalized)
   *  → flatMap synthetic search (S4/S5/G4)                        [narrow]
   *  → first-seen-wins window over ArrivalKey (D1 intra-batch)    [shuffle 1: hash(href)]
-  *  → Bloom-routed exact anti-join vs seen (D1/J2)               [reuses shuffle 1 partitioning]
+  *  → Bloom tier → bucketed exact anti-join vs seen (D1/J2)     [reuses shuffle 1 partitioning]
   *  → relevance predicate (P4), PDF split (P5/S7/D3/J4)          [narrow]
   *  → robots gate + per-host politeness schedule (window)        [shuffle 2: hash(host)]
   *  → salted repartition → fetch + span extraction (S6/G1/G2/G5) [shuffle 3: hash(host,salt)]
@@ -37,17 +37,12 @@ import org.apache.spark.storage.StorageLevel
   *    tier) or co-partitions on the bucket key (10^10-scale tier, ~15 GB)
   *    is a size-based plan decision, not a hardcoded broadcast. Routing
   *    never decides membership: the exact anti-join stays the authority so
-  *    the final seen set equals the reference's;
-  *  - the cuckoo hot-host tier is likewise a table `cuckoo_tier(host, cf,
-  *    cf_exact)`: filters are BUILT executor-side (groupByKey/mapGroups
-  *    over the seen table, streaming inserts — the driver never sees a
-  *    host's URL set, only ≤hotHostCount serialized filters) and MAINTAINED
-  *    executor-side (cogroup with each generation's seen delta); saturated
-  *    filters are dropped and rebuilt larger next generation;
+  *    the final seen set equals the reference's. Every candidate routes on
+  *    `bloom_might_contain` alone: hot-host skew is served by the (host,
+  *    salt) fetch salting below, not by a per-host membership tier;
   *  - per-generation totals come from one narrow count job (map-side
-  *    partials only) and hot-host selection from a server-side top-k over
-  *    the host_state statistics (`orderBy.limit(k)`, k rows to the driver)
-  *    — no O(distinct hosts) or O(|seen|) collect anywhere in a generation;
+  *    partials only) — no O(distinct hosts) or O(|seen|) collect anywhere
+  *    in a generation;
   *  - politeness is a window over hash(host) partitioning: slot j of host h
   *    is scheduled at next_free(h) + j*min_delay(h) — per-host state never
   *    crosses partitions;
@@ -72,7 +67,6 @@ final class CrawlEngine(
     saltShards: Int = 4,
     bloomBitsPerKey: Int = 12,
     bloomExpectedKeys: Long = 1L << 20,
-    hotHostCount: Int = 8,
     expandTopK: Int = 0,
     bloomBuckets: Int = 32,
     tierBroadcastBytes: Long = 512L << 20,
@@ -142,12 +136,12 @@ final class CrawlEngine(
     */
   @transient val bloomT: SnapshotTable = store.table("bloom_tier")
 
-  /** Exact cuckoo tier table for hot hosts (north rule): (host, cf BINARY,
-    * cf_exact). The top-k hosts by candidate mass keep a per-host cuckoo
-    * filter whose NEGATIVE answers are exact (while unsaturated) — their
-    * high-collision URL traffic routes around both the Bloom's false
-    * positives and the anti-join shuffle. Delete support is what
-    * distinguishes the cuckoo from the Bloom tier (eviction/re-crawl).
+  /** Handle to the retired `cuckoo_tier` table: no generation reads or
+    * writes it, and rollback and maintenance skip it (a store written by
+    * an older engine may still hold rows; nothing consults them). It stays
+    * only because `perfbench/` reads its snapshot for
+    * `operators.cuckoo_hosts`, and that benchmark changes only together
+    * with its recorded baselines; drop the handle with that read.
     */
   @transient val cuckooT: SnapshotTable = store.table("cuckoo_tier")
 
@@ -155,10 +149,10 @@ final class CrawlEngine(
     pmod(xxhash64(href), lit(bloomBuckets)).cast("int")
 
   /** Size-gate for the host-keyed dimension broadcasts (hostProfilesDf /
-    * host_state) — the same byte-budget discipline the bloom/cuckoo tiers
-    * use. At the design scale (10¹⁰ URLs over Zipf hosts → 10⁷-10⁸ hosts)
-    * an unconditional broadcast ships a multi-GB table to every executor
-    * every generation; over budget the hint is dropped and Catalyst joins
+    * host_state) — the same byte-budget discipline the Bloom tier uses. At
+    * the design scale (10¹⁰ URLs over Zipf hosts → 10⁷-10⁸ hosts) an
+    * unconditional broadcast ships a multi-GB table to every executor every
+    * generation; over budget the hint is dropped and Catalyst joins
     * on the host key (downstream stages are host-partitioned anyway, so
     * the exchange is reused). Estimates are conservative per-row costs —
     * routing the plan, not deciding results.
@@ -169,7 +163,7 @@ final class CrawlEngine(
   /** host string + delay long + a few disallow prefixes + row overhead. */
   private def hostProfileEstBytes: Long = cfg.nHosts.toLong * 128
 
-  /** host string + two longs + overhead; rows from the snapshot counter
+  /** host string + one long + overhead; rows from the snapshot counter
     * (manifest read, never a scan).
     */
   private def hostStateEstBytes: Long =
@@ -177,9 +171,6 @@ final class CrawlEngine(
 
   private def emptyBloomDf: DataFrame =
     Seq.empty[(Int, Array[Byte])].toDF("bucket", "bits")
-
-  private def emptyCuckooDf: DataFrame =
-    Seq.empty[(String, Array[Byte], Boolean)].toDF("host", "cf", "cf_exact")
 
   private def bloomCapacity: Long =
     bloomT.currentSnapshot.flatMap(_.counters.get("capacity")).getOrElse(0L)
@@ -215,31 +206,32 @@ final class CrawlEngine(
     }
   }
 
-  /** Tier-routed "not in seen" over a `url` column (the r3 expansion-path
-    * fix): probe the partitioned bloom tier — the tier is a superset filter
-    * of seen (built from it, delta-merged every commit, rolled back in step)
-    * so clear bits or a missing bucket is a DEFINITIVE no and those rows
-    * skip the exact join entirely; only the maybe rows anti-join seen, with
-    * the seen side pre-reduced by a runtime semi-filter bloom aggregated
-    * over them (the same trade as the candidate-dedup path). `expectedRows`
-    * sizes that bloom: undersizing only raises its FP rate (extra shuffled
-    * rows, never a dropped or phantom url) — membership is always decided
-    * by the exact anti-join. Cost: O(|df|) narrow probe + O(|maybe|)-driven
+  /** Tier-routed "not in seen" over the `urlCol` column — the one route
+    * for candidate dedup, frontier picks and discovery dedup: probe the
+    * partitioned bloom tier — the tier is a superset filter of seen (built
+    * from it, delta-merged every commit, rolled back in step) so clear bits
+    * or a missing bucket is a DEFINITIVE no and those rows skip the exact
+    * join entirely; only the maybe rows anti-join seen, with the seen side
+    * pre-reduced by a runtime semi-filter bloom aggregated over them when
+    * the seen table is big enough to pay (see [[semiFilteredSeen]]).
+    * `expectedRows` sizes that bloom: undersizing only raises its FP rate
+    * (extra shuffled rows, never a dropped or phantom url) — membership is
+    * always decided by the exact anti-join. Cost: O(|df|) narrow probe + O(|maybe|)-driven
     * shuffles; the per-generation O(|seen|) exchange never happens.
     */
-  private def antiJoinSeen(df: DataFrame, seenDf: DataFrame, expectedRows: Long,
+  private def antiJoinSeen(df: DataFrame, urlCol: String, seenDf: DataFrame, expectedRows: Long,
                            caches: scala.collection.mutable.ArrayBuffer[Dataset[_]]): DataFrame = {
     val bloomDf0 = bloomT.read(spark).getOrElse(emptyBloomDf)
     val bloomBytes = (bloomBlocks.toLong * 64 + 1) * bloomBuckets
     val bloomDf = if (bloomBytes <= tierBroadcastBytes) broadcast(bloomDf0) else bloomDf0
     val probed = df
-      .withColumn("bucket", bucketCol($"url"))
+      .withColumn("bucket", bucketCol(col(urlCol)))
       .join(bloomDf, Seq("bucket"), "left")
-      .withColumn("maybe_seen", expr("bloom_might_contain(bits, url)"))
+      .withColumn("maybe_seen", expr(s"bloom_might_contain(bits, `$urlCol`)"))
       .drop("bucket", "bits")
     val defNew = probed.filter(!$"maybe_seen").drop("maybe_seen")
     val maybe0 = probed.filter($"maybe_seen").drop("maybe_seen")
-    defNew.unionByName(exactNotInSeen(maybe0, "url", seenDf, expectedRows, caches))
+    defNew.unionByName(exactNotInSeen(maybe0, urlCol, seenDf, expectedRows, caches))
   }
 
   /** The runtime semi-filter trade shared by EVERY exact anti-join against
@@ -336,7 +328,7 @@ final class CrawlEngine(
   def rollbackPartial(): Unit = {
     val committed = lastCommittedGeneration
     Seq(seenT, linksT, docsT, imagesT, pdfT, hostStateT, metricsT, eventsT,
-      frontierT, partitionMetricsT, bloomT, cuckooT)
+      frontierT, partitionMetricsT, bloomT)
       .foreach(_.rollbackToGeneration(committed))
   }
 
@@ -440,124 +432,24 @@ final class CrawlEngine(
     val nCandidates = candidates.count()
     lap("candidates")
 
-    // Hot hosts = top-k by CUMULATIVE scheduled fetches from the host_state
-    // table (k rows via server-side orderBy/limit). Using the prior
-    // generations' stats instead of a current-batch pre-aggregation is the
-    // at-scale shape: hot hosts are stable across generations, and it
-    // removes a full O(candidates) pre-pass + O(hosts) partial-agg exchange
-    // per generation. Routing-only: membership stays with the exact tier.
-    val hotNow: Set[String] = hostStateT.read(spark) match {
-      case Some(hs) if hs.columns.contains("n_scheduled") =>
-        hs.orderBy($"n_scheduled".desc, $"host").limit(hotHostCount)
-          .select($"host").as[String].collect().toSet
-      case _ => Set.empty
-    }
-    lap("hot-hosts")
-
     // ---- D1: intra-batch first-seen-wins on deterministic ArrivalKey ----
     val arrival = Seq($"kind", $"query_rank", $"page", $"result_rank")
     val wHref = Window.partitionBy($"href").orderBy(arrival: _*)
     val firstSeen = candidates.toDF()
       .withColumn("rn", row_number().over(wHref)).filter($"rn" === 1).drop("rn")
 
-    // ---- D1/J2: tiered routing (cuckoo hot tier → Bloom → exact anti-join)
-    // Hot hosts this generation = server-side top-k by candidate mass; newly
-    // hot hosts get a cuckoo filter BUILT EXECUTOR-SIDE from the seen table
-    // (groupByKey + streaming inserts — a hot host's URL set never reaches
-    // the driver). Routing never decides membership positively: any "maybe
-    // seen" goes through the exact anti-join, so FPs cost a shuffled row,
-    // never a dropped URL.
-    val storedCuckoo = cuckooT.read(spark).getOrElse(emptyCuckooDf)
-    val storedHosts: Set[String] =
-      if (cuckooT.currentSnapshot.exists(_.rowCount > 0))
-        storedCuckoo.select($"host").as[String].collect().toSet // ≤ hotHostCount rows
-      else Set.empty
-    // prune to hosts hot NOW: without this the maintained set accumulates
-    // every ever-hot host, and the broadcast + per-generation cogroup scale
-    // with history instead of hotHostCount (a pruned host that re-heats is
-    // simply rebuilt)
-    val tracked = storedHosts.intersect(hotNow)
-    val liveCuckoo =
-      if (tracked.size == storedHosts.size) storedCuckoo
-      else storedCuckoo.filter($"host".isin(tracked.toSeq: _*))
-    val missing = (hotNow -- tracked).toSeq.sorted
-    // byte budget (same discipline as the Bloom tier's tierBroadcastBytes
-    // gate): a hot host whose filter would blow the per-host share is NOT
-    // built — routing is an accelerator, the exact anti-join stays the
-    // authority, so skipping is always correct
-    val perHostBudget = tierBroadcastBytes / math.max(1L, 2L * hotHostCount)
-    // the tier is live once any host has a filter or can get one built;
-    // when dormant (e.g. generation 1: nothing seen yet) every tier job —
-    // seed build, probe join, cogroup maintenance, table commit — is skipped
-    val cuckooActive = tracked.nonEmpty ||
-      (missing.nonEmpty && seenT.currentSnapshot.exists(_.rowCount > 0))
-    var builtEstBytes = 0L
-    val cuckooDf = (if (missing.isEmpty || seenT.read(spark).isEmpty) liveCuckoo
-    else {
-      val seenDf = seenT.read(spark).get
-      val sizes: Map[String, Long] = seenDf.filter($"host".isin(missing: _*))
-        .groupBy($"host").count().as[(String, Long)].collect().toMap
-      def capacityOf(h: String): Long = math.max(1024L, sizes.getOrElse(h, 0L) * 4)
-      val buildable = missing.filter(h =>
-        graft.operators.CuckooFilter.bytesFor(capacityOf(h)) <= perHostBudget)
-      if (buildable.size < missing.size)
-        println(s"[graft.cuckoo] skipped ${missing.size - buildable.size} hot hosts over " +
-          s"the per-host byte budget ($perHostBudget B) — exact anti-join remains authority")
-      builtEstBytes = buildable.map(h =>
-        graft.operators.CuckooFilter.bytesFor(capacityOf(h))).sum
-      val built = seenDf.filter($"host".isin(buildable: _*))
-        .select($"host", $"href").as[(String, String)]
-        .groupByKey(_._1)
-        .mapGroups { (h, it) =>
-          val cf = graft.operators.CuckooFilter.sized(
-            math.max(1024L, sizes.getOrElse(h, 0L) * 4))
-          it.foreach(t => cf.insert(t._2))
-          (h, cf.toBytes, cf.negativesAreExact)
-        }.toDF("host", "cf", "cf_exact")
-      liveCuckoo.unionByName(built)
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    // broadcast gate: stored tier bytes come free from the snapshot counter
-    // (written at each maintenance commit); over budget → the probe join
-    // co-partitions on host instead of broadcasting
-    val cuckooTierBytes = builtEstBytes +
-      cuckooT.currentSnapshot.flatMap(_.counters.get("bytes")).getOrElse(0L)
-    lap("cuckoo-seed")
-
-    // Probe = joins to the tier tables + codegen'd native expressions (no
-    // Scala UDF): candidates pick up their bucket's Bloom blob (explicitly
-    // broadcast while the tier is small; at 10^10 scale the tier exceeds
-    // tierBroadcastBytes and the join co-partitions on the bucket key) and
-    // their host's cuckoo filter (≤ hotHostCount rows, always broadcast).
+    // ---- D1/J2: Bloom tier → bucketed exact anti-join ------------------
+    // [[antiJoinSeen]] is the one not-in-seen route: candidates pick up
+    // their bucket's Bloom blob (explicitly broadcast while the tier is
+    // small; at 10^10 scale the tier exceeds tierBroadcastBytes and the
+    // join co-partitions on the bucket key) and route on
+    // `bloom_might_contain` alone. Only the maybe rows reach the exact
+    // anti-join, which decides membership; the persist keeps the dedup
+    // window + tier join from executing twice per generation (semi-filter
+    // aggregation AND anti-join both consume the maybe side).
     val newLinks = (seenT.read(spark) match {
       case None => firstSeen
-      case Some(seenDf) =>
-        val bloomDf0 = bloomT.read(spark).getOrElse(emptyBloomDf)
-        val bloomBytes = (bloomBlocks.toLong * 64 + 1) * bloomBuckets
-        val bloomDf = if (bloomBytes <= tierBroadcastBytes) broadcast(bloomDf0) else bloomDf0
-        val bloomProbed = firstSeen
-          .withColumn("bucket", bucketCol($"href"))
-          .join(bloomDf, Seq("bucket"), "left")
-        val cuckooJoinDf =
-          if (cuckooTierBytes <= tierBroadcastBytes) broadcast(cuckooDf) else cuckooDf
-        val probed = (if (cuckooActive) {
-          bloomProbed.join(cuckooJoinDf, Seq("host"), "left")
-            .withColumn("maybe_seen",
-              when($"cf_exact" === true, expr("cuckoo_contains(cf, href)"))
-                .otherwise(expr("bloom_might_contain(bits, href)")))
-            .drop("cf", "cf_exact")
-        } else {
-          bloomProbed.withColumn("maybe_seen", expr("bloom_might_contain(bits, href)"))
-        }).drop("bucket", "bits")
-        val defNew = probed.filter(!$"maybe_seen").drop("maybe_seen")
-        val maybe0 = probed.filter($"maybe_seen").drop("maybe_seen")
-        // The exact anti-join's seen side would otherwise SHUFFLE the whole
-        // table every generation — at 10^10 seen rows the last remaining
-        // O(|seen|) shuffle in the DAG. [[semiFilteredSeen]] (one shared
-        // implementation with the frontier/discovery paths) reduces it to
-        // ~|maybe| rows before the exchange; the persist also keeps the
-        // dedup window + tier joins from executing twice per generation
-        // (bloom aggregation AND anti-join both consume the maybe side).
-        defNew.unionByName(exactNotInSeen(maybe0, "href", seenDf, nCandidates, genCaches))
+      case Some(seenDf) => antiJoinSeen(firstSeen, "href", seenDf, nCandidates, genCaches)
     }).persist(StorageLevel.MEMORY_AND_DISK)
 
     // ---- P4: relevance gate (deterministic 2-of-3 vote) ----------------
@@ -592,7 +484,7 @@ final class CrawlEngine(
         case None => oldFrontier
         case Some(seenDf) =>
           val frontierRows = frontierT.currentSnapshot.map(_.rowCount).getOrElse(1L)
-          antiJoinSeen(oldFrontier, seenDf, frontierRows, genCaches)
+          antiJoinSeen(oldFrontier, "url", seenDf, frontierRows, genCaches)
       }
       val wFrontier = Window.partitionBy($"host").orderBy($"score".desc, $"url")
       notSeen
@@ -615,14 +507,10 @@ final class CrawlEngine(
       .join(gatedBroadcast(hostProfilesDf.select($"host", $"robots_disallow", $"min_delay_ms"),
         hostProfileEstBytes), Seq("host"), "left")
       .filter(robotsAllowedCol($"href")).drop("robots_disallow")
-    // host_state carries (host, next_free_ms, n_scheduled); the politeness
-    // join only needs the clock column (n_scheduled feeds hot-host top-k)
-    val hostStateFull = hostStateT.read(spark) match {
-      case Some(df) if df.columns.contains("n_scheduled") => df
-      case Some(df) => df.withColumn("n_scheduled", lit(0L)) // pre-upgrade store
-      case None => Seq.empty[(String, Long, Long)].toDF("host", "next_free_ms", "n_scheduled")
-    }
-    val hostState = hostStateFull.select($"host", $"next_free_ms")
+    // host_state is (host, next_free_ms); a store written by an older
+    // engine carries an extra per-host count column, projected away here
+    val hostState = hostStateT.read(spark).map(_.select($"host", $"next_free_ms"))
+      .getOrElse(Seq.empty[(String, Long)].toDF("host", "next_free_ms"))
     val phaseA = allowed.select($"href", $"host", lit(0).as("phase"),
       $"kind", $"query_rank", $"page", $"result_rank", lit(0.0d).as("neg_score"),
       $"min_delay_ms")
@@ -766,46 +654,17 @@ final class CrawlEngine(
       bloomT.replaceBucketed(merged, round, bloomBuckets, "bucket",
         Map("capacity" -> bloomCap, "num_blocks" -> bloomNb.toLong))
     }
-    // cuckoo-tier maintenance (same window): each tracked host's filter must
-    // stay a SUPERSET of that host's seen URLs or its exact-negative claim
-    // breaks — insert this generation's delta EXECUTOR-SIDE via cogroup;
-    // saturated filters are dropped (rebuilt 4× larger when next hot)
-    val cuckooF = if (!cuckooActive) Future.successful(()) else timedF("cuckoo") {
-      val cur = cuckooDf.as[(String, Array[Byte], Boolean)]
-      val deltaByHost = seenDelta.select($"host", $"href").as[(String, String)]
-      val updated = cur.groupByKey(_._1).cogroup(deltaByHost.groupByKey(_._1)) {
-        (h, fs, urls) =>
-          fs.nextOption() match {
-            case Some((_, bytes, true)) =>
-              val cf = graft.operators.CuckooFilter.fromBytes(bytes)
-              urls.foreach(u => cf.insert(u._2))
-              if (cf.negativesAreExact) Iterator((h, cf.toBytes, true))
-              else Iterator.empty
-            case _ => Iterator.empty // absent or saturated
-          }
-      }.toDF("host", "cf", "cf_exact").persist(StorageLevel.MEMORY_AND_DISK)
-      // record the tier's serialized bytes so the next generation's
-      // broadcast-vs-copartition decision is a counter read, not a scan
-      val tierBytes = updated.select(coalesce(sum(length($"cf")), lit(0L))).as[Long].head()
-      cuckooT.replace(updated, round, Map("bytes" -> tierBytes))
-      updated.unpersist()
-    }
     val eventsF = timedF("events")(eventsT.append(
       sched.select($"href".as("url"), $"host", $"salt", $"scheduled_ms",
         $"min_delay_ms", lit(round).as("round"), $"phase"), round))
-    // host_state: untouched hosts keep state; scheduled hosts advance and
-    // accumulate their lifetime fetch count (the hot-host top-k statistic) —
+    // host_state: untouched hosts keep state; scheduled hosts advance —
     // depends only on sched (cached), so it rides the first wave
     val hostF = timedF("hoststate") {
       val updatedState = sched.groupBy($"host")
-        .agg((max($"scheduled_ms") + first($"min_delay_ms")).as("next_free"),
-          count(lit(1)).as("n_new"))
-      val newState = hostStateFull
-        .select($"host", $"next_free_ms".as("old_next"), $"n_scheduled".as("old_n"))
+        .agg((max($"scheduled_ms") + first($"min_delay_ms")).as("next_free"))
+      val newState = hostState.select($"host", $"next_free_ms".as("old_next"))
         .join(updatedState, Seq("host"), "full_outer")
-        .select($"host",
-          coalesce($"next_free", $"old_next").as("next_free_ms"),
-          (coalesce($"old_n", lit(0L)) + coalesce($"n_new", lit(0L))).as("n_scheduled"))
+        .select($"host", coalesce($"next_free", $"old_next").as("next_free_ms"))
       hostStateT.replace(newState, round)
     }
     val docsF = timedF("docs")(docsT.append(docsDf.toDF(), round))
@@ -817,7 +676,7 @@ final class CrawlEngine(
       Await.result(pdfF, Duration.Inf))
     Await.result(imagesF, Duration.Inf); Await.result(pmF, Duration.Inf)
     Await.result(hostF, Duration.Inf)
-    Await.result(bloomF, Duration.Inf); Await.result(cuckooF, Duration.Inf)
+    Await.result(bloomF, Duration.Inf)
     lap("commits")
 
     val nNew = seenT.deltaRows(seenMeta) - nExpanded
@@ -846,7 +705,7 @@ final class CrawlEngine(
     if (expandTopK > 0) {
       val seenNowDf = seenT.read(spark).get
       val rawDisc = fetched.select(explode($"out_links").as("url")).distinct()
-      val discoveries = antiJoinSeen(rawDisc, seenNowDf, nCandidates, genCaches)
+      val discoveries = antiJoinSeen(rawDisc, "url", seenNowDf, nCandidates, genCaches)
         .join(oldFrontier.select($"url"), Seq("url"), "left_anti")
         .withColumn("host", regexp_extract(lower($"url"), "^[a-z][a-z0-9+.-]*://([^/?#]*)", 1))
         .withColumn("score", expr(s"link_score(url, ${webCfg.seed}L)")) // codegen'd, no ScalaUDF
@@ -860,7 +719,7 @@ final class CrawlEngine(
       .withColumn("generation", lit(round)), round) // commit point
     lap("metrics+barrier")
 
-    (Seq[Dataset[_]](newLinks, kept, picks, sched, fetched, seenDelta, cuckooDf)
+    (Seq[Dataset[_]](newLinks, kept, picks, sched, fetched, seenDelta)
       ++ genCaches).foreach(_.unpersist())
     counters
   }
@@ -885,7 +744,7 @@ final class CrawlEngine(
     rollbackPartial()
     foldFrontier()
     val tables = Seq(seenT, linksT, docsT, imagesT, pdfT, processedT,
-      hostStateT, metricsT, eventsT, frontierT, partitionMetricsT, bloomT, cuckooT)
+      hostStateT, metricsT, eventsT, frontierT, partitionMetricsT, bloomT)
     tables.map { t =>
       t.compact(spark, targetFileBytes)
       t.name -> t.vacuum(keepSnapshots)

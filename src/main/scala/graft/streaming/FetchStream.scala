@@ -70,11 +70,8 @@ object FetchStream {
     * long per host (bounded by host count — the partitioning the whole
     * engine is built around), and every micro-batch emits the updated
     * cumulative count for each host that appeared in it. The LATEST row
-    * per host is exactly the statistic the batch engine's hot-host
-    * selection reads from host_state (`n_scheduled`,
-    * CrawlEngine.runGeneration's server-side top-k) — so a live dashboard
-    * or the tier-routing decision can ride the stream instead of waiting
-    * for the next generation commit.
+    * per host is the host's lifetime fetch count, so a live dashboard can
+    * rank hot hosts without waiting for a batch job.
     */
   def runningHostCounts(events: Dataset[FetchEvent]): Dataset[HostCount] = {
     val spark = events.sparkSession
@@ -90,7 +87,7 @@ object FetchStream {
 
   /** The top-k ranking over a sink of [[runningHostCounts]] updates: the
     * latest (= maximum, counts are monotone) cumulative count per host,
-    * ranked (count desc, host) — the batch engine's hot-host tie-break.
+    * ranked (count desc, host).
     */
   def hotHostTopK(counts: DataFrame, k: Int): DataFrame =
     counts.groupBy(col("host")).agg(max(col("n_scheduled")).as("n_scheduled"))

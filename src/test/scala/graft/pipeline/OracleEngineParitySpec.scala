@@ -85,18 +85,44 @@ class OracleEngineParitySpec extends AnyFunSuite {
   }
 
   test("over-budget tiers: zero byte budget skips cuckoo builds and bloom broadcast, parity holds") {
-    // tierBroadcastBytes=1 puts EVERY hot host over the per-host budget (no
-    // cuckoo filter is ever built) and forces the bloom probe join onto the
-    // co-partitioned (non-broadcast) path — routing tiers are accelerators,
-    // so the exact anti-join must keep the seen set oracle-equal
+    // tierBroadcastBytes=1 forces the bloom probe join onto the
+    // co-partitioned (non-broadcast) path — the routing tier is an
+    // accelerator, so the exact anti-join must keep the seen set
+    // oracle-equal
     val dir = tempDir("overbudget")
     val eng = new CrawlEngine(SparkTestSession.spark, cfg, dir, batchSize,
-      hotHostCount = 3, tierBroadcastBytes = 1L)
+      tierBroadcastBytes = 1L)
     eng.run(seeds)
     assert(eng.seenSet() == oracle.seen)
     assert(eng.crawlOrder() == oracle.crawlOrder)
-    assert(eng.cuckooT.currentSnapshot.forall(_.rowCount == 0),
-      "no cuckoo filter may be built under a zero byte budget")
+    assert(eng.cuckooT.currentSnapshot.isEmpty, "no generation may write the retired cuckoo tier")
+  }
+
+  test("a store written with host_state.n_scheduled and cuckoo_tier rows resumes to oracle parity") {
+    // the shape an engine that still kept the cuckoo hot-host tier left
+    // behind: host_state carried a per-host n_scheduled count and
+    // cuckoo_tier held per-host filters (here one EMPTY filter claiming
+    // exact negatives for the busiest host). The new engine must read past
+    // both: the extra column is projected away and the tier is never read
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val dir = tempDir("oldstore")
+    val eng1 = newEngine(dir)
+    assert(eng1.run(seeds, maxRounds = 1) == 1)
+    val seenPerHost = eng1.seenT.read(spark).get.groupBy($"host").count()
+    val oldState = eng1.hostStateT.read(spark).get.select($"host", $"next_free_ms")
+      .join(seenPerHost, Seq("host"), "left")
+      .na.fill(0L, Seq("count")).withColumnRenamed("count", "n_scheduled")
+    eng1.hostStateT.replace(oldState, 1)
+    val host = oldState.orderBy($"n_scheduled".desc, $"host").select($"host").as[String].head()
+    val cf = graft.operators.CuckooFilter.sized(1024)
+    eng1.cuckooT.replace(Seq((host, cf.toBytes, true)).toDF("host", "cf", "cf_exact"), 1)
+
+    val eng2 = newEngine(dir)
+    assert(eng2.hostStateT.read(spark).get.columns.contains("n_scheduled"))
+    eng2.run(seeds)
+    assert(eng2.seenSet() == oracle.seen)
+    assert(eng2.crawlOrder() == oracle.crawlOrder)
   }
 
   test("runtime semi-filter on the seen side (forced on): parity holds") {
@@ -236,7 +262,7 @@ class OracleEngineParitySpec extends AnyFunSuite {
     val seeds2 = (1 to 9).map(i => s"sg query $i")
     val ora2 = SequentialOracle.run(cfg2, seeds2, batchSize = 4, expandTopK = 2)
     val eng2 = new CrawlEngine(SparkTestSession.spark, cfg2, tempDir("alt"),
-      batchSize = 4, saltShards = 2, hotHostCount = 3, expandTopK = 2)
+      batchSize = 4, saltShards = 2, expandTopK = 2)
     eng2.run(seeds2)
     assert(eng2.seenSet() == ora2.seen)
     assert(eng2.crawlOrder() == ora2.crawlOrder)
