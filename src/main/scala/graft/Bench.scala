@@ -323,7 +323,6 @@ object Bench {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-bench-$cores").toString
       storeDir = dir
       val engine = new CrawlEngine(spark, cfg, dir, batch,
-        bloomExpectedKeys = 4L * nQueries * cfg.resultsPerPage * cfg.pages,
         expandTopK = sys.env.getOrElse("BENCH_EXPAND_TOPK", "0").toInt)
       val seeds = (1 to nQueries).map(i => s"singapore topic $i query")
       val t0 = System.nanoTime()

@@ -413,11 +413,9 @@ object GraftFunctions {
     r.createOrReplaceTempFunction(
       "rh_bucket_long",
       exprs => HyperplaneBucketLongExpr(exprs(0), litInt(exprs(1)), litInt(exprs(2)), litLong(exprs(3))), "built-in")
-    // URL-seen dedup tier (the analyzer wraps the AggregateFunction)
+    // blocked bloom build + probe (the analyzer wraps the AggregateFunction)
     r.createOrReplaceTempFunction(
       "bloom_agg", exprs => BloomBuildAgg(exprs(0), litInt(exprs(1)), litInt(exprs(2))), "built-in")
-    r.createOrReplaceTempFunction(
-      "bloom_or", exprs => BloomOrExpr(exprs(0), exprs(1)), "built-in")
     r.createOrReplaceTempFunction(
       "bloom_might_contain", exprs => BloomMightContainExpr(exprs(0), exprs(1)), "built-in")
   }

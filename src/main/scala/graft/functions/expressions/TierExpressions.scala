@@ -4,28 +4,26 @@ import graft.operators.BlockedBloom
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The URL-seen dedup tier as native Catalyst machinery (SURVEY §4.3's
-  * prescribed shape — no RDD, no Scala UDF anywhere in the route):
+/** The blocked bloom as native Catalyst machinery (SURVEY §4.3's
+  * prescribed shape — no RDD, no Scala UDF anywhere in the route). The
+  * crawl engine's runtime semi-filter uses both halves to shrink a seen
+  * scan before the exact anti-join:
   *
   *  - [[BloomBuildAgg]]: `bloom_agg(key, numBlocks, k)` — a
   *    TypedImperativeAggregate whose buffer IS a [[BlockedBloom]]; partial
   *    aggregation builds per-partition filters executor-side, merge ORs
-  *    them — the Dataset/Catalyst replacement for `rdd.treeAggregate`.
-  *    Grouped by a host-hash bucket column it yields the PARTITIONED bloom
-  *    tier: no monolithic driver filter is ever materialized.
-  *  - [[BloomOrExpr]]: `bloom_or(a, b)` — byte-wise OR for the incremental
-  *    per-generation merge (old tier ⟕⟖ delta tier on bucket).
+  *    them — the Dataset/Catalyst replacement for `rdd.treeAggregate`. No
+  *    monolithic driver filter is ever materialized.
   *  - [[BloomMightContainExpr]]: codegen'd probe over the serialized
-  *    BINARY blob — evaluated inside whole-stage codegen on the candidate
-  *    stream (the hottest expression in the engine); a NULL blob (no filter
-  *    for this bucket yet) is definitively "not seen" → false, so the
-  *    expression is non-nullable and the routing needs no extra null guard.
+  *    BINARY blob, evaluated inside whole-stage codegen on the scanned
+  *    rows; a NULL blob (no filter) is definitively "absent" → false, so
+  *    the expression is non-nullable and callers need no extra null guard.
   */
 case class BloomBuildAgg(
     child: Expression,
@@ -68,34 +66,6 @@ case class BloomBuildAgg(
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
   override def prettyName: String = "bloom_agg"
-}
-
-/** Byte-wise OR of two serialized blooms; null behaves like an empty filter
-  * (returns the other side) — exactly the full-outer-join merge semantics.
-  * Not on the per-candidate hot path (one row per bucket per generation),
-  * so interpreted eval is fine.
-  */
-case class BloomOrExpr(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("bloom_or requires (BINARY, BINARY)")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = left.nullable && right.nullable
-  override def prettyName: String = "bloom_or"
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null) b
-    else if (b == null) a
-    else BlockedBloom.orBytes(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): BloomOrExpr =
-    copy(left = newLeft, right = newRight)
 }
 
 /** `bloom_might_contain(bits, key)`: codegen'd probe of a serialized blocked

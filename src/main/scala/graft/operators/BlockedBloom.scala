@@ -2,8 +2,8 @@ package graft.operators
 
 import graft.util.Hashing
 
-/** Blocked Bloom filter for the distributed URL-seen prefilter (north rule:
-  * FNV-1a + murmur3 double hashing, built per-partition by a Catalyst
+/** Blocked Bloom filter for the crawl engine's runtime semi-filter (north
+  * rule: FNV-1a + murmur3 double hashing, built per-partition by a Catalyst
   * `TypedImperativeAggregate` — [[graft.functions.expressions.BloomBuildAgg]]
   * — and OR-merged by the aggregate's merge phase; no RDD anywhere).
   *
@@ -14,21 +14,16 @@ import graft.util.Hashing
   * (Putze, Sanders, Singler, "Cache-, Hash- and Space-Efficient Bloom
   * Filters", WEA 2007).
   *
-  * Role in dedup (SURVEY §2.4 D1): the Bloom tier only ROUTES — "definitely
-  * new" keys skip the exact anti-join shuffle, "maybe seen" keys go through
-  * it. False positives therefore cost a shuffled row, never a dropped URL;
-  * the exact tier is the membership authority and the final seen set is
-  * bit-for-bit the reference's.
+  * Role in dedup (SURVEY §2.4 D1): the filter only SHRINKS a scan — a
+  * bloom over the probe side of a not-in-seen anti-join, broadcast to the
+  * seen scan, drops seen rows that cannot match before they shuffle. False
+  * positives therefore cost a shuffled row, never a dropped URL; the exact
+  * anti-join is the membership authority and the final seen set is
+  * bit-for-bit the reference's. The probe is the codegen'd
+  * [[graft.functions.expressions.BloomMightContainExpr]] over the
+  * serialized bytes — no monolithic driver-resident filter exists.
   *
-  * At-scale shape: the engine keeps the filter HOST-HASH-BUCKET-PARTITIONED
-  * as a (bucket, bits) table ([[graft.pipeline.CrawlEngine]] `bloom_tier`);
-  * probes join candidates to their bucket's blob and evaluate the codegen'd
-  * [[graft.functions.expressions.BloomMightContainExpr]] over the serialized
-  * bytes — no monolithic driver-resident filter exists, and whether the blob
-  * table is broadcast or co-partition-joined is a size-based plan decision,
-  * not a hardcoded driver broadcast.
-  *
-  * Serialized form (the `bits BINARY` column): [k: 1 byte][longs,
+  * Serialized form (the BINARY blob `bloom_agg` returns): [k: 1 byte][longs,
   * little-endian] — the static byte-blob probes below read it without
   * deserialization, so a probe is one cache-line touch inside whole-stage
   * codegen.

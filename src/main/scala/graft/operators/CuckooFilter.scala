@@ -5,15 +5,12 @@ import graft.util.Hashing
 /** Cuckoo filter (Fan, Andersen, Kaminsky, Mitzenmacher, "Cuckoo Filter:
   * Practically Better Than Bloom", CoNEXT 2014): 4-slot buckets, 16-bit
   * fingerprints, partial-key cuckoo hashing with murmur3. Supports delete —
-  * the property Bloom lacks — which is why it serves as the EXACT-tier
-  * accelerator for hot hosts (north rule): the top-k hosts by frontier mass
-  * keep a per-host cuckoo filter so their high-collision URL traffic is
-  * resolved without touching the big seen table.
+  * the property Bloom lacks. A standalone operator: the crawl engine's seen
+  * membership is the exact anti-join alone and no engine path consults it.
   *
-  * Like the Bloom tier, a cuckoo "maybe" routes to the exact anti-join; a
-  * cuckoo "no" is authoritative (no false negatives while occupancy is below
-  * capacity; inserts that fail after MaxKicks fall back to the exact tier by
-  * marking the filter saturated).
+  * A "no" is authoritative (no false negatives while occupancy is below
+  * capacity; an insert that fails after MaxKicks marks the filter
+  * saturated, and [[negativesAreExact]] turns false).
   */
 final class CuckooFilter(val numBuckets: Int) extends Serializable {
   import CuckooFilter._

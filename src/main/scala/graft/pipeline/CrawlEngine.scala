@@ -19,7 +19,7 @@ import org.apache.spark.storage.StorageLevel
   * batch queries (driver, seeded shuffle — main.py:61-65 normalized)
   *  → flatMap synthetic search (S4/S5/G4)                        [narrow]
   *  → first-seen-wins window over ArrivalKey (D1 intra-batch)    [shuffle 1: hash(href)]
-  *  → Bloom tier → bucketed exact anti-join vs seen (D1/J2)     [reuses shuffle 1 partitioning]
+  *  → bucketed exact anti-join vs seen (D1/J2)                   [reuses shuffle 1 partitioning]
   *  → relevance predicate (P4), PDF split (P5/S7/D3/J4)          [narrow]
   *  → robots gate + per-host politeness schedule (window)        [shuffle 2: hash(host)]
   *  → salted repartition → fetch + span extraction (S6/G1/G2/G5) [shuffle 3: hash(host,salt)]
@@ -28,18 +28,13 @@ import org.apache.spark.storage.StorageLevel
   * }}}
   *
   * Scale design notes:
-  *  - the Bloom tier (blocked, FNV-1a+murmur3) is a HOST-HASH-BUCKET-
-  *    PARTITIONED table `bloom_tier(bucket, bits)` built and incrementally
-  *    merged ENTIRELY executor-side by a Catalyst TypedImperativeAggregate
-  *    (`bloom_agg`) — no monolithic driver-resident filter exists. Probing
-  *    is a join of candidates to their bucket's blob + a codegen'd
-  *    `bloom_might_contain` expression; whether that join broadcasts (small
-  *    tier) or co-partitions on the bucket key (10^10-scale tier, ~15 GB)
-  *    is a size-based plan decision, not a hardcoded broadcast. Routing
-  *    never decides membership: the exact anti-join stays the authority so
-  *    the final seen set equals the reference's. Every candidate routes on
-  *    `bloom_might_contain` alone: hot-host skew is served by the (host,
-  *    salt) fetch salting below, not by a per-host membership tier;
+  *  - seen membership is ONE exact set, as in the reference
+  *    (crawler.py:30-41): seen is stored bucketed by href, so the
+  *    not-in-seen check is an anti-join chain that reads seen with no
+  *    exchange. No filter tier sits in front of it: a tier could save at
+  *    most that one join pass, and its own probe join and per-generation
+  *    rewrite cost more (matched A/B in BENCH/BASELINE.md). Hot-host skew
+  *    is served by the (host, salt) fetch salting below;
   *  - per-generation totals come from one narrow count job (map-side
   *    partials only) — no O(distinct hosts) or O(|seen|) collect anywhere
   *    in a generation;
@@ -65,10 +60,7 @@ final class CrawlEngine(
     storeRoot: String,
     batchSize: Int,
     saltShards: Int = 4,
-    bloomBitsPerKey: Int = 12,
-    bloomExpectedKeys: Long = 1L << 20,
     expandTopK: Int = 0,
-    bloomBuckets: Int = 32,
     tierBroadcastBytes: Long = 512L << 20,
     seenSemiFilterRows: Long = 10L * 1000 * 1000,
     autoMaintainSeenDirs: Int = 16) extends Serializable {
@@ -127,12 +119,12 @@ final class CrawlEngine(
       p => startswith(path, p))
   }
 
-  /** Partitioned Bloom tier table: (bucket, bits BINARY), bucket =
-    * pmod(xxhash64(href), bloomBuckets). Built from the seen table by the
-    * `bloom_agg` TypedImperativeAggregate (executor-side, merge = OR),
-    * incrementally extended per generation by `bloom_or`-merging the
-    * delta's per-bucket filters, rebuilt 4× larger when the seen count
-    * outgrows the recorded capacity.
+  /** Handle to the retired `bloom_tier` table: no generation reads or
+    * writes it, and rollback and maintenance skip it (a store written by
+    * an older engine may still hold rows; nothing consults them). It stays
+    * only because `perfbench/` reads its snapshot for
+    * `operators.bloom_buckets`, and that benchmark changes only together
+    * with its recorded baselines; drop the handle with that read.
     */
   @transient val bloomT: SnapshotTable = store.table("bloom_tier")
 
@@ -145,11 +137,8 @@ final class CrawlEngine(
     */
   @transient val cuckooT: SnapshotTable = store.table("cuckoo_tier")
 
-  private def bucketCol(href: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod(xxhash64(href), lit(bloomBuckets)).cast("int")
-
   /** Size-gate for the host-keyed dimension broadcasts (hostProfilesDf /
-    * host_state) — the same byte-budget discipline the Bloom tier uses. At
+    * host_state) — the same byte-budget discipline the semi-filter uses. At
     * the design scale (10¹⁰ URLs over Zipf hosts → 10⁷-10⁸ hosts) an
     * unconditional broadcast ships a multi-GB table to every executor every
     * generation; over budget the hint is dropped and Catalyst joins
@@ -169,153 +158,52 @@ final class CrawlEngine(
   private def hostStateEstBytes: Long =
     hostStateT.currentSnapshot.map(_.rowCount).getOrElse(0L) * 64
 
-  private def emptyBloomDf: DataFrame =
-    Seq.empty[(Int, Array[Byte])].toDF("bucket", "bits")
-
-  private def bloomCapacity: Long =
-    bloomT.currentSnapshot.flatMap(_.counters.get("capacity")).getOrElse(0L)
-
-  private def bloomBlocks: Int =
-    bloomT.currentSnapshot.flatMap(_.counters.get("num_blocks")).getOrElse(0L).toInt
-
-  /** (Re)build the partitioned Bloom tier when absent or outgrown — a
-    * distributed group-by-bucket aggregation over the seen table; the
-    * driver only writes the table pointer.
-    */
-  private def ensureBloomTier(): Unit = {
-    val seenRows = seenT.currentSnapshot.map(_.rowCount).getOrElse(0L)
-    if (bloomT.currentSnapshot.isEmpty || seenRows > bloomCapacity) {
-      val capacity = math.max(bloomExpectedKeys, seenRows * 4)
-      val nb = BlockedBloom.blocksFor(
-        math.max(1L, capacity / bloomBuckets), bloomBitsPerKey)
-      val df = seenT.read(spark) match {
-        case Some(seenDf) =>
-          // pre-shuffle on the bucket key: each task then PARTIALLY
-          // aggregates only its own buckets' filters (without this, every
-          // map task allocates+shuffles one full-size bloom buffer per
-          // bucket — O(tasks × buckets × bufferBytes) at high parallelism)
-          seenDf.select(bucketCol($"href").as("bucket"), $"href")
-            .repartition($"bucket")
-            .groupBy($"bucket").agg(expr(s"bloom_agg(href, $nb, 7)").as("bits"))
-        case None => emptyBloomDf
-      }
-      // stored bucketed on the bucket key: every later merge/probe join
-      // reads the tier with no exchange on the stored side
-      bloomT.replaceBucketed(df, lastCommittedGeneration, bloomBuckets, "bucket",
-        Map("capacity" -> capacity, "num_blocks" -> nb.toLong))
-    }
-  }
-
-  /** Tier-routed "not in seen" over the `urlCol` column — the one route
-    * for candidate dedup, frontier picks and discovery dedup: probe the
-    * partitioned bloom tier — the tier is a superset filter of seen (built
-    * from it, delta-merged every commit, rolled back in step) so clear bits
-    * or a missing bucket is a DEFINITIVE no and those rows skip the exact
-    * join entirely; only the maybe rows anti-join seen, with the seen side
-    * pre-reduced by a runtime semi-filter bloom aggregated over them when
-    * the seen table is big enough to pay (see [[semiFilteredSeen]]).
-    * `expectedRows` sizes that bloom: undersizing only raises its FP rate
-    * (extra shuffled rows, never a dropped or phantom url) — membership is
-    * always decided by the exact anti-join. Cost: O(|df|) narrow probe + O(|maybe|)-driven
-    * shuffles; the per-generation O(|seen|) exchange never happens.
-    */
-  private def antiJoinSeen(df: DataFrame, urlCol: String, seenDf: DataFrame, expectedRows: Long,
-                           caches: scala.collection.mutable.ArrayBuffer[Dataset[_]]): DataFrame = {
-    val bloomDf0 = bloomT.read(spark).getOrElse(emptyBloomDf)
-    val bloomBytes = (bloomBlocks.toLong * 64 + 1) * bloomBuckets
-    val bloomDf = if (bloomBytes <= tierBroadcastBytes) broadcast(bloomDf0) else bloomDf0
-    val probed = df
-      .withColumn("bucket", bucketCol(col(urlCol)))
-      .join(bloomDf, Seq("bucket"), "left")
-      .withColumn("maybe_seen", expr(s"bloom_might_contain(bits, `$urlCol`)"))
-      .drop("bucket", "bits")
-    val defNew = probed.filter(!$"maybe_seen").drop("maybe_seen")
-    val maybe0 = probed.filter($"maybe_seen").drop("maybe_seen")
-    defNew.unionByName(exactNotInSeen(maybe0, urlCol, seenDf, expectedRows, caches))
-  }
-
-  /** The runtime semi-filter trade shared by EVERY exact anti-join against
-    * seen (candidate dedup, frontier picks, discovery dedup — one
-    * implementation so the gating/sizing/persist discipline can't drift
-    * between paths): persist the (small) maybe side, aggregate a bloom over
-    * its `urlCol`, broadcast it to the seen scan — the anti-join's right
-    * side shrinks to ~|maybe| rows BEFORE the exchange. Falls back to the
-    * full seen column when the table is below `seenSemiFilterRows` (the
-    * extra bloom job wouldn't pay) or the bloom would blow the broadcast
-    * budget. Correctness never depends on the filter: FPs shuffle, never
-    * drop. Returns (maybe side — possibly persisted into `caches`, seen
-    * side keyed as `urlCol`).
-    */
-  private def semiFilteredSeen(maybe0: DataFrame, urlCol: String, seenDf: DataFrame,
-                               expectedRows: Long,
-                               caches: scala.collection.mutable.ArrayBuffer[Dataset[_]])
-  : (DataFrame, DataFrame) = {
-    val (m, mBloomOpt) = maybeSemiBloom(maybe0, urlCol, expectedRows, caches)
-    (m, bloomShrunk(seenDf.select($"href".as(urlCol)), mBloomOpt, urlCol))
-  }
-
-  /** Pre-shrink a seen-side scan by the broadcast maybe-bloom (no-op
-    * without one). ONE implementation for the single-join and chain paths —
-    * the probe expression must not drift between them.
-    */
-  private def bloomShrunk(seenSide: DataFrame, mBloomOpt: Option[DataFrame],
-                          urlCol: String): DataFrame =
-    mBloomOpt match {
-      case Some(mb) => seenSide.join(broadcast(mb))
-        .filter(expr(s"bloom_might_contain(mbits, `$urlCol`)"))
-        .select(col(urlCol))
-      case None => seenSide
-    }
-
-  /** The semi-filter's gating/sizing half, shared with the bucketed chain:
-    * persist the maybe side and aggregate a one-row bloom over its
-    * `urlCol` when the seen table is big enough to pay and the bloom fits
-    * the broadcast budget. Returns (maybe — possibly persisted into
-    * `caches`, optional bloom row).
-    */
-  private def maybeSemiBloom(maybe0: DataFrame, urlCol: String, expectedRows: Long,
-                             caches: scala.collection.mutable.ArrayBuffer[Dataset[_]])
-  : (DataFrame, Option[DataFrame]) = {
-    val nbM = BlockedBloom.blocksFor(math.max(1L, expectedRows), bloomBitsPerKey)
-    val maybeBloomBytes = nbM.toLong * 64 + 64
-    if (seenT.currentSnapshot.exists(_.rowCount >= seenSemiFilterRows) &&
-      maybeBloomBytes <= tierBroadcastBytes) {
-      val m = maybe0.persist(StorageLevel.MEMORY_AND_DISK)
-      caches += m
-      (m, Some(m.agg(expr(s"bloom_agg(`$urlCol`, $nbM, 7)").as("mbits"))))
-    } else (maybe0, None)
-  }
-
-  /** Exact "not in seen" — the membership authority behind every tier.
-    * When the seen table is stored BUCKETED by href (the default layout
-    * from this round on — [[graft.snapshot.SnapshotTable.appendBucketed]]),
+  /** Exact "not in seen" over the `urlCol` column — the one route for
+    * candidate dedup, frontier picks and discovery dedup, and the
+    * membership authority. When the seen table is stored BUCKETED by href
+    * (the default layout — [[graft.snapshot.SnapshotTable.appendBucketed]]),
     * the join runs as a storage-partitioned anti-join CHAIN: one SMJ anti
     * per bucketed commit dir, each seen-side scan read bucket-aligned with
     * NO exchange; the probe side is shuffled to the bucket partitioning
     * once and the chain reuses it (set difference is associative:
-    * p \ (s₀∪s₁∪…) = ((p \ s₀) \ s₁) \ …). The maybe-side runtime bloom
-    * still pre-shrinks each chunk scan (filters preserve the scan's
-    * partitioning). Chain length = bucketed dirs since the last
-    * compaction — [[maintain]]'s compact folds them to one — and is capped
-    * at `maxSeenChainDirs`, past which (or for legacy/mixed layouts) the
-    * semi-filtered single anti-join remains the fallback.
+    * p \ (s₀∪s₁∪…) = ((p \ s₀) \ s₁) \ …). Chain length = bucketed dirs
+    * since the last compaction — [[maintain]]'s compact folds them to one —
+    * and is capped at `maxSeenChainDirs`, past which (or for legacy/mixed
+    * layouts) a single anti-join against `seenDf` is the fallback.
+    *
+    * Runtime semi-filter: once seen holds `seenSemiFilterRows` rows (below
+    * that the extra bloom job wouldn't pay) and the bloom fits the
+    * broadcast budget, the probe side is persisted (into `caches`) and a
+    * one-row bloom aggregated over its `urlCol` is broadcast to every seen
+    * scan, shrinking it to ~|probe| rows before the join (filters preserve
+    * the scan's partitioning). `expectedRows` sizes that bloom: undersizing
+    * only raises its FP rate. Correctness never depends on it: FPs shuffle,
+    * never drop.
     */
   private val maxSeenChainDirs = 24
-  private def exactNotInSeen(maybe0: DataFrame, urlCol: String, seenDf: DataFrame,
-                             expectedRows: Long,
-                             caches: scala.collection.mutable.ArrayBuffer[Dataset[_]])
-  : DataFrame = {
+  private val semiBloomBitsPerKey = 12
+  private def antiJoinSeen(df: DataFrame, urlCol: String, seenDf: DataFrame, expectedRows: Long,
+                           caches: scala.collection.mutable.ArrayBuffer[Dataset[_]]): DataFrame = {
+    val nbM = BlockedBloom.blocksFor(math.max(1L, expectedRows), semiBloomBitsPerKey)
+    val semiFilter = seenT.currentSnapshot.exists(_.rowCount >= seenSemiFilterRows) &&
+      nbM.toLong * 64 + 64 <= tierBroadcastBytes
+    val probe = if (semiFilter) {
+      val m = df.persist(StorageLevel.MEMORY_AND_DISK)
+      caches += m
+      m
+    } else df
+    lazy val probeBloom = probe.agg(expr(s"bloom_agg(`$urlCol`, $nbM, 7)").as("mbits"))
     val chunks = seenT.readCommitChunks(spark).getOrElse(Seq.empty)
-    if (chunks.nonEmpty && chunks.size <= maxSeenChainDirs &&
-      seenT.bucketSpec.exists(_._2 == "href")) {
-      val (maybe, mBloomOpt) = maybeSemiBloom(maybe0, urlCol, expectedRows, caches)
-      chunks.foldLeft(maybe) { (acc, ch) =>
-        val filtered = bloomShrunk(ch.select($"href".as(urlCol)), mBloomOpt, urlCol)
-        acc.join(filtered, Seq(urlCol), "left_anti")
-      }
-    } else {
-      val (maybe, seenSide) = semiFilteredSeen(maybe0, urlCol, seenDf, expectedRows, caches)
-      maybe.join(seenSide, Seq(urlCol), "left_anti")
+    val seenSides =
+      if (chunks.nonEmpty && chunks.size <= maxSeenChainDirs &&
+        seenT.bucketSpec.exists(_._2 == "href")) chunks
+      else Seq(seenDf)
+    seenSides.foldLeft(probe) { (acc, seen) =>
+      val seenSide = seen.select($"href".as(urlCol))
+      val shrunk = if (!semiFilter) seenSide else seenSide.join(broadcast(probeBloom))
+        .filter(expr(s"bloom_might_contain(mbits, `$urlCol`)"))
+        .select(col(urlCol))
+      acc.join(shrunk, Seq(urlCol), "left_anti")
     }
   }
 
@@ -328,7 +216,7 @@ final class CrawlEngine(
   def rollbackPartial(): Unit = {
     val committed = lastCommittedGeneration
     Seq(seenT, linksT, docsT, imagesT, pdfT, hostStateT, metricsT, eventsT,
-      frontierT, partitionMetricsT, bloomT)
+      frontierT, partitionMetricsT)
       .foreach(_.rollbackToGeneration(committed))
   }
 
@@ -340,7 +228,6 @@ final class CrawlEngine(
     */
   def run(seedQueries: Seq[String], maxRounds: Int = Int.MaxValue): Int = {
     rollbackPartial()
-    ensureBloomTier()
     var round = lastCommittedGeneration
     var executed = 0
     var remaining = currentRemaining(seedQueries)
@@ -392,10 +279,9 @@ final class CrawlEngine(
     * batch list); everything downstream is distributed.
     */
   def runGeneration(round: Int, batch: Seq[String]): Map[String, Long] = {
-    ensureBloomTier()
     val webCfg = cfg
     // intermediates persisted conditionally inside the DAG builders
-    // (e.g. the semi-filter's maybe side) register here for end-of-
+    // (e.g. the semi-filter's probe side) register here for end-of-
     // generation unpersist
     val genCaches = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -438,15 +324,10 @@ final class CrawlEngine(
     val firstSeen = candidates.toDF()
       .withColumn("rn", row_number().over(wHref)).filter($"rn" === 1).drop("rn")
 
-    // ---- D1/J2: Bloom tier → bucketed exact anti-join ------------------
-    // [[antiJoinSeen]] is the one not-in-seen route: candidates pick up
-    // their bucket's Bloom blob (explicitly broadcast while the tier is
-    // small; at 10^10 scale the tier exceeds tierBroadcastBytes and the
-    // join co-partitions on the bucket key) and route on
-    // `bloom_might_contain` alone. Only the maybe rows reach the exact
-    // anti-join, which decides membership; the persist keeps the dedup
-    // window + tier join from executing twice per generation (semi-filter
-    // aggregation AND anti-join both consume the maybe side).
+    // ---- D1/J2: bucketed exact anti-join vs seen -----------------------
+    // [[antiJoinSeen]] is the one not-in-seen route; the persist keeps the
+    // dedup window + anti-join from re-executing for each of newLinks'
+    // consumers (relevance gate, pick dedup, seen delta).
     val newLinks = (seenT.read(spark) match {
       case None => firstSeen
       case Some(seenDf) => antiJoinSeen(firstSeen, "href", seenDf, nCandidates, genCaches)
@@ -474,9 +355,9 @@ final class CrawlEngine(
       emptyFrontier.select($"url".as("href"), $"host", $"score")
         .persist(StorageLevel.MEMORY_AND_DISK)
     } else {
-      // not-seen = tier-routed probe + semi-filtered exact anti-join (never
-      // an O(|seen|) shuffle); this generation's own delta (newLinks — not
-      // in the tier yet) is a second, delta-sized anti-join. The frontier
+      // not-seen = the bucketed exact anti-join chain (never an O(|seen|)
+      // shuffle); this generation's own delta (newLinks — not in seen
+      // yet) is a second, delta-sized anti-join. The frontier
       // table is a delta log: rows whose url has entered seen are dead and
       // fall out right here (seen-membership is the tombstone; maintain()
       // folds them out physically).
@@ -610,15 +491,19 @@ final class CrawlEngine(
     def timedF[T](name: String)(body: => T): Future[T] = Future {
       // one scheduler pool per commit: under spark.scheduler.mode=FAIR the
       // concurrent write jobs share task slots instead of FIFO-queueing
-      // behind whichever job grabbed all slots first (no-op under FIFO)
+      // behind whichever job grabbed all slots first (no-op under FIFO).
+      // Cleared on exit: the thread belongs to the global pool and is
+      // reused by unrelated futures
       spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"commit-$name")
-      val t = System.nanoTime()
-      val r = body
-      if (timing) println(f"[gen $round]   commit:$name%-12s ${(System.nanoTime() - t) / 1e9}%6.2fs")
-      r
+      try {
+        val t = System.nanoTime()
+        val r = body
+        if (timing) println(f"[gen $round]   commit:$name%-12s ${(System.nanoTime() - t) / 1e9}%6.2fs")
+        r
+      } finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
     }
     // seen is stored BUCKETED by href (one file per bucket per commit):
-    // [[exactNotInSeen]] reads it back bucket-aligned so the anti-join's
+    // [[antiJoinSeen]] reads it back bucket-aligned so the anti-join's
     // seen side never exchanges. The bucket count is pinned by the first
     // bucketed commit (manifest registry) so later generations stay
     // join-compatible even if the session's shuffle partitioning changes.
@@ -626,34 +511,6 @@ final class CrawlEngine(
     val linksF = timedF("links")(linksT.append(kept.toDF(), round))
     val pdfF = timedF("pdf")(pdfT.append(
       pdfLinks.select($"href".as("url"), lit(round).as("generation")).coalesce(4), round))
-    // distributed Bloom-tier delta merge rides the same concurrency window:
-    // per-bucket delta filters aggregated executor-side, OR-merged into the
-    // stored tier by a full-outer join — the driver only flips the pointer
-    val (bloomCap, bloomNb) = (bloomCapacity, bloomBlocks)
-    val bloomF = timedF("bloom") {
-      val deltaBloom = seenDelta
-        .select(bucketCol($"href").as("bucket"), $"href")
-        // pre-shuffle by bucket (see ensureBloomTier): bounds the partial
-        // bloom buffers to the task's own buckets
-        .repartition($"bucket")
-        .groupBy($"bucket").agg(expr(s"bloom_agg(href, $bloomNb, 7)").as("bits"))
-      // the stored tier is read back through its storage bucketing (replace
-      // commits keep it a single bucketed dir), so the full-outer merge
-      // join reads the stored side bucket-aligned — the delta side alone
-      // exchanges. At the 10^10 design point the stored tier is ~15 GB;
-      // re-exchanging it every generation was the remaining fixed O(tier)
-      // shuffle in the commit window.
-      val storedBloom = bloomT.readCommitChunks(spark) match {
-        case Some(Seq(single)) => single
-        case _ => bloomT.read(spark).getOrElse(emptyBloomDf)
-      }
-      val merged = storedBloom
-        .select($"bucket", $"bits".as("ob"))
-        .join(deltaBloom.select($"bucket", $"bits".as("db")), Seq("bucket"), "full_outer")
-        .select($"bucket", expr("bloom_or(ob, db)").as("bits"))
-      bloomT.replaceBucketed(merged, round, bloomBuckets, "bucket",
-        Map("capacity" -> bloomCap, "num_blocks" -> bloomNb.toLong))
-    }
     val eventsF = timedF("events")(eventsT.append(
       sched.select($"href".as("url"), $"host", $"salt", $"scheduled_ms",
         $"min_delay_ms", lit(round).as("round"), $"phase"), round))
@@ -670,13 +527,16 @@ final class CrawlEngine(
     val docsF = timedF("docs")(docsT.append(docsDf.toDF(), round))
     val imagesF = timedF("images")(imagesT.append(imagesDf.toDF(), round))
     val pmF = timedF("partmetrics")(partitionMetricsT.append(partMetrics, round))
+    // settle EVERY commit before surfacing a failure: returning on the
+    // first one would leave sibling appends still writing while the caller
+    // (or the next run's rollbackPartial) rewinds the same tables
+    val window = Seq(seenF, linksF, pdfF, eventsF, hostF, docsF, imagesF, pmF)
+    window.foreach(Await.ready(_, Duration.Inf))
+    window.foreach(Await.result(_, Duration.Inf)) // rethrows the first failure
     val (seenMeta, linksMeta, eventsMeta, docsMeta, pdfMeta) = (
       Await.result(seenF, Duration.Inf), Await.result(linksF, Duration.Inf),
       Await.result(eventsF, Duration.Inf), Await.result(docsF, Duration.Inf),
       Await.result(pdfF, Duration.Inf))
-    Await.result(imagesF, Duration.Inf); Await.result(pmF, Duration.Inf)
-    Await.result(hostF, Duration.Inf)
-    Await.result(bloomF, Duration.Inf)
     lap("commits")
 
     val nNew = seenT.deltaRows(seenMeta) - nExpanded
@@ -700,8 +560,8 @@ final class CrawlEngine(
     // tombstone. maintain() folds dead rows out physically (the amortized
     // place for an O(|frontier|) rewrite); per-generation frontier IO is
     // O(|discoveries|), never O(|frontier|). The discovery not-seen check
-    // rides the POST-commit bloom tier (this generation's delta is already
-    // merged), so it too shuffles O(|maybe|), not O(|seen|).
+    // reads the POST-commit seen table (this generation's delta is already
+    // a bucketed dir of the chain), so it too never exchanges seen.
     if (expandTopK > 0) {
       val seenNowDf = seenT.read(spark).get
       val rawDisc = fetched.select(explode($"out_links").as("url")).distinct()
@@ -744,7 +604,7 @@ final class CrawlEngine(
     rollbackPartial()
     foldFrontier()
     val tables = Seq(seenT, linksT, docsT, imagesT, pdfT, processedT,
-      hostStateT, metricsT, eventsT, frontierT, partitionMetricsT, bloomT)
+      hostStateT, metricsT, eventsT, frontierT, partitionMetricsT)
     tables.map { t =>
       t.compact(spark, targetFileBytes)
       t.name -> t.vacuum(keepSnapshots)

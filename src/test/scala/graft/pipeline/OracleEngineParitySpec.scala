@@ -5,7 +5,7 @@ import graft.oracle.SequentialOracle
 import graft.synth.WebConfig
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The BASELINE.json completeness criteria, verbatim: same seed list +
   * politeness budget ⇒ engine crawl order == oracle order, URL-seen set
@@ -85,10 +85,9 @@ class OracleEngineParitySpec extends AnyFunSuite {
   }
 
   test("over-budget tiers: zero byte budget skips cuckoo builds and bloom broadcast, parity holds") {
-    // tierBroadcastBytes=1 forces the bloom probe join onto the
-    // co-partitioned (non-broadcast) path — the routing tier is an
-    // accelerator, so the exact anti-join must keep the seen set
-    // oracle-equal
+    // tierBroadcastBytes=1 turns every gated broadcast off; the exact
+    // anti-join decides membership on its own, so the seen set stays
+    // oracle-equal, and neither retired tier table is ever written
     val dir = tempDir("overbudget")
     val eng = new CrawlEngine(SparkTestSession.spark, cfg, dir, batchSize,
       tierBroadcastBytes = 1L)
@@ -96,18 +95,27 @@ class OracleEngineParitySpec extends AnyFunSuite {
     assert(eng.seenSet() == oracle.seen)
     assert(eng.crawlOrder() == oracle.crawlOrder)
     assert(eng.cuckooT.currentSnapshot.isEmpty, "no generation may write the retired cuckoo tier")
+    assert(eng.bloomT.currentSnapshot.isEmpty, "no generation may write the retired bloom tier")
   }
 
   test("a store written with host_state.n_scheduled and cuckoo_tier rows resumes to oracle parity") {
     // the shape an engine that still kept the cuckoo hot-host tier left
     // behind: host_state carried a per-host n_scheduled count and
     // cuckoo_tier held per-host filters (here one EMPTY filter claiming
-    // exact negatives for the busiest host). The new engine must read past
-    // both: the extra column is projected away and the tier is never read
+    // exact negatives for the busiest host). An engine that kept the Bloom
+    // tier left bloom_tier behind; here an ALL-ZERO filter per bucket,
+    // with capacity/num_blocks counters big enough that such an engine
+    // would trust it, not rebuild it — it claims every url is new. The
+    // engine must read past all three: the extra column is projected away
+    // and neither tier is ever read. A 3-host web with expansion on makes
+    // later generations meet urls generation 1 already saw, on every
+    // not-in-seen path (search hits, frontier picks, discoveries)
     val spark = SparkTestSession.spark
     import spark.implicits._
+    val denseCfg = WebConfig(seed = 42, nHosts = 3, resultsPerPage = 20, pages = 1)
+    val oracleDense = SequentialOracle.run(denseCfg, seeds, batchSize, expandTopK = 3)
     val dir = tempDir("oldstore")
-    val eng1 = newEngine(dir)
+    val eng1 = new CrawlEngine(spark, denseCfg, dir, batchSize, expandTopK = 3)
     assert(eng1.run(seeds, maxRounds = 1) == 1)
     val seenPerHost = eng1.seenT.read(spark).get.groupBy($"host").count()
     val oldState = eng1.hostStateT.read(spark).get.select($"host", $"next_free_ms")
@@ -117,12 +125,17 @@ class OracleEngineParitySpec extends AnyFunSuite {
     val host = oldState.orderBy($"n_scheduled".desc, $"host").select($"host").as[String].head()
     val cf = graft.operators.CuckooFilter.sized(1024)
     eng1.cuckooT.replace(Seq((host, cf.toBytes, true)).toDF("host", "cf", "cf_exact"), 1)
+    val (bloomBuckets, capacity) = (32, 1L << 20)
+    val nb = graft.operators.BlockedBloom.blocksFor(capacity / bloomBuckets, 12)
+    val zeroBits = new graft.operators.BlockedBloom(new Array[Long](nb * 8), nb, 7).toBytes
+    eng1.bloomT.replace((0 until bloomBuckets).map(b => (b, zeroBits)).toDF("bucket", "bits"), 1,
+      Map("capacity" -> capacity, "num_blocks" -> nb.toLong))
 
-    val eng2 = newEngine(dir)
+    val eng2 = new CrawlEngine(spark, denseCfg, dir, batchSize, expandTopK = 3)
     assert(eng2.hostStateT.read(spark).get.columns.contains("n_scheduled"))
     eng2.run(seeds)
-    assert(eng2.seenSet() == oracle.seen)
-    assert(eng2.crawlOrder() == oracle.crawlOrder)
+    assert(eng2.seenSet() == oracleDense.seen)
+    assert(eng2.crawlOrder() == oracleDense.crawlOrder)
   }
 
   test("runtime semi-filter on the seen side (forced on): parity holds") {
@@ -139,8 +152,8 @@ class OracleEngineParitySpec extends AnyFunSuite {
   }
 
   test("over-budget host tables + expansion: gated broadcasts fall back to plain joins, parity holds") {
-    // tierBroadcastBytes=1 forces EVERY gated broadcast off — bloom tier,
-    // host profiles, host_state, and the expansion path's semi-filter —
+    // tierBroadcastBytes=1 forces EVERY gated broadcast off — host
+    // profiles, host_state, and the expansion path's semi-filter —
     // onto plain key joins; results must be oracle-identical (gates route
     // the plan, never decide membership)
     val oracleExp = SequentialOracle.run(cfg, seeds, batchSize, expandTopK = 3)
@@ -287,7 +300,7 @@ class OracleEngineParitySpec extends AnyFunSuite {
     val eng1 = newEngine(dir)
     eng1.run(seeds, maxRounds = 1)
     assert(eng1.lastCommittedGeneration == 1)
-    // fresh instance (fresh Bloom rebuilt from the seen table) resumes
+    // fresh instance (state read back from the store alone) resumes
     val eng2 = newEngine(dir)
     eng2.run(seeds)
     assert(eng2.seenSet() == oracle.seen)
@@ -308,6 +321,34 @@ class OracleEngineParitySpec extends AnyFunSuite {
     eng2.run(seeds)
     assert(eng2.seenSet() == oracle.seen, "rolled-back partial generation must not leak")
     assert(eng2.crawlOrder() == oracle.crawlOrder)
+  }
+
+  test("a commit that fails in the window: run throws after every sibling settles, resume is oracle-equal") {
+    // seen's generation-2 manifest path is taken by a directory, so its
+    // commit throws after its data is written. run() must surface that
+    // only once every concurrent sibling commit has finished: no table's
+    // current snapshot may move after the throw
+    val dir = tempDir("commitfail")
+    val eng1 = newEngine(dir)
+    assert(eng1.run(seeds, maxRounds = 1) == 1)
+    val plant = Paths.get(dir, "seen", "snapshots",
+      s"snapshot-${eng1.seenT.currentSnapshotId.get + 1}.json")
+    Files.createDirectories(plant)
+    val eng2 = newEngine(dir)
+    intercept[java.io.IOException](eng2.run(seeds))
+    val tables = Seq(eng2.seenT, eng2.linksT, eng2.docsT, eng2.imagesT, eng2.pdfT,
+      eng2.processedT, eng2.hostStateT, eng2.metricsT, eng2.eventsT, eng2.frontierT,
+      eng2.partitionMetricsT)
+    val atThrow = tables.map(_.currentSnapshotId)
+    Thread.sleep(3000)
+    assert(tables.map(_.currentSnapshotId) == atThrow, "a commit landed after run() threw")
+    assert(eng2.lastCommittedGeneration == 1)
+    Files.delete(plant)
+    val eng3 = newEngine(dir)
+    eng3.run(seeds)
+    assert(eng3.seenSet() == oracle.seen)
+    assert(eng3.crawlOrder() == oracle.crawlOrder)
+    assert(eng3.docs().map(_.doc_id).toSet == oracle.docs.map(_.doc_id).toSet)
   }
 
   test("dedup idempotence: re-running the same seeds is a no-op") {

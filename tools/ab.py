@@ -27,9 +27,9 @@ import subprocess
 import sys
 
 
-def run_once(checkout, workload, seed):
+def run_once(checkout, workload, seed, trace=0):
     cmd = [sys.executable, os.path.join(checkout, "perfbench", "run.py"),
-           "--workload", workload, "--seed", str(seed), "--seconds", "10", "--trace", "0"]
+           "--workload", workload, "--seed", str(seed), "--seconds", "10", "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                        text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
