@@ -442,7 +442,7 @@ object TextDedup {
     val ks = deltaKeys.select($"bkey").distinct()
       .limit(PruneMaxKeys + 1).collect().map(_.getLong(0))
     val index =
-      if (ks.length > PruneMaxKeys) indexTable.readCommitChunks(spark).map(_.reduce(_ unionByName _))
+      if (ks.length > PruneMaxKeys) indexTable.read(spark)
       else {
         val occupied = scala.collection.mutable.HashMap.empty[Int, Set[Int]]
         def keep(n: Int, b: Int): Boolean = occupied.getOrElseUpdate(n,

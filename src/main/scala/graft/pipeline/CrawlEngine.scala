@@ -29,12 +29,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale design notes:
   *  - seen membership is ONE exact set, as in the reference
-  *    (crawler.py:30-41): seen is stored bucketed by href, so the
-  *    not-in-seen check is an anti-join chain that reads seen with no
-  *    exchange. No filter tier sits in front of it: a tier could save at
-  *    most that one join pass, and its own probe join and per-generation
-  *    rewrite cost more (matched A/B in BENCH/BASELINE.md). Hot-host skew
-  *    is served by the (host, salt) fetch salting below;
+  *    (crawler.py:30-41): seen is stored bucketed by href and read back
+  *    as one bucketed scan, so the not-in-seen check is a single anti-join
+  *    that reads seen with no exchange. No filter tier sits in front of
+  *    it: a tier could save at most that one join pass, and its own probe
+  *    join and per-generation rewrite cost more (matched A/B in
+  *    BENCH/BASELINE.md). Hot-host skew is served by the (host, salt)
+  *    fetch salting below;
   *  - per-generation totals come from one narrow count job (map-side
   *    partials only) — no O(distinct hosts) or O(|seen|) collect anywhere
   *    in a generation;
@@ -160,52 +161,42 @@ final class CrawlEngine(
 
   /** Exact "not in seen" over the `urlCol` column — the one route for
     * candidate dedup, frontier picks and discovery dedup, and the
-    * membership authority. When the seen table is stored BUCKETED by href
-    * (the default layout — [[graft.snapshot.SnapshotTable.appendBucketed]]),
-    * the join runs as a storage-partitioned anti-join CHAIN: one SMJ anti
-    * per bucketed commit dir, each seen-side scan read bucket-aligned with
-    * NO exchange; the probe side is shuffled to the bucket partitioning
-    * once and the chain reuses it (set difference is associative:
-    * p \ (s₀∪s₁∪…) = ((p \ s₀) \ s₁) \ …). Chain length = bucketed dirs
-    * since the last compaction — [[maintain]]'s compact folds them to one —
-    * and is capped at `maxSeenChainDirs`, past which (or for legacy/mixed
-    * layouts) a single anti-join against `seenDf` is the fallback.
+    * membership authority. Seen is stored BUCKETED by href
+    * ([[graft.snapshot.SnapshotTable.appendBucketed]]) and read back as
+    * ONE bucketed scan over every live commit dir
+    * ([[graft.snapshot.SnapshotTable.readBucketed]]), so the check is a
+    * single SMJ anti whose seen side never exchanges, however many dirs
+    * the snapshot holds; the probe side is shuffled to the bucket
+    * partitioning once. `df` itself when seen is empty.
     *
     * Runtime semi-filter: once seen holds `seenSemiFilterRows` rows (below
     * that the extra bloom job wouldn't pay) and the bloom fits the
     * broadcast budget, the probe side is persisted (into `caches`) and a
-    * one-row bloom aggregated over its `urlCol` is broadcast to every seen
+    * one-row bloom aggregated over its `urlCol` is broadcast to the seen
     * scan, shrinking it to ~|probe| rows before the join (filters preserve
     * the scan's partitioning). `expectedRows` sizes that bloom: undersizing
     * only raises its FP rate. Correctness never depends on it: FPs shuffle,
     * never drop.
     */
-  private val maxSeenChainDirs = 24
   private val semiBloomBitsPerKey = 12
-  private def antiJoinSeen(df: DataFrame, urlCol: String, seenDf: DataFrame, expectedRows: Long,
-                           caches: scala.collection.mutable.ArrayBuffer[Dataset[_]]): DataFrame = {
-    val nbM = BlockedBloom.blocksFor(math.max(1L, expectedRows), semiBloomBitsPerKey)
-    val semiFilter = seenT.currentSnapshot.exists(_.rowCount >= seenSemiFilterRows) &&
-      nbM.toLong * 64 + 64 <= tierBroadcastBytes
-    val probe = if (semiFilter) {
-      val m = df.persist(StorageLevel.MEMORY_AND_DISK)
-      caches += m
-      m
-    } else df
-    lazy val probeBloom = probe.agg(expr(s"bloom_agg(`$urlCol`, $nbM, 7)").as("mbits"))
-    val chunks = seenT.readCommitChunks(spark).getOrElse(Seq.empty)
-    val seenSides =
-      if (chunks.nonEmpty && chunks.size <= maxSeenChainDirs &&
-        seenT.bucketSpec.exists(_._2 == "href")) chunks
-      else Seq(seenDf)
-    seenSides.foldLeft(probe) { (acc, seen) =>
+  private def antiJoinSeen(df: DataFrame, urlCol: String, expectedRows: Long,
+                           caches: scala.collection.mutable.ArrayBuffer[Dataset[_]]): DataFrame =
+    seenT.readBucketed(spark).fold(df) { seen =>
+      val nbM = BlockedBloom.blocksFor(math.max(1L, expectedRows), semiBloomBitsPerKey)
+      val semiFilter = seenT.currentSnapshot.exists(_.rowCount >= seenSemiFilterRows) &&
+        nbM.toLong * 64 + 64 <= tierBroadcastBytes
+      val probe = if (semiFilter) {
+        val m = df.persist(StorageLevel.MEMORY_AND_DISK)
+        caches += m
+        m
+      } else df
       val seenSide = seen.select($"href".as(urlCol))
-      val shrunk = if (!semiFilter) seenSide else seenSide.join(broadcast(probeBloom))
+      val shrunk = if (!semiFilter) seenSide else seenSide
+        .join(broadcast(probe.agg(expr(s"bloom_agg(`$urlCol`, $nbM, 7)").as("mbits"))))
         .filter(expr(s"bloom_might_contain(mbits, `$urlCol`)"))
         .select(col(urlCol))
-      acc.join(shrunk, Seq(urlCol), "left_anti")
+      probe.join(shrunk, Seq(urlCol), "left_anti")
     }
-  }
 
   def lastCommittedGeneration: Int =
     processedT.currentSnapshot.map(_.generation).getOrElse(0)
@@ -228,6 +219,9 @@ final class CrawlEngine(
     */
   def run(seedQueries: Seq[String], maxRounds: Int = Int.MaxValue): Int = {
     rollbackPartial()
+    // a seen table with plain (legacy) or mixed-spec dirs is rewritten
+    // bucketed once, so every not-in-seen check can read it as one scan
+    seenT.heal(spark, seenBuckets, "href")
     var round = lastCommittedGeneration
     var executed = 0
     var remaining = currentRemaining(seedQueries)
@@ -243,13 +237,12 @@ final class CrawlEngine(
     executed
   }
 
-  /** In-run maintenance cadence: the seen chain grows one bucketed dir per
-    * generation, and past [[maxSeenChainDirs]] the exchange-free anti-join
-    * chain silently falls back to the semi-filtered single join — without a
-    * cadence the fast path only survives as long as someone remembers to
-    * call [[maintain]] between crawls. When the chain reaches
-    * `autoMaintainSeenDirs` (0 disables), fold it back to half via
-    * SIZE-TIERED minor compaction ([[graft.snapshot.SnapshotTable
+  /** In-run maintenance cadence: seen grows one bucketed dir per
+    * generation, and each bucket of the seen scan reads one small file per
+    * dir, so without a cadence the file count only stays bounded as long
+    * as someone remembers to call [[maintain]] between crawls. When the
+    * dirs reach `autoMaintainSeenDirs` (0 disables), fold them back to
+    * half via SIZE-TIERED minor compaction ([[graft.snapshot.SnapshotTable
     * .compactTiered]]): only the smallest dirs merge, so a long crawl
     * rewrites a seen row O(log(|seen|/|delta|)) times total instead of
     * re-paying O(|seen|) every cadence tick the way a major fold would —
@@ -328,10 +321,8 @@ final class CrawlEngine(
     // [[antiJoinSeen]] is the one not-in-seen route; the persist keeps the
     // dedup window + anti-join from re-executing for each of newLinks'
     // consumers (relevance gate, pick dedup, seen delta).
-    val newLinks = (seenT.read(spark) match {
-      case None => firstSeen
-      case Some(seenDf) => antiJoinSeen(firstSeen, "href", seenDf, nCandidates, genCaches)
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    val newLinks = antiJoinSeen(firstSeen, "href", nCandidates, genCaches)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // ---- P4: relevance gate (deterministic 2-of-3 vote) ----------------
     val kept = newLinks
@@ -355,18 +346,14 @@ final class CrawlEngine(
       emptyFrontier.select($"url".as("href"), $"host", $"score")
         .persist(StorageLevel.MEMORY_AND_DISK)
     } else {
-      // not-seen = the bucketed exact anti-join chain (never an O(|seen|)
+      // not-seen = the bucketed exact anti-join (never an O(|seen|)
       // shuffle); this generation's own delta (newLinks — not in seen
       // yet) is a second, delta-sized anti-join. The frontier
       // table is a delta log: rows whose url has entered seen are dead and
       // fall out right here (seen-membership is the tombstone; maintain()
       // folds them out physically).
-      val notSeen: DataFrame = seenT.read(spark) match {
-        case None => oldFrontier
-        case Some(seenDf) =>
-          val frontierRows = frontierT.currentSnapshot.map(_.rowCount).getOrElse(1L)
-          antiJoinSeen(oldFrontier, "url", seenDf, frontierRows, genCaches)
-      }
+      val notSeen = antiJoinSeen(oldFrontier, "url",
+        frontierT.currentSnapshot.map(_.rowCount).getOrElse(1L), genCaches)
       val wFrontier = Window.partitionBy($"host").orderBy($"score".desc, $"url")
       notSeen
         .join(newLinks.select($"href".as("url")), Seq("url"), "left_anti")
@@ -561,11 +548,10 @@ final class CrawlEngine(
     // place for an O(|frontier|) rewrite); per-generation frontier IO is
     // O(|discoveries|), never O(|frontier|). The discovery not-seen check
     // reads the POST-commit seen table (this generation's delta is already
-    // a bucketed dir of the chain), so it too never exchanges seen.
+    // a bucketed dir of the scan), so it too never exchanges seen.
     if (expandTopK > 0) {
-      val seenNowDf = seenT.read(spark).get
       val rawDisc = fetched.select(explode($"out_links").as("url")).distinct()
-      val discoveries = antiJoinSeen(rawDisc, "url", seenNowDf, nCandidates, genCaches)
+      val discoveries = antiJoinSeen(rawDisc, "url", nCandidates, genCaches)
         .join(oldFrontier.select($"url"), Seq("url"), "left_anti")
         .withColumn("host", regexp_extract(lower($"url"), "^[a-z][a-z0-9+.-]*://([^/?#]*)", 1))
         .withColumn("score", expr(s"link_score(url, ${webCfg.seed}L)")) // codegen'd, no ScalaUDF

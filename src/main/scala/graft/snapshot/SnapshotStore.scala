@@ -1,7 +1,16 @@
 package graft.snapshot
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, NoopCache, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -101,13 +110,13 @@ final class SnapshotTable(val root: Path, val name: String) {
     commit(df, generation, counters, replace = true, bucketed = None)
 
   /** Append commit whose data files are STORAGE-BUCKETED: rows are hash-
-    * partitioned on `bucketCol` into `buckets` files, written through
-    * Spark's bucketed-table writer so each file carries its bucket id in
-    * its name, and the spec is recorded in the manifest ([[SnapshotMeta]]
-    * `dirBuckets`). [[readCommitChunks]] then reconstructs scans whose
-    * `outputPartitioning` Catalyst TRUSTS — a join keyed on `bucketCol`
-    * reads this side with no Exchange (the Iceberg storage-partitioned-
-    * join shape, SURVEY §4.3). `bucketCol` must be a stored column
+    * partitioned on `bucketCol` into `buckets` files, each file's bucket
+    * id is stamped into its name, and the spec is recorded in the
+    * manifest ([[SnapshotMeta]] `dirBuckets`). [[readBucketed]] then
+    * reconstructs a scan whose `outputPartitioning` Catalyst TRUSTS — a
+    * join keyed on `bucketCol` reads this side with no Exchange (the
+    * Iceberg storage-partitioned-join shape, SURVEY §4.3). `bucketCol`
+    * must be a stored column
     * (typically a persisted xxhash64 of the logical key so probe sides can
     * recompute it).
     */
@@ -196,7 +205,7 @@ final class SnapshotTable(val root: Path, val name: String) {
 
   /** The single storage-bucket spec of the CURRENT snapshot, when every
     * data dir was bucketed with the same (buckets, col) — the condition
-    * under which a chunk chain shares one probe-side exchange.
+    * under which [[readBucketed]] can scan the table as one relation.
     */
   def bucketSpec: Option[(Int, String)] = currentSnapshot.flatMap { cur =>
     val dirs = cur.files.map(f => Paths.get(f.path).getParent.getFileName.toString).distinct
@@ -210,89 +219,40 @@ final class SnapshotTable(val root: Path, val name: String) {
     }
   }
 
-  /** Current data as one DataFrame PER COMMIT DIR, each reconstructed with
-    * its storage bucketing where the manifest records one ([[SnapshotMeta]]
-    * `dirBuckets`): the scan of a bucketed dir reports
-    * `HashPartitioning(bucketCol, n)`, so joins keyed on the bucket column
-    * need NO exchange on that side. Dirs without a recorded spec fall back
-    * to plain scans (correct, just exchange-paying). None when the table is
-    * empty. Chunk order: oldest dir first.
+  /** The current snapshot as ONE bucketed scan over every live commit dir:
+    * a file relation whose index is rooted at the dirs and whose bucket
+    * spec is the table's, so the scan reports `HashPartitioning(bucketCol,
+    * n)` across all dirs at once — a join keyed on the bucket column reads
+    * this side with NO exchange however many dirs the snapshot holds, and
+    * a filter on it prunes buckets. Bucket ids come from the stamped file
+    * names, so each bucket's task reads that bucket's file from every dir.
+    * Nothing is registered in the session catalog; the index lists the
+    * dirs afresh on every call (no shared file-status cache: a rollback
+    * followed by a re-commit reuses an `s<id>` dir name). No sort columns
+    * are claimed: the writer repartitions but does not sort. None when the
+    * table is empty; throws when the dirs do not share one spec — [[heal]]
+    * first.
     */
-  def readCommitChunks(spark: SparkSession): Option[Seq[DataFrame]] =
+  def readBucketed(spark: SparkSession): Option[DataFrame] =
     currentSnapshot.filter(_.files.nonEmpty).map { cur =>
-      val reg = cur.dirBuckets.getOrElse(Map.empty)
-      cur.files.groupBy(f => Paths.get(f.path).getParent).toSeq
-        .sortBy(_._1.getFileName.toString.stripPrefix("s").toLong)
-        .map { case (dir, files) =>
-          reg.get(dir.getFileName.toString) match {
-            case Some(spec) =>
-              val Array(n, bc) = spec.split(":", 2)
-              bucketedScan(spark, dir, n.toInt, bc)
-            case None => spark.read.parquet(files.map(_.path): _*)
-          }
-        }
+      val (n, bc) = bucketSpec.getOrElse(throw new IllegalStateException(
+        s"table $name: commit dirs do not share one bucket spec (${cur.dirBuckets}); rebucket it"))
+      val dirs = cur.files.map(f => Paths.get(f.path).getParent).distinct
+      val index = new InMemoryFileIndex(spark, dirs.map(d => new HPath(d.toString)), Map.empty,
+        None, NoopCache, Some(PartitionSpec.emptySpec))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+        parquetSchema(Paths.get(cur.files.head.path)), Some(BucketSpec(n, Seq(bc), Nil)),
+        new ParquetFileFormat(), Map.empty)(spark))
     }
 
-  /** Register-and-scan a bucketed data dir through the session catalog:
-    * CREATE TABLE ... CLUSTERED BY is the only public surface through
-    * which a file scan reports bucket partitioning. The table is EXTERNAL
-    * (LOCATION) — drop never touches data files — and re-created on every
-    * call so the file listing is never stale across commits/rollbacks that
-    * reuse a dir name.
+  /** Rewrite the table bucketed (`buckets`, `bucketCol`) unless it already
+    * is: the self-heal for a table whose dirs carry mixed or stale specs
+    * (a restart with a different bucket count, or plain commits from
+    * before the table was bucketed). No-op on an empty or healthy table.
     */
-  // Bounded LRU, not a bare map: a long crawl's compaction cadence mints a
-  // NEW key per (dir, listing) on every fold/vacuum, and an unbounded cache
-  // retains every stale analyzed DataFrame (file index included) plus its
-  // orphaned graft_b_* catalog registration for the life of a driver that
-  // is designed to run 10^10-row crawls. 64 entries cover any live chain
-  // (the compaction cadences cap chains at ~24 dirs); eviction DROPs the
-  // catalog table — safe for still-live DataFrames, which hold their
-  // resolved relation and never re-consult the catalog.
-  private val bucketedScanCache =
-    new java.util.LinkedHashMap[String, (String, SparkSession, DataFrame)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, SparkSession, DataFrame)]): Boolean =
-        if (size > 64) {
-          val (ident, sess, _) = e.getValue
-          try { if (!sess.sparkContext.isStopped) sess.sql(s"DROP TABLE IF EXISTS `$ident`") }
-          catch { case _: Exception => () }
-          true
-        } else false
-    }
-
-  private def bucketedScan(spark: SparkSession, dir: Path, n: Int, bc: String): DataFrame = {
-    // committed dirs are immutable, so a registration is reusable for the
-    // table's lifetime — keyed by the dir's current file listing so a
-    // rollback-then-recommit that reuses the dir NAME with different files
-    // re-registers (DROP first) instead of serving a stale catalog listing.
-    // Without the cache every generation pays footer-read + DDL per dir per
-    // read site. The session lives in the VALUE and is compared by eq —
-    // identityHashCode alone can be reused by the GC for a new session,
-    // which must not be served a dead session's DataFrame.
-    val listing = listParquet(dir).map(_.getFileName.toString).mkString(",")
-    val key = s"${System.identityHashCode(spark)}#$dir#$n#$bc#${listing.hashCode}"
-    bucketedScanCache.synchronized {
-      val hit = bucketedScanCache.get(key)
-      if (hit != null && (hit._2 eq spark)) hit._3
-      else {
-        val ident = s"graft_b_${name}_${dir.getFileName}_" +
-          java.lang.Integer.toHexString(dir.toString.hashCode)
-        val schemaDdl = spark.read.parquet(dir.toString).schema.toDDL
-        spark.sql(s"DROP TABLE IF EXISTS `$ident`")
-        // CLUSTERED only — no SORTED BY: the bucketed writer repartitions
-        // but does NOT sort within files, and a sort claim the data doesn't
-        // honour becomes silent SMJ corruption the moment anyone enables
-        // spark.sql.legacy.bucketedTableScan.outputOrdering (off by
-        // default, which is the only reason the claim was inert). The
-        // exchange-free join shape needs only the bucketing.
-        spark.sql(s"CREATE TABLE `$ident` ($schemaDdl) USING parquet " +
-          s"CLUSTERED BY (`$bc`) INTO $n BUCKETS LOCATION '$dir'")
-        val df = spark.table(ident)
-        bucketedScanCache.put(key, (ident, spark, df))
-        df
-      }
-    }
-  }
+  def heal(spark: SparkSession, buckets: Int, bucketCol: String): Option[SnapshotMeta] =
+    if (bucketSpec.contains((buckets, bucketCol))) None
+    else rebucket(spark, buckets, bucketCol)
 
   /** Bucket id stamped in a bucketed data file's name (the `_NNNNN` suffix
     * [[appendBucketed]]'s rename puts before the extension). None for files
@@ -317,7 +277,7 @@ final class SnapshotTable(val root: Path, val name: String) {
     * manifest alone, so a probe that knows its occupied buckets reads
     * O(occupied/total) of the table with ZERO plan-side cost (no thousand-
     * literal `IN` for Catalyst to fold or parquet to stat-check; contrast
-    * the [[readCommitChunks]] + `isInCollection` route, whose planning cost
+    * the [[readBucketed]] + `isInCollection` route, whose planning cost
     * grows with the key-list size). `bucketCol` names the column the
     * caller's keys hash: dirs bucketed on ANY OTHER column are always kept
     * in full — pruning them by ids routed under a different column's hash
@@ -326,7 +286,7 @@ final class SnapshotTable(val root: Path, val name: String) {
     * was skipped (the caller supplies the empty-case plan).
     *
     * The scan does NOT report bucket partitioning (it is a plain
-    * `spark.read.parquet` over the kept paths) — use [[readCommitChunks]]
+    * `spark.read.parquet` over the kept paths) — use [[readBucketed]]
     * when a downstream join needs the exchange-free bucketed shape.
     */
   def readBucketSkipped(spark: SparkSession, bucketCol: String,
@@ -347,8 +307,8 @@ final class SnapshotTable(val root: Path, val name: String) {
     }
 
   /** Number of live commit dirs in the current snapshot (manifest-only —
-    * no file IO, no Spark job). This is the anti-join chain length a
-    * chunked reader pays, and the signal [[compactTiered]] bounds.
+    * no file IO, no Spark job). Each bucket of a [[readBucketed]] scan
+    * reads one file per dir, and [[compactTiered]] bounds this count.
     */
   def commitDirCount: Int =
     currentSnapshot.map(_.files.map(f => Paths.get(f.path).getParent).distinct.size).getOrElse(0)
@@ -415,12 +375,11 @@ final class SnapshotTable(val root: Path, val name: String) {
     }
 
   /** MAJOR rebucketing pass: rewrite the whole table as ONE dir bucketed
-    * (`buckets`, `bucketCol`) — the self-heal for a chain whose dirs carry
+    * (`buckets`, `bucketCol`) — the self-heal ([[heal]]) for dirs that carry
     * MIXED or stale specs (a restart with a different bucket count, or
     * plain commits from before a table was bucketed), states in which
-    * [[bucketSpec]] is None/stale and every spec-dependent path — the
-    * tiered fold, storage-aligned chain joins, file skips — silently
-    * degrades. Rows and generation are preserved; only the layout moves.
+    * [[bucketSpec]] is None/stale: [[readBucketed]] refuses the table and
+    * the tiered fold and file skips silently degrade. Rows and generation are preserved; only the layout moves.
     * No-op on an empty table.
     */
   def rebucket(spark: SparkSession, buckets: Int, bucketCol: String): Option[SnapshotMeta] =
@@ -439,9 +398,9 @@ final class SnapshotTable(val root: Path, val name: String) {
     * rewrites the full base each time, while smallest-first merging rewrites
     * a row O(log(|table|/|delta|)) times over its life — the standard
     * size-tiered write-amplification bound. Rows, bucketing (same
-    * `repartition(n, col)` the chain reader assumes) and the manifest
-    * registry are preserved; only dir boundaries move, so any consumer of
-    * [[readCommitChunks]] sees the same union. No-op (None) when the table
+    * `repartition(n, col)` the bucketed reader assumes) and the manifest
+    * registry are preserved; only dir boundaries move, so a
+    * [[readBucketed]] scan reads the same rows. No-op (None) when the table
     * is not uniformly bucketed or the chain is already within bounds.
     */
   def compactTiered(spark: SparkSession, targetDirs: Int): Option[SnapshotMeta] = {
@@ -509,14 +468,24 @@ final class SnapshotTable(val root: Path, val name: String) {
   private def listParquet(dir: Path): List[Path] =
     listDir(dir).filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
 
+  private def openFooter(p: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(p.toString), new Configuration()))
+
   /** Row count from the parquet footer (no data read). */
   private def parquetRows(p: Path): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.hadoop.conf.Configuration
-    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), new Configuration())
-    val r = ParquetFileReader.open(in)
+    val r = openFooter(p)
     try r.getRecordCount finally r.close()
+  }
+
+  /** Spark schema from one file's footer, read on the driver: inferring
+    * it through `spark.read` would run a Spark job per scan built. Columns
+    * are made nullable, as a `spark.read` relation makes them.
+    */
+  private def parquetSchema(p: Path): StructType = {
+    val r = openFooter(p)
+    val s = try ParquetFileFormat.readSchemaFromFooter(new Footer(new HPath(p.toString), r.getFooter),
+      new ParquetToSparkSchemaConverter(SQLConf.get)) finally r.close()
+    StructType(s.fields.map(_.copy(nullable = true)))
   }
 }
 

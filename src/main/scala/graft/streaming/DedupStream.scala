@@ -108,12 +108,8 @@ object DedupStream {
     // with a different bucket count (or pre-bucketing history) would
     // otherwise create mixed-spec chains, silently disabling the tiered
     // fold and the file skip for the stream's whole lifetime
-    def heal(t: SnapshotTable, bc: String): Unit =
-      if (t.currentSnapshot.exists(_.files.nonEmpty) &&
-        !t.bucketSpec.contains((indexBuckets, bc)))
-        t.rebucket(spark, indexBuckets, bc): Unit
-    heal(indexTable, "bkey")
-    redirectsTable.foreach(heal(_, "doc_id"))
+    indexTable.heal(spark, indexBuckets, "bkey")
+    redirectsTable.foreach(_.heal(spark, indexBuckets, "doc_id"))
     spark.readStream.schema("doc_id BIGINT, text STRING")
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
       .writeStream
@@ -257,9 +253,11 @@ object DedupStream {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
+      // the pool is cleared on exit: the thread belongs to the global
+      // pool and is reused by unrelated futures
       def pooled[T](pool: String)(body: => T): Future[T] = Future {
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-        body
+        try body finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
       }
       val idxF = if (!needIndex) Future.successful(()) else pooled("commit-index") {
         // reuse the candidate generator's materialized band rows; recompute
@@ -272,8 +270,12 @@ object DedupStream {
       val corpF = if (!needCorpus) Future.successful(()) else pooled("commit-corpus") {
         timed("corpusAppend")(corpusTable.append(delta, generation = gen))
       }
-      Await.result(idxF, Duration.Inf)
-      Await.result(corpF, Duration.Inf): Unit
+      // settle BOTH appends before surfacing a failure: returning on the
+      // index's would leave the corpus append writing while the caller
+      // replays the batch
+      val window = Seq(idxF, corpF)
+      window.foreach(Await.ready(_, Duration.Inf))
+      window.foreach(Await.result(_, Duration.Inf)) // rethrows the first failure
     }
     if (autoCompactDirs > 0) {
       if (indexTable.commitDirCount >= autoCompactDirs)

@@ -199,18 +199,18 @@ class PlanSpec extends AnyFunSuite {
   private def tempDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
 
-  test("seen anti-join reads the bucketed store with NO exchange on the seen side") {
-    import graft.pipeline.CrawlEngine
-    import graft.synth.WebConfig
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    // static plans (no AQE re-plan) + no size-based auto-broadcast: the only
-    // way the anti-join's seen side avoids an exchange is the STORAGE
-    // bucketing the snapshot layer reconstructs
+  /** Executed plans of every query `body` runs, planned statically (no AQE
+    * re-plan) and with no size-based auto-broadcast: the only way an
+    * anti-join's seen side avoids an exchange is then the STORAGE
+    * bucketing the snapshot layer reconstructs. Plans inside persisted
+    * relations are expanded, since `collect` does not descend into them.
+    */
+  private def staticPlans(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val beforeAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val beforeBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val plans = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.execution.SparkPlan]
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
@@ -224,43 +224,97 @@ class PlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.listenerManager.register(listener)
     try {
-      // 2 generations: generation 2's candidate dedup anti-joins the seen
-      // rows generation 1 committed (bucketed by href)
-      val eng = new CrawlEngine(spark, WebConfig(seed = 42, nHosts = 30, resultsPerPage = 6),
-        tempDir("bucketed-seen"), batchSize = 2)
-      eng.run((1 to 4).map(i => s"singapore topic $i query"))
+      body
       var last = -1; var stable = 0
       while (stable < 3) {
         Thread.sleep(300)
         val n = plans.synchronized(plans.size)
         if (n == last) stable += 1 else { stable = 0; last = n }
       }
-      // the anti-join sits inside newLinks' persisted InMemoryRelation —
-      // plan.collect does not descend into cached plans, so expand them
-      import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-      def expand(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] =
-        p.collect { case n => n }.flatMap {
-          case imts: InMemoryTableScanExec => imts +: expand(imts.relation.cachedPlan)
-          case n => Seq(n)
-        }
-      val aligned = plans.synchronized(plans.exists(p => expand(p).exists {
-        case j: SortMergeJoinExec if j.joinType.sql == "LEFT ANTI" =>
-          val seenScans = j.right.collect {
-            case s: FileSourceScanExec
-              if s.tableIdentifier.exists(_.table.startsWith("graft_b_seen")) => s
-          }
-          val exchanges = j.right.collect { case e: ShuffleExchangeExec => e }
-          seenScans.nonEmpty && seenScans.forall(_.bucketedScan) && exchanges.isEmpty
-        case _ => false
-      }))
-      assert(aligned, "expected at least one LEFT ANTI SortMergeJoin whose seen side is a " +
-        "bucketed graft_b_seen scan with zero shuffle exchanges below it")
     } finally {
       spark.listenerManager.unregister(listener)
       spark.conf.set("spark.sql.adaptive.enabled", beforeAqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", beforeBc)
     }
+    def expand(p: SparkPlan): Seq[SparkPlan] =
+      p.collect { case n => n }.flatMap {
+        case imts: InMemoryTableScanExec => imts +: expand(imts.relation.cachedPlan)
+        case n => Seq(n)
+      }
+    plans.synchronized(plans.toList).flatMap(expand)
+  }
+
+  /** LEFT ANTI sort-merge joins whose right side reads the seen table
+    * stored under `storeDir`, each with those seen scans (found by their
+    * root paths) and the shuffle exchanges on that side.
+    */
+  private def seenAntiJoins(nodes: Seq[org.apache.spark.sql.execution.SparkPlan], storeDir: String)
+  : Seq[(Seq[org.apache.spark.sql.execution.FileSourceScanExec], Int)] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val seenData = java.nio.file.Paths.get(storeDir, "seen", "data").toUri.getPath
+    nodes.collect {
+      case j: SortMergeJoinExec if j.joinType.sql == "LEFT ANTI" =>
+        val seenScans = j.right.collect {
+          case s: FileSourceScanExec
+            if s.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(seenData)) => s
+        }
+        (seenScans, j.right.collect { case e: ShuffleExchangeExec => e }.size)
+    }.filter(_._1.nonEmpty)
+  }
+
+  test("seen anti-join reads the bucketed store with NO exchange on the seen side") {
+    import graft.pipeline.CrawlEngine
+    import graft.synth.WebConfig
+    // 2 generations: generation 2's candidate dedup anti-joins the seen
+    // rows generation 1 committed (bucketed by href)
+    val dir = tempDir("bucketed-seen")
+    val nodes = staticPlans {
+      new CrawlEngine(spark, WebConfig(seed = 42, nHosts = 30, resultsPerPage = 6),
+        dir, batchSize = 2).run((1 to 4).map(i => s"singapore topic $i query"))
+    }
+    val aligned = seenAntiJoins(nodes, dir).exists { case (scans, exchanges) =>
+      scans.forall(_.bucketedScan) && exchanges == 0
+    }
+    assert(aligned, "expected at least one LEFT ANTI SortMergeJoin whose seen side is a " +
+      "bucketed scan of <store>/seen/data with zero shuffle exchanges below it")
+  }
+
+  test("seen anti-join at 30+ commit dirs: one bucketed seen scan, no exchange, no catalog table") {
+    import graft.pipeline.CrawlEngine
+    import graft.oracle.SequentialOracle
+    import graft.snapshot.SnapshotStore
+    import graft.synth.WebConfig
+    import spark.implicits._
+    // 30 bucketed seen dirs at generation 0 (kept by the resume rollback)
+    // hold hrefs the synthetic web never produces; with the cadence off,
+    // every generation's not-in-seen check meets all of them
+    val dir = tempDir("seen-30dirs")
+    val seenT = SnapshotStore(dir).table("seen")
+    val planted = (0 until 30).flatMap { d =>
+      val rows = (0 until 20).map(i => (s"https://planted.invalid/d$d/p$i", "planted.invalid"))
+      seenT.appendBucketed(rows.toDF("href", "host"), 0, 8, "href")
+      rows.map(_._1)
+    }.toSet
+    assert(seenT.commitDirCount == 30)
+    val cfg = WebConfig(seed = 42, nHosts = 30, resultsPerPage = 6)
+    val seeds = (1 to 4).map(i => s"singapore topic $i query")
+    val eng = new CrawlEngine(spark, cfg, dir, batchSize = 2, autoMaintainSeenDirs = 0)
+    val nodes = staticPlans(eng.run(seeds))
+    val joins = seenAntiJoins(nodes, dir)
+    assert(joins.nonEmpty, "no LEFT ANTI SortMergeJoin against seen was planned")
+    joins.foreach { case (scans, exchanges) =>
+      assert(scans.size == 1, s"expected ONE seen scan below the anti-join, got ${scans.size}")
+      assert(scans.head.bucketedScan, "the seen scan must be bucketed")
+      assert(exchanges == 0, s"$exchanges shuffle exchange(s) on the seen side")
+    }
+    assert(eng.seenT.commitDirCount >= 32, "the cadence must not have folded the dirs")
+    val graftTables = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_b_"))
+    assert(graftTables.isEmpty, s"session catalog holds ${graftTables.mkString(", ")}")
+    val oracle = SequentialOracle.run(cfg, seeds, 2)
+    assert(eng.seenSet() -- planted == oracle.seen)
+    assert(eng.crawlOrder() == oracle.crawlOrder)
   }
 
   test("band-index prune: bkey IN pushes into the bucket-stored index scan (bucket-pruned)") {
@@ -274,8 +328,8 @@ class PlanSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet").select(col("doc_id"), col("text"))
     idxT.appendBucketed(TextDedup.bandIndexOf(docs), generation = 1,
       buckets = 8, bucketCol = "bkey")
-    val chunks = idxT.readCommitChunks(spark).getOrElse(fail("no index chunks"))
-    val keys = chunks.head.select(col("bkey")).distinct().limit(2)
+    val index = idxT.readBucketed(spark).getOrElse(fail("no index scan"))
+    val keys = index.select(col("bkey")).distinct().limit(2)
       .collect().map(_.getLong(0)).toSeq
     // a filter-only probe doesn't NEED the bucket partitioning, so Spark's
     // DisableUnnecessaryBucketedScan would hide the pruning metadata; pin
@@ -283,7 +337,7 @@ class PlanSpec extends AnyFunSuite {
     val before = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val plan = try {
-      val pruned = chunks.map(_.where(col("bkey").isInCollection(keys))).reduce(_ unionByName _)
+      val pruned = index.where(col("bkey").isInCollection(keys))
       pruned.collect()
       pruned.queryExecution.executedPlan.toString
     } finally spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", before)

@@ -138,6 +138,33 @@ class OracleEngineParitySpec extends AnyFunSuite {
     assert(eng2.crawlOrder() == oracleDense.crawlOrder)
   }
 
+  test("a legacy seen table (a plain commit, then bucketed ones) heals on resume to oracle parity") {
+    // the layout a store written before seen was bucketed leaves behind:
+    // generation 1's seen rows split over one PLAIN commit dir followed by
+    // two bucketed ones. Such a table has no single bucket spec, so run()
+    // must rewrite it bucketed once before any not-in-seen check reads it
+    val spark = SparkTestSession.spark
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val dir = tempDir("legacy-seen")
+    val eng1 = newEngine(dir)
+    assert(eng1.run(seeds, maxRounds = 1) == 1)
+    val gen1 = eng1.seenT.read(spark).get
+    val seenBefore = eng1.seenSet()
+    val (n, _) = eng1.seenT.bucketSpec.get
+    def third(k: Int) = gen1.filter(pmod(xxhash64(col("href")), lit(3)) === k)
+    eng1.seenT.replace(third(0), 1)
+    eng1.seenT.appendBucketed(third(1), 1, n, "href")
+    eng1.seenT.appendBucketed(third(2), 1, n, "href")
+    assert(eng1.seenT.bucketSpec.isEmpty && eng1.seenT.commitDirCount == 3,
+      "fixture must be a plain dir followed by bucketed ones")
+    assert(eng1.seenSet() == seenBefore)
+    val eng2 = newEngine(dir)
+    eng2.run(seeds)
+    assert(eng2.seenT.bucketSpec.contains((n, "href")), "resume must heal seen to one bucket spec")
+    assert(eng2.seenSet() == oracle.seen)
+    assert(eng2.crawlOrder() == oracle.crawlOrder)
+  }
+
   test("runtime semi-filter on the seen side (forced on): parity holds") {
     // seenSemiFilterRows=1 forces the maybe-bloom reduction of the anti-
     // join's seen side in every generation after the first — the seen set

@@ -83,29 +83,29 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(m2.dirBuckets.contains(Map("s0" -> "4:h", "s1" -> "4:h")))
     assert(t.bucketSpec.contains((4, "h")))
 
-    // chunked read: one chunk per commit dir, each reporting bucketing —
-    // a self-join on the bucket column plans with NO exchange on that side
-    val chunks = t.readCommitChunks(spark).get
-    assert(chunks.size == 2)
-    assert(chunks.map(_.count()).sum == 200)
+    // bucketed read: ONE scan over both commit dirs reporting the bucketing
+    // — a self-join on the bucket column plans with NO exchange on either
+    // side
+    val scan = t.readBucketed(spark).get
+    assert(scan.count() == 200)
     assert(t.read(spark).get.count() == 200, "plain read still works on bucketed dirs")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
       // join keys == bucket columns exactly: Spark requires ALL cluster
       // keys to match the bucket spec for co-partitioning
-      val joined = chunks.head.as("a").join(chunks.head.as("b"), Seq("h"))
+      val joined = scan.as("a").join(scan.as("b"), Seq("h"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucket-aligned self-join must plan zero shuffle exchanges:\n$plan")
-      assert(joined.count() == 100)
+      assert(joined.count() == 200)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
 
     // compact folds the dirs but PRESERVES the bucket layout
     val mc = t.compact(spark).get
     assert(mc.files.size == 4 && mc.rowCount == 200)
     assert(t.bucketSpec.contains((4, "h")))
-    assert(t.readCommitChunks(spark).get.size == 1)
+    assert(t.commitDirCount == 1 && t.readBucketed(spark).get.count() == 200)
     assert(t.read(spark).get.select("id").as[Long].collect().toSet ==
       ((1 to 100).map(i => 1000L + i) ++ (1 to 100).map(i => 2000L + i)).toSet)
     // compacted bucketed table: no-op
@@ -170,15 +170,23 @@ class SnapshotStoreSpec extends AnyFunSuite {
     t.appendBucketed((11 to 20).map(_.toLong).toDF("id")
       .select(xxhash64(col("id")).as("h"), col("id")), 2, buckets = 4, bucketCol = "h")
     assert(t.bucketSpec.isEmpty, "mixed dirs must not claim a uniform bucket spec")
-    val chunks = t.readCommitChunks(spark).get
-    assert(chunks.size == 2 && chunks.map(_.count()).sum == 20)
+    // no bucketed scan of a mixed table: it must be healed first
+    intercept[IllegalStateException](t.readBucketed(spark))
     // rebucket: the mixed chain heals to ONE uniformly bucketed dir; rows,
     // generation and counters preserved
     val before = t.read(spark).get.as[(Long, Long)].collect().toSet
     val gen = t.currentSnapshot.get.generation
     val m = t.rebucket(spark, 4, "h").get
     assert(t.bucketSpec.contains((4, "h")) && m.generation == gen)
-    assert(t.readCommitChunks(spark).get.size == 1)
+    val healed = t.readBucketed(spark).get
+    val relations = healed.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }
+    assert(relations.size == 1, s"expected ONE scan, got $relations")
+    assert(relations.collect {
+      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation => r.bucketSpec
+    } == Seq(Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(4, Seq("h"), Nil))))
+    assert(healed.as[(Long, Long)].collect().toSet == before)
     assert(t.read(spark).get.as[(Long, Long)].collect().toSet == before)
   }
 
@@ -199,11 +207,10 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val liveDirs = m.files
       .map(f => java.nio.file.Paths.get(f.path).getParent.getFileName.toString).toSet
     assert(liveDirs == Set("s0", "s4", "s5"), s"got $liveDirs")
-    // layout survives: uniform spec, every dir registered, chunk union equal
+    // layout survives: uniform spec, every dir registered, one scan reads every row
     assert(t.bucketSpec.contains((4, "h")))
     assert(m.dirBuckets.get.keySet == liveDirs)
-    val chunks = t.readCommitChunks(spark).get
-    assert(chunks.size == 3 && chunks.map(_.count()).sum == sizes.sum)
+    assert(t.readBucketed(spark).get.count() == sizes.sum)
     assert(t.read(spark).get.select("id").as[Long].collect().toSet == all)
     // within bounds → no-op; plain (unbucketed) table → no-op
     assert(t.compactTiered(spark, 3).isEmpty)

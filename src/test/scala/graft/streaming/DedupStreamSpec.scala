@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkTestSession
 import graft.ml.TextDedup
-import graft.snapshot.SnapshotStore
+import graft.snapshot.{SnapshotStore, SnapshotTable}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -163,6 +163,51 @@ class DedupStreamSpec extends AnyFunSuite {
     val view = DedupStream.latestRedirects(spark, redirT)
       .select($"doc_id", $"survivor_id", $"kept").as[(Long, Long, Boolean)].collect().toSet
     assert(view == Set((0L, 0L, true), (1000L, 0L, false)))
+  }
+
+  test("an index append that fails in the commit window: commitBatch throws after the corpus append settles, replay equals the uninjected drain") {
+    // the index's next manifest path is taken by a directory, so its append
+    // throws after its data is written while the corpus append runs beside
+    // it. commitBatch must surface that only once the corpus append has
+    // finished: the corpus snapshot may not move after the throw
+    def tables(tag: String) = {
+      val store = SnapshotStore(Files.createTempDirectory(s"graft-dstream-$tag").toString)
+      (store.table("corpus"), store.table("near_dup_pairs"), store.table("band_index"),
+        store.table("redirects"))
+    }
+    val b0 = (0 until 20).map(i => (i.toLong, doc(200 + i))).toDF("doc_id", "text")
+    val b1 = ((20 until 40).map(i => (i.toLong, doc(200 + i))) ++
+      Seq((1000L, doc(200) + " zzz"), (1025L, doc(225) + " zzz"))).toDF("doc_id", "text")
+    def drain(t: (SnapshotTable, SnapshotTable, SnapshotTable, SnapshotTable),
+              batches: Seq[DataFrame]): Unit =
+      batches.zipWithIndex.foreach { case (b, i) =>
+        DedupStream.commitBatch(spark, t._1, t._2, t._3, b, batchId = i.toLong,
+          threshold = 0.8, redirectsTable = Some(t._4))
+      }
+    def state(t: (SnapshotTable, SnapshotTable, SnapshotTable, SnapshotTable)) = (
+      t._1.read(spark).get.select($"doc_id").as[Long].collect().sorted.toSeq,
+      pairSet(t._2.read(spark).get),
+      t._3.read(spark).get.select($"id", $"band", $"bkey").as[(Long, Int, Long)].collect().toSet,
+      DedupStream.latestRedirects(spark, t._4).as[(Long, Long, Boolean)].collect().toSet)
+
+    val clean = tables("window-clean")
+    drain(clean, Seq(b0, b1))
+    val injected = tables("window-fail")
+    val (corpusT, _, indexT, _) = injected
+    drain(injected, Seq(b0))
+    val plant = indexT.root.resolve("band_index").resolve("snapshots")
+      .resolve(s"snapshot-${indexT.currentSnapshotId.get + 1}.json")
+    Files.createDirectories(plant)
+    intercept[java.io.IOException](DedupStream.commitBatch(spark, injected._1, injected._2,
+      indexT, b1, batchId = 1L, threshold = 0.8, redirectsTable = Some(injected._4)))
+    val atThrow = corpusT.currentSnapshotId
+    Thread.sleep(3000)
+    assert(corpusT.currentSnapshotId == atThrow, "the corpus append landed after commitBatch threw")
+    Files.delete(plant)
+    DedupStream.commitBatch(spark, injected._1, injected._2, indexT, b1, batchId = 1L,
+      threshold = 0.8, redirectsTable = Some(injected._4))
+    assert(state(injected) == state(clean))
+    assert(state(clean)._2.nonEmpty, "fixture must produce pairs")
   }
 
   test("compactRedirects folds latest-wins history to one row per doc; the stream keeps working after") {
