@@ -37,8 +37,8 @@ object Bench {
       .config("spark.sql.shuffle.partitions", (mult * cores).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the commit window runs ~10 concurrent write jobs; FIFO lets one
-      // job hog all task slots and serializes the window tail
+      // a generation's commit window runs eight concurrent write jobs;
+      // FIFO lets one job hog all task slots and serializes the window tail
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.model._
 import graft.operators.BlockedBloom
 import graft.oracle.SequentialOracle
-import graft.snapshot.{SnapshotStore, SnapshotTable}
+import graft.snapshot.{CommitWindow, SnapshotStore, SnapshotTable}
 import graft.synth.{SyntheticWeb, WebConfig}
 import graft.functions.{Predicates, SpanExtractor, UrlFunctions}
 
@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable.ArrayBuffer
 
 /** The Spark-native crawl frontier + fetch scheduler (SURVEY §3.4). One
   * generation = one declarative DAG:
@@ -180,16 +182,12 @@ final class CrawlEngine(
     */
   private val semiBloomBitsPerKey = 12
   private def antiJoinSeen(df: DataFrame, urlCol: String, expectedRows: Long,
-                           caches: scala.collection.mutable.ArrayBuffer[Dataset[_]]): DataFrame =
+                           caches: ArrayBuffer[Dataset[_]]): DataFrame =
     seenT.readBucketed(spark).fold(df) { seen =>
       val nbM = BlockedBloom.blocksFor(math.max(1L, expectedRows), semiBloomBitsPerKey)
       val semiFilter = seenT.currentSnapshot.exists(_.rowCount >= seenSemiFilterRows) &&
         nbM.toLong * 64 + 64 <= tierBroadcastBytes
-      val probe = if (semiFilter) {
-        val m = df.persist(StorageLevel.MEMORY_AND_DISK)
-        caches += m
-        m
-      } else df
+      val probe = if (semiFilter) cached(df, caches) else df
       val seenSide = seen.select($"href".as(urlCol))
       val shrunk = if (!semiFilter) seenSide else seenSide
         .join(broadcast(probe.agg(expr(s"bloom_agg(`$urlCol`, $nbM, 7)").as("mbits"))))
@@ -268,24 +266,27 @@ final class CrawlEngine(
     seedQueries.iterator.map(_.trim).filter(_.nonEmpty).filterNot(processed).toVector
   }
 
+  /** Persist `ds` and register it in `caches`, which the generation
+    * unpersists on its way out.
+    */
+  private def cached[T](ds: Dataset[T], caches: ArrayBuffer[Dataset[_]]): Dataset[T] = {
+    caches += ds.persist(StorageLevel.MEMORY_AND_DISK)
+    ds
+  }
+
   /** One generation DAG. Batch is small (driver-held, like the reference's
-    * batch list); everything downstream is distributed.
+    * batch list); everything downstream is distributed. Every Dataset the
+    * generation persists is unpersisted when it returns or throws.
     */
   def runGeneration(round: Int, batch: Seq[String]): Map[String, Long] = {
+    val genCaches = ArrayBuffer.empty[Dataset[_]]
+    try generation(round, batch, genCaches) finally genCaches.foreach(_.unpersist())
+  }
+
+  private def generation(round: Int, batch: Seq[String],
+                         genCaches: ArrayBuffer[Dataset[_]]): Map[String, Long] = {
     val webCfg = cfg
-    // intermediates persisted conditionally inside the DAG builders
-    // (e.g. the semi-filter's probe side) register here for end-of-
-    // generation unpersist
-    val genCaches = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // phase timing (env GRAFT_PHASE_TIMING=1): finds serial driver floors
-    val timing = sys.env.get("GRAFT_PHASE_TIMING").contains("1")
-    var tLast = System.nanoTime()
-    def lap(name: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      println(f"[gen $round] $name%-18s ${(now - tLast) / 1e9}%6.2fs")
-      tLast = now
-    }
 
     // ---- G4: search fan-out (both kinds, all pages) --------------------
     val batchDs = spark.createDataset(batch.zipWithIndex.map { case (q, i) => (q, i) })
@@ -309,7 +310,6 @@ final class CrawlEngine(
     // (the old pre-pass carried a groupBy(host) whose O(hosts) per-task
     // partial maps made it anti-scale at high parallelism).
     val nCandidates = candidates.count()
-    lap("candidates")
 
     // ---- D1: intra-batch first-seen-wins on deterministic ArrivalKey ----
     val arrival = Seq($"kind", $"query_rank", $"page", $"result_rank")
@@ -321,13 +321,11 @@ final class CrawlEngine(
     // [[antiJoinSeen]] is the one not-in-seen route; the persist keeps the
     // dedup window + anti-join from re-executing for each of newLinks'
     // consumers (relevance gate, pick dedup, seen delta).
-    val newLinks = antiJoinSeen(firstSeen, "href", nCandidates, genCaches)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val newLinks = cached(antiJoinSeen(firstSeen, "href", nCandidates, genCaches), genCaches)
 
     // ---- P4: relevance gate (deterministic 2-of-3 vote) ----------------
-    val kept = newLinks
-      .filter(Predicates.isRelevantCol($"title", $"href", $"content"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val kept = cached(newLinks
+      .filter(Predicates.isRelevantCol($"title", $"href", $"content")), genCaches)
 
     // ---- P5/S7/D3: PDF split (codegen'd confirm probe — no ScalaUDF) ----
     val isPdf = Predicates.isLikelyPdfUrlCol($"href") &&
@@ -342,9 +340,8 @@ final class CrawlEngine(
     val emptyFrontier = Seq.empty[(String, String, Double, Int)]
       .toDF("url", "host", "score", "discovered_gen")
     val oldFrontier = frontierT.read(spark).getOrElse(emptyFrontier)
-    val picks = if (expandTopK <= 0) {
+    val picks = cached(if (expandTopK <= 0) {
       emptyFrontier.select($"url".as("href"), $"host", $"score")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     } else {
       // not-seen = the bucketed exact anti-join (never an O(|seen|)
       // shuffle); this generation's own delta (newLinks — not in seen
@@ -362,10 +359,8 @@ final class CrawlEngine(
         .filter(robotsAllowedCol($"url")).drop("robots_disallow")
         .withColumn("rn", row_number().over(wFrontier)).filter($"rn" <= expandTopK)
         .select($"url".as("href"), $"host", $"score")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    }, genCaches)
     val nExpanded = if (expandTopK <= 0) 0L else picks.count()
-    lap("picks")
 
     // ---- T4: robots gate + per-host politeness schedule (both phases) ---
     // per-host order: phase 0 (ArrivalKey order) then phase 1 (score order);
@@ -390,13 +385,12 @@ final class CrawlEngine(
         lit(0).as("result_rank"), (-$"score").as("neg_score"), $"min_delay_ms")
     val wHost = Window.partitionBy($"host").orderBy(
       $"phase", $"kind", $"query_rank", $"page", $"result_rank", $"neg_score", $"href")
-    val sched = phaseA.unionByName(phaseB)
+    val sched = cached(phaseA.unionByName(phaseB)
       .join(gatedBroadcast(hostState, hostStateEstBytes), Seq("host"), "left")
       .na.fill(0L, Seq("next_free_ms"))
       .withColumn("slot", row_number().over(wHost) - lit(1))
       .withColumn("scheduled_ms", $"next_free_ms" + $"slot" * $"min_delay_ms")
-      .withColumn("salt", pmod(xxhash64($"href"), lit(saltShards)).cast("int"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("salt", pmod(xxhash64($"href"), lit(saltShards)).cast("int")), genCaches)
 
     // ---- S6/G1/G2/G5: salted fetch + span extraction + link discovery ---
     // The extraction output is cached as a DATAFRAME of struct columns, not
@@ -406,7 +400,7 @@ final class CrawlEngine(
     // consumer re-deserialize every PageDoc/span/image OBJECT through the
     // encoder — 3 full object decodes of the largest dataset per
     // generation, a fixed CPU tax that dominated the commit window.
-    val fetched: DataFrame = sched
+    val fetched: DataFrame = cached(sched
       .select($"href", $"host", $"salt", $"scheduled_ms")
       .repartition(nPart, $"host", $"salt")
       .sortWithinPartitions($"scheduled_ms") // politeness order within shard
@@ -430,8 +424,7 @@ final class CrawlEngine(
       // the shard id is captured BEFORE the cache (narrow projection in the
       // fetch tasks themselves) so partition_metrics records the real
       // (host,salt) shard lineage
-      .withColumn("partition_id", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("partition_id", spark_partition_id()), genCaches)
     val docsDf = fetched.select($"doc.*")
     val imagesDf = fetched.select(explode($"imgs").as("img")).select($"img.*")
 
@@ -460,71 +453,41 @@ final class CrawlEngine(
     // N→4N scaling; the defensive materialize-then-commit shape is the one
     // that scales.)
     newLinks.count()
-    lap("compute-dedup")
     fetched.count()
-    lap("compute-fetch")
 
     // ---- commits (processed_queries LAST — K3 barrier) -----------------
-    // Independent table commits run as CONCURRENT Spark jobs (separate
-    // dirs, per-table atomic pointer flips; crash recovery handles any
-    // committed subset). Per-generation counters come free from the
-    // manifests' per-commit row deltas — no standalone count() jobs.
-    val seenDelta = newLinks.select($"href", $"host")
-      .unionByName(picks.select($"href", $"host"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def timedF[T](name: String)(body: => T): Future[T] = Future {
-      // one scheduler pool per commit: under spark.scheduler.mode=FAIR the
-      // concurrent write jobs share task slots instead of FIFO-queueing
-      // behind whichever job grabbed all slots first (no-op under FIFO).
-      // Cleared on exit: the thread belongs to the global pool and is
-      // reused by unrelated futures
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"commit-$name")
-      try {
-        val t = System.nanoTime()
-        val r = body
-        if (timing) println(f"[gen $round]   commit:$name%-12s ${(System.nanoTime() - t) / 1e9}%6.2fs")
-        r
-      } finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-    }
+    // Independent table commits run in one [[CommitWindow]]: concurrent
+    // Spark jobs over separate dirs with per-table atomic pointer flips
+    // (crash recovery handles any committed subset), every one settled
+    // before a failure surfaces. Per-generation counters come free from
+    // the manifests' per-commit row deltas — no standalone count() jobs.
+    val seenDelta = cached(newLinks.select($"href", $"host")
+      .unionByName(picks.select($"href", $"host")), genCaches)
     // seen is stored BUCKETED by href (one file per bucket per commit):
     // [[antiJoinSeen]] reads it back bucket-aligned so the anti-join's
     // seen side never exchanges. The bucket count is pinned by the first
     // bucketed commit (manifest registry) so later generations stay
     // join-compatible even if the session's shuffle partitioning changes.
-    val seenF = timedF("seen")(seenT.appendBucketed(seenDelta, round, seenBuckets, "href"))
-    val linksF = timedF("links")(linksT.append(kept.toDF(), round))
-    val pdfF = timedF("pdf")(pdfT.append(
-      pdfLinks.select($"href".as("url"), lit(round).as("generation")).coalesce(4), round))
-    val eventsF = timedF("events")(eventsT.append(
-      sched.select($"href".as("url"), $"host", $"salt", $"scheduled_ms",
-        $"min_delay_ms", lit(round).as("round"), $"phase"), round))
-    // host_state: untouched hosts keep state; scheduled hosts advance —
-    // depends only on sched (cached), so it rides the first wave
-    val hostF = timedF("hoststate") {
-      val updatedState = sched.groupBy($"host")
-        .agg((max($"scheduled_ms") + first($"min_delay_ms")).as("next_free"))
-      val newState = hostState.select($"host", $"next_free_ms".as("old_next"))
-        .join(updatedState, Seq("host"), "full_outer")
-        .select($"host", coalesce($"next_free", $"old_next").as("next_free_ms"))
-      hostStateT.replace(newState, round)
-    }
-    val docsF = timedF("docs")(docsT.append(docsDf.toDF(), round))
-    val imagesF = timedF("images")(imagesT.append(imagesDf.toDF(), round))
-    val pmF = timedF("partmetrics")(partitionMetricsT.append(partMetrics, round))
-    // settle EVERY commit before surfacing a failure: returning on the
-    // first one would leave sibling appends still writing while the caller
-    // (or the next run's rollbackPartial) rewinds the same tables
-    val window = Seq(seenF, linksF, pdfF, eventsF, hostF, docsF, imagesF, pmF)
-    window.foreach(Await.ready(_, Duration.Inf))
-    window.foreach(Await.result(_, Duration.Inf)) // rethrows the first failure
-    val (seenMeta, linksMeta, eventsMeta, docsMeta, pdfMeta) = (
-      Await.result(seenF, Duration.Inf), Await.result(linksF, Duration.Inf),
-      Await.result(eventsF, Duration.Inf), Await.result(docsF, Duration.Inf),
-      Await.result(pdfF, Duration.Inf))
-    lap("commits")
+    val Seq(seenMeta, linksMeta, pdfMeta, eventsMeta, _, docsMeta, _, _) = CommitWindow(spark,
+      "seen" -> (() => seenT.appendBucketed(seenDelta, round, seenBuckets, "href")),
+      "links" -> (() => linksT.append(kept.toDF(), round)),
+      "pdf" -> (() => pdfT.append(
+        pdfLinks.select($"href".as("url"), lit(round).as("generation")).coalesce(4), round)),
+      "events" -> (() => eventsT.append(
+        sched.select($"href".as("url"), $"host", $"salt", $"scheduled_ms",
+          $"min_delay_ms", lit(round).as("round"), $"phase"), round)),
+      // host_state: untouched hosts keep state; scheduled hosts advance
+      "hoststate" -> { () =>
+        val updatedState = sched.groupBy($"host")
+          .agg((max($"scheduled_ms") + first($"min_delay_ms")).as("next_free"))
+        val newState = hostState.select($"host", $"next_free_ms".as("old_next"))
+          .join(updatedState, Seq("host"), "full_outer")
+          .select($"host", coalesce($"next_free", $"old_next").as("next_free_ms"))
+        hostStateT.replace(newState, round)
+      },
+      "docs" -> (() => docsT.append(docsDf.toDF(), round)),
+      "images" -> (() => imagesT.append(imagesDf.toDF(), round)),
+      "partmetrics" -> (() => partitionMetricsT.append(partMetrics, round)))
 
     val nNew = seenT.deltaRows(seenMeta) - nExpanded
     val nKept = linksT.deltaRows(linksMeta)
@@ -559,14 +522,9 @@ final class CrawlEngine(
         .select($"url", $"host", $"score", $"discovered_gen")
       frontierT.append(discoveries, round)
     }
-    lap("frontier")
     metricsT.append(counters.toSeq.toDF("key", "value").withColumn("generation", lit(round)), round)
     processedT.append(batch.zipWithIndex.toDF("query", "query_rank")
       .withColumn("generation", lit(round)), round) // commit point
-    lap("metrics+barrier")
-
-    (Seq[Dataset[_]](newLinks, kept, picks, sched, fetched, seenDelta)
-      ++ genCaches).foreach(_.unpersist())
     counters
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ml.{TextAnalysis, TextDedup}
-import graft.snapshot.SnapshotTable
+import graft.snapshot.{CommitWindow, SnapshotTable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -23,7 +23,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     clusters this batch's pairs touch, then the delta's
   *     [[TextDedup.bandIndexOf]] rows (bucketed by bkey — the index commit
   *     chunks read back exchange-free, same layout as the crawl engine's
-  *     seen table), then the delta itself. foreachBatch is at-least-once: a
+  *     seen table) and the delta itself, those two concurrently in one
+  *     [[graft.snapshot.CommitWindow]]. foreachBatch is at-least-once: a
   *     crash in any window replays the batch and the per-table guards
   *     re-run exactly the missing appends — pairs AND redirects are always
   *     computed against corpus/index states EXCLUDING the current batch,
@@ -116,12 +117,9 @@ object DedupStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
         commitBatch(spark, corpusTable, pairsTable, indexTable, batch, batchId,
           threshold, indexBuckets, autoCompactDirs, redirectsTable, quality,
           redirectSkipMinRows)
-        if (sys.env.get("GRAFT_STREAM_TIMING").contains("1"))
-          System.err.println(f"[stream-timing] batch=$batchId TOTAL        ${(System.nanoTime() - t0) / 1e9}%6.2fs")
       }
       .start()
   }
@@ -189,16 +187,6 @@ object DedupStream {
                                      quality: Column => Column = TextAnalysis.qualityScore,
                                      redirectSkipMinRows: Long = DefaultRedirectSkipMinRows): Unit = {
     import spark.implicits._
-    // GRAFT_STREAM_TIMING=1: per-stage walls to stderr (latency triage aid,
-    // same pattern as GRAFT_PHASE_TIMING on the crawl path)
-    val timing = sys.env.get("GRAFT_STREAM_TIMING").contains("1")
-    def timed[T](name: String)(body: => T): T =
-      if (!timing) body else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"[stream-timing] batch=$batchId $name%-12s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-        r
-      }
     val gen = batchId.toInt + 1
     val delta = batch.select(col("doc_id"), col("text"))
     val needPairs = !pairsTable.currentSnapshot.exists(_.generation >= gen)
@@ -215,68 +203,48 @@ object DedupStream {
       // the index read is pruned by FILE (bucket ids in the file names) —
       // per-batch read cost tracks the delta's occupied buckets, not the
       // index size
-      val (rawPairs, bandRows) = timed("candGen")(
-        TextDedup.minhashNearDupsIndexed(corpus, indexTable, delta, threshold))
+      val (rawPairs, bandRows) =
+        TextDedup.minhashNearDupsIndexed(corpus, indexTable, delta, threshold)
       deltaBandRows = Some(bandRows)
       val raw = rawPairs.select(col("a"), col("b"))
       // redirect maintenance consumes the pair set twice (endpoints, edges)
       // on top of the append — materialize once; pairs are tiny (dup rate)
-      val pairs = timed("pairs")(if (needRedirects) raw.localCheckpoint(true) else raw)
-      if (needPairs) timed("pairsAppend")(pairsTable.append(pairs, generation = gen))
-      if (needRedirects && !timed("pairsEmpty?")(pairs.isEmpty)) redirectsTable.foreach { rt =>
+      val pairs = if (needRedirects) raw.localCheckpoint(true) else raw
+      if (needPairs) pairsTable.append(pairs, generation = gen)
+      if (needRedirects && !pairs.isEmpty) redirectsTable.foreach { rt =>
         // bucketed by doc_id, NOT a plain append: compactTiered only folds
         // uniformly bucketed chains, so plain redirect commits would grow
         // one dir per pairful batch FOREVER (the in-run fold below would
         // silently no-op) and the affected-docs semi-joins could never
         // read storage-aligned
-        timed("redirects")(rt.appendBucketed(
+        rt.appendBucketed(
           updatedRedirects(spark, rt, corpus.unionByName(delta), pairs, quality,
             redirectSkipMinRows)
             .withColumn("gen", lit(gen)),
-          generation = gen, buckets = indexBuckets, bucketCol = "doc_id"))
+          generation = gen, buckets = indexBuckets, bucketCol = "doc_id")
       }
     }
     // index and corpus appends are INDEPENDENT once pairs+redirects have
     // committed (nothing in this batch reads either table after this
     // point, and a replay that finds any subset of {index, corpus}
     // committed re-runs exactly the missing appends — the per-table
-    // generation guards below are evaluated BEFORE the concurrent window
-    // opens, same as the sequential form). Running them as concurrent
-    // Spark jobs (the crawl engine's commit-window pattern; FAIR pools
-    // share task slots) removes one serial append from the per-batch
-    // floor. The pairs→redirects→{index ∥ corpus} ORDER guarantee the
-    // replay analysis needs is preserved: both futures start strictly
-    // after the redirects append returns.
+    // generation guards below are evaluated BEFORE the window opens, same
+    // as the sequential form). They run in one [[CommitWindow]], which
+    // removes one serial append from the per-batch floor and settles both
+    // before a failure surfaces. The pairs→redirects→{index ∥ corpus}
+    // ORDER the replay analysis needs is preserved: the window opens
+    // strictly after the redirects append returns.
     val needIndex = !indexTable.currentSnapshot.exists(_.generation >= gen)
     val needCorpus = !corpusTable.currentSnapshot.exists(_.generation >= gen)
-    if (needIndex || needCorpus) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // the pool is cleared on exit: the thread belongs to the global
-      // pool and is reused by unrelated futures
-      def pooled[T](pool: String)(body: => T): Future[T] = Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-        try body finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-      }
-      val idxF = if (!needIndex) Future.successful(()) else pooled("commit-index") {
-        // reuse the candidate generator's materialized band rows; recompute
-        // only on the replay path where pairs+redirects already committed
-        // (bit-identical either way — the pipeline is deterministic)
-        timed("indexAppend")(indexTable.appendBucketed(
-          deltaBandRows.getOrElse(TextDedup.bandIndexOf(delta)),
-          generation = gen, buckets = indexBuckets, bucketCol = "bkey"))
-      }
-      val corpF = if (!needCorpus) Future.successful(()) else pooled("commit-corpus") {
-        timed("corpusAppend")(corpusTable.append(delta, generation = gen))
-      }
-      // settle BOTH appends before surfacing a failure: returning on the
-      // index's would leave the corpus append writing while the caller
-      // replays the batch
-      val window = Seq(idxF, corpF)
-      window.foreach(Await.ready(_, Duration.Inf))
-      window.foreach(Await.result(_, Duration.Inf)) // rethrows the first failure
-    }
+    CommitWindow(spark, Seq(
+      // reuse the candidate generator's materialized band rows; recompute
+      // only on the replay path where pairs+redirects already committed
+      // (bit-identical either way — the pipeline is deterministic)
+      Option.when(needIndex)("index" -> (() => indexTable.appendBucketed(
+        deltaBandRows.getOrElse(TextDedup.bandIndexOf(delta)),
+        generation = gen, buckets = indexBuckets, bucketCol = "bkey"))),
+      Option.when(needCorpus)("corpus" -> (() => corpusTable.append(delta, generation = gen)))
+    ).flatten: _*)
     if (autoCompactDirs > 0) {
       if (indexTable.commitDirCount >= autoCompactDirs)
         indexTable.compactTiered(spark, math.max(1, autoCompactDirs / 2))

@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, StoreCopy}
 import graft.oracle.SequentialOracle
 import graft.synth.WebConfig
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** The BASELINE.json completeness criteria, verbatim: same seed list +
   * politeness budget ⇒ engine crawl order == oracle order, URL-seen set
@@ -350,32 +350,63 @@ class OracleEngineParitySpec extends AnyFunSuite {
     assert(eng2.crawlOrder() == oracle.crawlOrder)
   }
 
-  test("a commit that fails in the window: run throws after every sibling settles, resume is oracle-equal") {
-    // seen's generation-2 manifest path is taken by a directory, so its
-    // commit throws after its data is written. run() must surface that
-    // only once every concurrent sibling commit has finished: no table's
-    // current snapshot may move after the throw
-    val dir = tempDir("commitfail")
-    val eng1 = newEngine(dir)
-    assert(eng1.run(seeds, maxRounds = 1) == 1)
-    val plant = Paths.get(dir, "seen", "snapshots",
-      s"snapshot-${eng1.seenT.currentSnapshotId.get + 1}.json")
+  // commit-point sweeps: a two-generation crawl with expansion, so that
+  // generation 2 reaches every commit point (the frontier append needs
+  // expandTopK > 0). Generation 1 is crawled once; each point then fails
+  // generation 2 in its own byte copy of that store.
+  private val sweepSeeds = seeds.take(4)
+  private val sweepBatch = 2
+  private lazy val sweepOracle = SequentialOracle.run(cfg, sweepSeeds, sweepBatch, expandTopK = 1)
+  private def sweepEngine(dir: String): CrawlEngine =
+    new CrawlEngine(SparkTestSession.spark, cfg, dir, sweepBatch, expandTopK = 1)
+  private lazy val sweepBase: Path = {
+    val dir = tempDir("sweep-base")
+    assert(sweepEngine(dir).run(sweepSeeds, maxRounds = 1) == 1)
+    Paths.get(dir)
+  }
+
+  /** Fail generation 2's commit to `table` by planting a directory at its
+    * next manifest path: run() must throw IOException with nothing left
+    * committing and no generation cache left persisted, and a resume on a
+    * fresh engine must equal the oracle (= the uninjected run).
+    */
+  private def failCommitAndResume(table: String): Unit = {
+    val dir = StoreCopy(sweepBase).toString
+    val eng = sweepEngine(dir)
+    val tables = Seq(eng.seenT, eng.linksT, eng.docsT, eng.imagesT, eng.pdfT,
+      eng.processedT, eng.hostStateT, eng.metricsT, eng.eventsT, eng.frontierT,
+      eng.partitionMetricsT)
+    val target = tables.find(_.name == table).getOrElse(fail(s"no table $table"))
+    val plant = Paths.get(dir, table, "snapshots",
+      s"snapshot-${target.currentSnapshotId.fold(0L)(_ + 1)}.json")
     Files.createDirectories(plant)
-    val eng2 = newEngine(dir)
-    intercept[java.io.IOException](eng2.run(seeds))
-    val tables = Seq(eng2.seenT, eng2.linksT, eng2.docsT, eng2.imagesT, eng2.pdfT,
-      eng2.processedT, eng2.hostStateT, eng2.metricsT, eng2.eventsT, eng2.frontierT,
-      eng2.partitionMetricsT)
+    // persisted RDDs are held in a weak-valued map: compare ids, since GC
+    // may drop unrelated entries during the run
+    val sc = SparkTestSession.spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    intercept[java.io.IOException](eng.run(sweepSeeds))
+    assert(sc.getPersistentRDDs.keySet.diff(cachedBefore).isEmpty,
+      s"$table: generation caches left persisted after run() threw")
     val atThrow = tables.map(_.currentSnapshotId)
-    Thread.sleep(3000)
-    assert(tables.map(_.currentSnapshotId) == atThrow, "a commit landed after run() threw")
-    assert(eng2.lastCommittedGeneration == 1)
+    Thread.sleep(500)
+    assert(tables.map(_.currentSnapshotId) == atThrow, s"$table: a commit landed after run() threw")
+    assert(eng.lastCommittedGeneration == 1, table)
     Files.delete(plant)
-    val eng3 = newEngine(dir)
-    eng3.run(seeds)
-    assert(eng3.seenSet() == oracle.seen)
-    assert(eng3.crawlOrder() == oracle.crawlOrder)
-    assert(eng3.docs().map(_.doc_id).toSet == oracle.docs.map(_.doc_id).toSet)
+    val resumed = sweepEngine(dir)
+    assert(resumed.run(sweepSeeds) == 1, table)
+    assert(resumed.seenSet() == sweepOracle.seen, table)
+    assert(resumed.crawlOrder() == sweepOracle.crawlOrder, table)
+    assert(resumed.docs().map(_.doc_id).toSet == sweepOracle.docs.map(_.doc_id).toSet, table)
+  }
+
+  test("a commit that fails in the window: run throws after every sibling settles, resume is oracle-equal") {
+    Seq("seen", "links", "pdf_urls", "fetch_events", "host_state", "documents", "images",
+      "partition_metrics").foreach(failCommitAndResume)
+  }
+
+  test("a commit that fails after the window (frontier, metrics, the processed_queries barrier): resume is oracle-equal") {
+    assert(sweepOracle.counters("expanded") > 0, "fixture must expand links")
+    Seq("frontier", "metrics", "processed_queries").foreach(failCommitAndResume)
   }
 
   test("dedup idempotence: re-running the same seeds is a no-op") {

@@ -4,6 +4,7 @@ import graft.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class SnapshotStoreSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -235,5 +236,35 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // commits keep working after vacuum
     val m = t.append(Seq((5, "v5")).toDF("id", "v"), 3)
     assert(t.read(spark).get.count() == 3 && m.parentId == tip.snapshotId)
+  }
+
+  test("commit window: a failure surfaces only after every sibling commit lands; results in submission order") {
+    val store = SnapshotStore(Files.createTempDirectory("graft-snap-window").toString)
+    val (a, b) = (store.table("a"), store.table("b"))
+    val sc = spark.sparkContext
+    val pools = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    def inPool(name: String): Unit = pools.put(name, sc.getLocalProperty("spark.scheduler.pool"))
+    // A throws at once while B is still a second away from committing: the
+    // window may surface A's failure only once B's snapshot is current
+    val e = intercept[IllegalStateException](CommitWindow(spark,
+      "cw-a" -> { () => inPool("cw-a"); throw new IllegalStateException("a failed") },
+      "cw-b" -> { () => inPool("cw-b"); Thread.sleep(1000); b.append(Seq(1L).toDF("x"), 1) }))
+    assert(e.getMessage == "a failed")
+    assert(b.currentSnapshotId.contains(0L), "the window threw before its sibling committed")
+    assert(pools.asScala == Map("cw-a" -> "commit-cw-a", "cw-b" -> "commit-cw-b"))
+    assert(sc.getLocalProperty("spark.scheduler.pool") == null,
+      "the window leaked its pool into the calling thread")
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName.startsWith("commit-cw-") && t.isAlive), "a window thread outlived the window")
+    // results come back in submission order, not completion order
+    val metas = CommitWindow(spark,
+      "cw-slow" -> { () => Thread.sleep(500); a.append(Seq(1L).toDF("x"), 2) },
+      "cw-fast" -> (() => b.append(Seq(2L, 3L).toDF("x"), 3)))
+    assert(metas.map(m => (m.generation, m.rowCount)) == Seq((2, 1L), (3, 3L)))
+    // of several failures, the first submitted one is rethrown
+    val first = intercept[RuntimeException](CommitWindow(spark,
+      "cw-late" -> { () => Thread.sleep(300); throw new RuntimeException("late") },
+      "cw-early" -> (() => throw new RuntimeException("early"))))
+    assert(first.getMessage == "late")
   }
 }

@@ -210,6 +210,48 @@ class DedupStreamSpec extends AnyFunSuite {
     assert(state(clean)._2.nonEmpty, "fixture must produce pairs")
   }
 
+  test("every micro-batch commit point (pairs, redirects, band_index, corpus) fails once: commitBatch throws with nothing left committing, replay equals the uninjected drain") {
+    // batch 0 is committed once into a base store; each point then fails
+    // the pairful batch 1 in its own byte copy of that store
+    val b0 = (0 until 8).map(i => (i.toLong, doc(300 + i))).toDF("doc_id", "text")
+    val b1 = ((8 until 16).map(i => (i.toLong, doc(300 + i))) ++
+      Seq((1000L, doc(300) + " zzz"), (1012L, doc(312) + " zzz"))).toDF("doc_id", "text")
+    val names = Seq("corpus", "near_dup_pairs", "band_index", "redirects")
+    def commit(store: SnapshotStore, b: DataFrame, batchId: Long): Unit = {
+      val Seq(c, p, i, r) = names.map(store.table)
+      DedupStream.commitBatch(spark, c, p, i, b, batchId, threshold = 0.8, redirectsTable = Some(r))
+    }
+    // every table's raw rows, sorted (duplicates kept), plus the redirect view
+    def state(store: SnapshotStore) = (names.map { n =>
+      store.table(n).read(spark).map(_.collect().map(_.toString).sorted.toSeq).getOrElse(Nil)
+    }, DedupStream.latestRedirects(spark, store.table("redirects"))
+      .as[(Long, Long, Boolean)].collect().toSet)
+    val base = Files.createTempDirectory("graft-dstream-sweep-base")
+    commit(SnapshotStore(base.toString), b0, 0L)
+    def copyStore(): SnapshotStore = SnapshotStore(graft.StoreCopy(base).toString)
+    val clean = copyStore()
+    commit(clean, b1, 1L)
+    val expected = state(clean)
+    assert(expected._1(1).nonEmpty && expected._2.nonEmpty, "batch 1 must produce pairs and redirects")
+    expected._1.zip(names).foreach { case (rows, n) =>
+      assert(rows.distinct.size == rows.size, s"duplicate rows in the uninjected $n")
+    }
+    names.foreach { n =>
+      val store = copyStore()
+      val target = store.table(n)
+      val plant = store.root.resolve(n).resolve("snapshots")
+        .resolve(s"snapshot-${target.currentSnapshotId.fold(0L)(_ + 1)}.json")
+      Files.createDirectories(plant)
+      intercept[java.io.IOException](commit(store, b1, 1L))
+      val ids = names.map(store.table(_).currentSnapshotId)
+      Thread.sleep(500)
+      assert(names.map(store.table(_).currentSnapshotId) == ids, s"$n: a commit landed after commitBatch threw")
+      Files.delete(plant)
+      commit(store, b1, 1L)
+      assert(state(store) == expected, s"$n: replay differs from the uninjected drain")
+    }
+  }
+
   test("compactRedirects folds latest-wins history to one row per doc; the stream keeps working after") {
     val store = SnapshotStore(Files.createTempDirectory("graft-dstream-compact").toString)
     val corpusT = store.table("corpus")
