@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
@@ -413,11 +414,13 @@ object GraftFunctions {
     r.createOrReplaceTempFunction(
       "rh_bucket_long",
       exprs => HyperplaneBucketLongExpr(exprs(0), litInt(exprs(1)), litInt(exprs(2)), litLong(exprs(3))), "built-in")
-    // blocked bloom build + probe (the analyzer wraps the AggregateFunction)
+    // Spark's own runtime bloom filter (build + probe over LONG keys) under
+    // session names: the crawl engine's seen semi-filter calls both through
+    // call_function (the analyzer wraps the AggregateFunction)
     r.createOrReplaceTempFunction(
-      "bloom_agg", exprs => BloomBuildAgg(exprs(0), litInt(exprs(1)), litInt(exprs(2))), "built-in")
+      "bloom_filter_agg", exprs => new BloomFilterAggregate(exprs(0), exprs(1)), "built-in")
     r.createOrReplaceTempFunction(
-      "bloom_might_contain", exprs => BloomMightContainExpr(exprs(0), exprs(1)), "built-in")
+      "might_contain", exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
   }
 }
 

@@ -1,8 +1,12 @@
 package graft.ml
 
 import graft.util.Hashing
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Document-deduplication operators for the training-data pipeline, all
   * designed around inverted-index / banding joins so the pair space never
@@ -16,6 +20,33 @@ import org.apache.spark.sql.functions._
   * loss at scale is visible, never silent.
   */
 object TextDedup {
+
+  /** This thread's local checkpoints inside [[releasingCheckpoints]]. */
+  private val heldCheckpoints = new ThreadLocal[ArrayBuffer[RDD[_]]]
+
+  /** `df.localCheckpoint(eager)`, held by this thread's enclosing
+    * [[releasingCheckpoints]] if any; every near-dup checkpoint goes here.
+    */
+  private[graft] def checkpointLocal(df: DataFrame, eager: Boolean): DataFrame = {
+    val cp = df.localCheckpoint(eager)
+    Option(heldCheckpoints.get).foreach(held =>
+      held ++= cp.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd })
+    cp
+  }
+
+  /** Run `body`, then unpersist every local checkpoint it made on this
+    * thread, as it returns or throws. Only around a body that has written
+    * out all it computed: a released checkpoint cannot be read again.
+    */
+  private[graft] def releasingCheckpoints[T](body: => T): T = {
+    val outer = heldCheckpoints.get
+    val held = ArrayBuffer.empty[RDD[_]]
+    heldCheckpoints.set(held)
+    try body finally {
+      heldCheckpoints.set(outer)
+      held.foreach(_.unpersist(blocking = false))
+    }
+  }
 
   private def logDrop(op: String, what: String, n: Long): Unit =
     if (n > 0) println(s"[graft.dedup] $op: dropped $n $what (skew cap) — recall may be reduced")
@@ -104,7 +135,7 @@ object TextDedup {
     // expensive shingle explode once instead of once per consumer. Local
     // mode / single-app only concern: blocks are freed by the context
     // cleaner when the plan is GC'd.
-    toks.select($"id", xxhash64($"tok").as("tok")).localCheckpoint(false)
+    checkpointLocal(toks.select($"id", xxhash64($"tok").as("tok")), eager = false)
 
   /** The SHARED per-doc hashed-shingle base of the whole near-dup family:
     * one row per doc, `toks` = distinct 64-bit hashes of its word-k-gram
@@ -118,7 +149,7 @@ object TextDedup {
   def shingleDocBase(docs: DataFrame, shingleSize: Int,
                      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     shingleDocProjection(parallelFloor(docs), shingleSize, idCol, textCol)
-      .localCheckpoint(false)
+      .transform(checkpointLocal(_, eager = false))
 
   /** The (id, toks) hashed-shingle projection WITHOUT materialization — the
     * building block [[shingleDocBase]] checkpoints, and the form the
@@ -269,7 +300,7 @@ object TextDedup {
   private def minhashLshCandidatesFromBase(base: DataFrame, logDrops: Boolean): DataFrame = {
     val banded = minhashBanded(base)
     val counts = banded.groupBy($"band", $"bsig").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // one row per occupied bucket — small
+      .transform(checkpointLocal(_, eager = true)) // one row per occupied bucket — small
     if (logDrops) {
       val big = counts.filter($"cnt" > MaxBucket).count()
       logDrop("minhash-lsh", s"buckets larger than $MaxBucket", big)
@@ -357,14 +388,14 @@ object TextDedup {
     val baseD = shingleDocBase(delta, ShingleSize, idCol, textCol)
     // eager for the same reason as the indexed form: every downstream eager
     // point holds this plan as a subtree
-    val bandedD = minhashBanded(baseD).localCheckpoint(true)
+    val bandedD = checkpointLocal(minhashBanded(baseD), eager = true)
     val deltaKeys = bandedD.select($"band", $"bsig").distinct()
     val corpusToks = shingleDocProjection(parallelFloor(corpus), ShingleSize, idCol, textCol)
     // delta-sized after the semi-join: only corpus rows in delta-occupied
     // buckets can pair with a delta doc
     val bandedC = minhashBanded(corpusToks)
       .join(deltaKeys, Seq("band", "bsig"), "left_semi")
-      .localCheckpoint(false)
+      .transform(checkpointLocal(_, eager = false))
     incrementalTail(corpus, baseD, bandedD, bandedC, threshold, idCol, textCol,
       logDrops, "minhash-incremental")
   }
@@ -434,9 +465,9 @@ object TextDedup {
     // downstream eager point (measured 2-3× re-evaluation as a lazy
     // checkpoint: each eager consumer ran the full pipeline before any of
     // them populated the cache)
-    val bandedD = withBkey(minhashBanded(baseD)).localCheckpoint(true)
+    val bandedD = checkpointLocal(withBkey(minhashBanded(baseD)), eager = true)
     val deltaKeys = bandedD.select($"band", $"bsig", $"bkey").distinct()
-      .localCheckpoint(true) // one row per delta-occupied bucket — small
+      .transform(checkpointLocal(_, eager = true)) // one row per delta-occupied bucket — small
     // ONE collect picks the regime: limit(cap+1) over the distinct bkeys,
     // an overflowing probe meaning "too many keys to prune by"
     val ks = deltaKeys.select($"bkey").distinct()
@@ -459,7 +490,7 @@ object TextDedup {
       }
       .select($"id", $"band", $"bsig")
       .join(deltaKeys.select($"band", $"bsig"), Seq("band", "bsig"), "left_semi")
-      .localCheckpoint(false)
+      .transform(checkpointLocal(_, eager = false))
     (incrementalTail(corpus, baseD, bandedD.drop("bkey"), bandedC, threshold, "doc_id",
       "text", logDrops = false, "minhash-indexed"), bandedD)
   }
@@ -475,7 +506,7 @@ object TextDedup {
     val all = bandedC.withColumn("isd", lit(false))
       .unionByName(bandedD.withColumn("isd", lit(true)))
     val counts = all.groupBy($"band", $"bsig").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // one row per delta-occupied bucket — small
+      .transform(checkpointLocal(_, eager = true)) // one row per delta-occupied bucket — small
     if (logDrops) {
       val big = counts.filter($"cnt" > MaxBucket).count()
       logDrop(label, s"buckets larger than $MaxBucket", big)
@@ -487,7 +518,7 @@ object TextDedup {
       col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
         col("x.id") < col("y.id") && (col("x.isd") || col("y.isd")))
       .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
-      .localCheckpoint(false) // read twice below: the id set and the verify join
+      .transform(checkpointLocal(_, eager = false)) // read twice below: the id set and the verify join
     val candIds = cands.select($"a".as("id"))
       .unionByName(cands.select($"b".as("id"))).distinct()
     val corpusHits = corpus
@@ -548,9 +579,9 @@ object TextDedup {
       .select($"id", $"sh", $"bk.chunk".as("chunk"), $"bk.bits".as("bits"))
       // (id, sh, chunk, bits) is chunks×nDocs 32-byte rows; materialize once —
       // the occupancy agg, the bucket semi-join and BOTH self-join sides read it
-      .localCheckpoint(false)
+      .transform(checkpointLocal(_, eager = false))
     val counts = banded.groupBy($"chunk", $"bits").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // one row per occupied bucket — small
+      .transform(checkpointLocal(_, eager = true)) // one row per occupied bucket — small
     if (logDrops) {
       val big = counts.filter($"cnt" > maxBucket).count()
       logDrop("simhash", s"buckets larger than $maxBucket", big)
@@ -629,7 +660,7 @@ object TextDedup {
     // checkpoint is the executor-loss-safety point; it must exist before
     // anything else reads the round's output).
     def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint(false)
+      if (reliable) df.checkpoint() else checkpointLocal(df, eager = false)
     // convergence signature: (row count, bit_xor of row hashes) — an
     // order-independent SET signature (the edge set is distinct()ed every
     // round) computed by ONE narrow map-side-partial aggregation. The old

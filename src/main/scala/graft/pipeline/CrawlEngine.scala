@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import graft.model._
-import graft.operators.BlockedBloom
 import graft.oracle.SequentialOracle
 import graft.snapshot.{CommitWindow, SnapshotStore, SnapshotTable}
 import graft.synth.{SyntheticWeb, WebConfig}
@@ -33,11 +32,12 @@ import scala.collection.mutable.ArrayBuffer
   *  - seen membership is ONE exact set, as in the reference
   *    (crawler.py:30-41): seen is stored bucketed by href and read back
   *    as one bucketed scan, so the not-in-seen check is a single anti-join
-  *    that reads seen with no exchange. No filter tier sits in front of
-  *    it: a tier could save at most that one join pass, and its own probe
-  *    join and per-generation rewrite cost more (matched A/B in
-  *    BENCH/BASELINE.md). Hot-host skew is served by the (host, salt)
-  *    fetch salting below;
+  *    that reads seen with no exchange. No persisted filter tier sits in
+  *    front of it: a tier could save at most that one join pass, and its
+  *    own probe join and per-generation rewrite cost more (matched A/B in
+  *    BENCH/BASELINE.md); past 10M seen rows a per-query bloom semi-filter
+  *    shrinks the seen scan instead ([[antiJoinSeen]]). Hot-host skew is
+  *    served by the (host, salt) fetch salting below;
   *  - per-generation totals come from one narrow count job (map-side
   *    partials only) — no O(distinct hosts) or O(|seen|) collect anywhere
   *    in a generation;
@@ -141,13 +141,12 @@ final class CrawlEngine(
   @transient val cuckooT: SnapshotTable = store.table("cuckoo_tier")
 
   /** Size-gate for the host-keyed dimension broadcasts (hostProfilesDf /
-    * host_state) — the same byte-budget discipline the semi-filter uses. At
-    * the design scale (10¹⁰ URLs over Zipf hosts → 10⁷-10⁸ hosts) an
-    * unconditional broadcast ships a multi-GB table to every executor every
-    * generation; over budget the hint is dropped and Catalyst joins
-    * on the host key (downstream stages are host-partitioned anyway, so
-    * the exchange is reused). Estimates are conservative per-row costs —
-    * routing the plan, not deciding results.
+    * host_state). At the design scale (10¹⁰ URLs over Zipf hosts → 10⁷-10⁸
+    * hosts) an unconditional broadcast ships a multi-GB table to every
+    * executor every generation; over budget the hint is dropped and
+    * Catalyst joins on the host key (downstream stages are host-partitioned
+    * anyway, so the exchange is reused). Estimates are conservative per-row
+    * costs — routing the plan, not deciding results.
     */
   private def gatedBroadcast(df: DataFrame, estBytes: Long): DataFrame =
     if (estBytes <= tierBroadcastBytes) broadcast(df) else df
@@ -172,27 +171,28 @@ final class CrawlEngine(
     * partitioning once. `df` itself when seen is empty.
     *
     * Runtime semi-filter: once seen holds `seenSemiFilterRows` rows (below
-    * that the extra bloom job wouldn't pay) and the bloom fits the
-    * broadcast budget, the probe side is persisted (into `caches`) and a
-    * one-row bloom aggregated over its `urlCol` is broadcast to the seen
-    * scan, shrinking it to ~|probe| rows before the join (filters preserve
-    * the scan's partitioning). `expectedRows` sizes that bloom: undersizing
-    * only raises its FP rate. Correctness never depends on it: FPs shuffle,
-    * never drop.
+    * that the extra bloom job does not pay: BENCH/BASELINE.md), the probe
+    * side is persisted (into `caches`) and Spark's own bloom filter over
+    * its `xxhash64(urlCol)` — `bloom_filter_agg` as a scalar subquery,
+    * sized by `expectedRows` and capped by Spark at
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` — filters the
+    * seen scan with `might_contain` before the join (a filter keeps the
+    * scan's bucket partitioning). Correctness never depends on it: a false
+    * positive only lets a seen row through to the exact join, and an empty
+    * probe's null filter drops every seen row, with nothing left to
+    * anti-join.
     */
-  private val semiBloomBitsPerKey = 12
   private def antiJoinSeen(df: DataFrame, urlCol: String, expectedRows: Long,
                            caches: ArrayBuffer[Dataset[_]]): DataFrame =
     seenT.readBucketed(spark).fold(df) { seen =>
-      val nbM = BlockedBloom.blocksFor(math.max(1L, expectedRows), semiBloomBitsPerKey)
-      val semiFilter = seenT.currentSnapshot.exists(_.rowCount >= seenSemiFilterRows) &&
-        nbM.toLong * 64 + 64 <= tierBroadcastBytes
+      val semiFilter = seenT.currentSnapshot.exists(_.rowCount >= seenSemiFilterRows)
       val probe = if (semiFilter) cached(df, caches) else df
       val seenSide = seen.select($"href".as(urlCol))
-      val shrunk = if (!semiFilter) seenSide else seenSide
-        .join(broadcast(probe.agg(expr(s"bloom_agg(`$urlCol`, $nbM, 7)").as("mbits"))))
-        .filter(expr(s"bloom_might_contain(mbits, `$urlCol`)"))
-        .select(col(urlCol))
+      val shrunk = if (!semiFilter) seenSide else {
+        val bloom = probe.select(call_function("bloom_filter_agg",
+          xxhash64(col(urlCol)), lit(math.max(1L, expectedRows)))).scalar()
+        seenSide.filter(call_function("might_contain", bloom, xxhash64(col(urlCol))))
+      }
       probe.join(shrunk, Seq(urlCol), "left_anti")
     }
 

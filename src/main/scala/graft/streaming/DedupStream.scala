@@ -185,74 +185,76 @@ object DedupStream {
                                      autoCompactDirs: Int = 16,
                                      redirectsTable: Option[SnapshotTable] = None,
                                      quality: Column => Column = TextAnalysis.qualityScore,
-                                     redirectSkipMinRows: Long = DefaultRedirectSkipMinRows): Unit = {
-    import spark.implicits._
-    val gen = batchId.toInt + 1
-    val delta = batch.select(col("doc_id"), col("text"))
-    val needPairs = !pairsTable.currentSnapshot.exists(_.generation >= gen)
-    val needRedirects =
-      redirectsTable.exists(t => !t.currentSnapshot.exists(_.generation >= gen))
-    // the candidate generator eagerly materializes the delta's band rows
-    // (identical to bandIndexOf(delta) by construction); when this batch
-    // also appends to the index, reuse them — one shingle+minhash pass over
-    // the delta per batch, not two
-    var deltaBandRows: Option[DataFrame] = None
-    if (needPairs || needRedirects) {
-      val corpus = corpusTable.read(spark)
-        .getOrElse(Seq.empty[(Long, String)].toDF("doc_id", "text"))
-      // the index read is pruned by FILE (bucket ids in the file names) —
-      // per-batch read cost tracks the delta's occupied buckets, not the
-      // index size
-      val (rawPairs, bandRows) =
-        TextDedup.minhashNearDupsIndexed(corpus, indexTable, delta, threshold)
-      deltaBandRows = Some(bandRows)
-      val raw = rawPairs.select(col("a"), col("b"))
-      // redirect maintenance consumes the pair set twice (endpoints, edges)
-      // on top of the append — materialize once; pairs are tiny (dup rate)
-      val pairs = if (needRedirects) raw.localCheckpoint(true) else raw
-      if (needPairs) pairsTable.append(pairs, generation = gen)
-      if (needRedirects && !pairs.isEmpty) redirectsTable.foreach { rt =>
-        // bucketed by doc_id, NOT a plain append: compactTiered only folds
-        // uniformly bucketed chains, so plain redirect commits would grow
-        // one dir per pairful batch FOREVER (the in-run fold below would
-        // silently no-op) and the affected-docs semi-joins could never
-        // read storage-aligned
-        rt.appendBucketed(
-          updatedRedirects(spark, rt, corpus.unionByName(delta), pairs, quality,
-            redirectSkipMinRows)
-            .withColumn("gen", lit(gen)),
-          generation = gen, buckets = indexBuckets, bucketCol = "doc_id")
+                                     redirectSkipMinRows: Long = DefaultRedirectSkipMinRows): Unit =
+    // every local checkpoint the batch makes (candidate generation, the
+    // redirect path's pairs) is released once its appends landed or failed
+    TextDedup.releasingCheckpoints {
+      import spark.implicits._
+      val gen = batchId.toInt + 1
+      val delta = batch.select(col("doc_id"), col("text"))
+      val needPairs = !pairsTable.currentSnapshot.exists(_.generation >= gen)
+      val needRedirects =
+        redirectsTable.exists(t => !t.currentSnapshot.exists(_.generation >= gen))
+      // the candidate generator eagerly materializes the delta's band rows
+      // (identical to bandIndexOf(delta) by construction); when this batch
+      // also appends to the index, reuse them — one shingle+minhash pass over
+      // the delta per batch, not two
+      var deltaBandRows: Option[DataFrame] = None
+      if (needPairs || needRedirects) {
+        val corpus = corpusTable.read(spark)
+          .getOrElse(Seq.empty[(Long, String)].toDF("doc_id", "text"))
+        // the index read is pruned by FILE (bucket ids in the file names) —
+        // per-batch read cost tracks the delta's occupied buckets, not the
+        // index size
+        val (rawPairs, bandRows) =
+          TextDedup.minhashNearDupsIndexed(corpus, indexTable, delta, threshold)
+        deltaBandRows = Some(bandRows)
+        val raw = rawPairs.select(col("a"), col("b"))
+        // redirect maintenance consumes the pair set twice (endpoints, edges)
+        // on top of the append — materialize once; pairs are tiny (dup rate)
+        val pairs = if (needRedirects) TextDedup.checkpointLocal(raw, eager = true) else raw
+        if (needPairs) pairsTable.append(pairs, generation = gen)
+        if (needRedirects && !pairs.isEmpty) redirectsTable.foreach { rt =>
+          // bucketed by doc_id, NOT a plain append: compactTiered only folds
+          // uniformly bucketed chains, so plain redirect commits would grow
+          // one dir per pairful batch FOREVER (the in-run fold below would
+          // silently no-op) and the affected-docs semi-joins could never
+          // read storage-aligned
+          rt.appendBucketed(
+            updatedRedirects(spark, rt, corpus.unionByName(delta), pairs, quality,
+              redirectSkipMinRows)
+              .withColumn("gen", lit(gen)),
+            generation = gen, buckets = indexBuckets, bucketCol = "doc_id")
+        }
+      }
+      // index and corpus appends are INDEPENDENT once pairs+redirects have
+      // committed (nothing in this batch reads either table after this
+      // point, and a replay that finds any subset of {index, corpus}
+      // committed re-runs exactly the missing appends — the per-table
+      // generation guards below are evaluated BEFORE the window opens, same
+      // as the sequential form). They run in one [[CommitWindow]], which
+      // removes one serial append from the per-batch floor and settles both
+      // before a failure surfaces. The pairs→redirects→{index ∥ corpus}
+      // ORDER the replay analysis needs is preserved: the window opens
+      // strictly after the redirects append returns.
+      val needIndex = !indexTable.currentSnapshot.exists(_.generation >= gen)
+      val needCorpus = !corpusTable.currentSnapshot.exists(_.generation >= gen)
+      CommitWindow(spark, Seq(
+        // reuse the candidate generator's materialized band rows; recompute
+        // only on the replay path where pairs+redirects already committed
+        // (bit-identical either way — the pipeline is deterministic)
+        Option.when(needIndex)("index" -> (() => indexTable.appendBucketed(
+          deltaBandRows.getOrElse(TextDedup.bandIndexOf(delta)),
+          generation = gen, buckets = indexBuckets, bucketCol = "bkey"))),
+        Option.when(needCorpus)("corpus" -> (() => corpusTable.append(delta, generation = gen)))
+      ).flatten: _*)
+      if (autoCompactDirs > 0) {
+        if (indexTable.commitDirCount >= autoCompactDirs)
+          indexTable.compactTiered(spark, math.max(1, autoCompactDirs / 2))
+        redirectsTable.foreach(rt => if (rt.commitDirCount >= autoCompactDirs)
+          rt.compactTiered(spark, math.max(1, autoCompactDirs / 2)))
       }
     }
-    // index and corpus appends are INDEPENDENT once pairs+redirects have
-    // committed (nothing in this batch reads either table after this
-    // point, and a replay that finds any subset of {index, corpus}
-    // committed re-runs exactly the missing appends — the per-table
-    // generation guards below are evaluated BEFORE the window opens, same
-    // as the sequential form). They run in one [[CommitWindow]], which
-    // removes one serial append from the per-batch floor and settles both
-    // before a failure surfaces. The pairs→redirects→{index ∥ corpus}
-    // ORDER the replay analysis needs is preserved: the window opens
-    // strictly after the redirects append returns.
-    val needIndex = !indexTable.currentSnapshot.exists(_.generation >= gen)
-    val needCorpus = !corpusTable.currentSnapshot.exists(_.generation >= gen)
-    CommitWindow(spark, Seq(
-      // reuse the candidate generator's materialized band rows; recompute
-      // only on the replay path where pairs+redirects already committed
-      // (bit-identical either way — the pipeline is deterministic)
-      Option.when(needIndex)("index" -> (() => indexTable.appendBucketed(
-        deltaBandRows.getOrElse(TextDedup.bandIndexOf(delta)),
-        generation = gen, buckets = indexBuckets, bucketCol = "bkey"))),
-      Option.when(needCorpus)("corpus" -> (() => corpusTable.append(delta, generation = gen)))
-    ).flatten: _*)
-    if (autoCompactDirs > 0) {
-      if (indexTable.commitDirCount >= autoCompactDirs)
-        indexTable.compactTiered(spark, math.max(1, autoCompactDirs / 2))
-      redirectsTable.foreach(rt => if (rt.commitDirCount >= autoCompactDirs)
-        rt.compactTiered(spark, math.max(1, autoCompactDirs / 2)))
-    }
-    ()
-  }
 
   /** The rewritten redirect rows a new pair set demands: the pairs'
     * endpoints name the affected roots (their current survivor, or
@@ -302,8 +304,8 @@ object DedupStream {
     if (rt.currentSnapshot.forall(_.files.isEmpty))
       return TextDedup.memberRedirects(docs, pairs, quality)
     // the file skip arms only once the table outgrows the jobs it costs
-    // (same crossover discipline as the crawl engine's seenSemiFilterRows
-    // gate): each skipped read replaces a shared lazy scan with its own
+    // (the crawl engine's seenSemiFilterRows gate is the same kind of
+    // crossover, measured in BENCH/BASELINE.md): each skipped read replaces a shared lazy scan with its own
     // id-collect job + fresh file listing — ~2 extra driver round-trips per
     // pairful batch — which a sub-[[redirectSkipMinRows]] columnar scan
     // never costs in the first place (measured: +4 s/drain at the 3-batch

@@ -57,27 +57,6 @@ class PlanSpec extends AnyFunSuite {
       s"query side not broadcast:\n$plan")
   }
 
-  test("dedup tier probe runs inside whole-stage codegen, no ScalaUDF in the route") {
-    import org.apache.spark.sql.functions._
-    graft.functions.expressions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id").cast("string").as("href"))
-    val nb = graft.operators.BlockedBloom.blocksFor(1000, 12)
-    val bloomDf = docs.limit(100)
-      .select(pmod(xxhash64(col("href")), lit(8)).cast("int").as("bucket"), col("href"))
-      .groupBy("bucket").agg(expr(s"bloom_agg(href, $nb, 7)").as("bits"))
-    val routed = docs
-      .withColumn("bucket", pmod(xxhash64(col("href")), lit(8)).cast("int"))
-      .join(broadcast(bloomDf), Seq("bucket"), "left")
-      .filter(!expr("bloom_might_contain(bits, href)"))
-    routed.collect()
-    val plan = routed.queryExecution.executedPlan.toString
-    assert(!plan.contains("ScalaUDF"), s"probe fell back to a UDF:\n$plan")
-    val probeLine = plan.linesIterator.find(_.contains("bloom_might_contain")).getOrElse("")
-    assert("\\*\\(\\d+\\)".r.findFirstIn(probeLine).isDefined,
-      s"probe filter not in a codegen stage:\n$plan")
-  }
-
   test("simhash/minhash/fingerprint stages carry no ScalaUDF (native expressions only)") {
     // the per-document first stages of the dedup/fingerprint families are
     // native codegen'd expressions — a ScalaUDF reappearing here is a plan
@@ -244,41 +223,79 @@ class PlanSpec extends AnyFunSuite {
     plans.synchronized(plans.toList).flatMap(expand)
   }
 
-  /** LEFT ANTI sort-merge joins whose right side reads the seen table
-    * stored under `storeDir`, each with those seen scans (found by their
-    * root paths) and the shuffle exchanges on that side.
+  /** The right sides of the LEFT ANTI sort-merge joins that read the seen
+    * table stored under `storeDir` (its scans found by their root paths).
+    */
+  private def seenSides(nodes: Seq[org.apache.spark.sql.execution.SparkPlan], storeDir: String)
+  : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    nodes.collect {
+      case j: SortMergeJoinExec if j.joinType.sql == "LEFT ANTI" => j.right
+    }.filter(seenScans(_, storeDir).nonEmpty)
+  }
+
+  private def seenScans(side: org.apache.spark.sql.execution.SparkPlan, storeDir: String)
+  : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val seenData = java.nio.file.Paths.get(storeDir, "seen", "data").toUri.getPath
+    side.collect {
+      case s: FileSourceScanExec
+        if s.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(seenData)) => s
+    }
+  }
+
+  /** Each seen anti-join's seen scans and the shuffle exchanges on its
+    * seen side (see [[seenSides]]).
     */
   private def seenAntiJoins(nodes: Seq[org.apache.spark.sql.execution.SparkPlan], storeDir: String)
   : Seq[(Seq[org.apache.spark.sql.execution.FileSourceScanExec], Int)] = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    val seenData = java.nio.file.Paths.get(storeDir, "seen", "data").toUri.getPath
-    nodes.collect {
-      case j: SortMergeJoinExec if j.joinType.sql == "LEFT ANTI" =>
-        val seenScans = j.right.collect {
-          case s: FileSourceScanExec
-            if s.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(seenData)) => s
-        }
-        (seenScans, j.right.collect { case e: ShuffleExchangeExec => e }.size)
-    }.filter(_._1.nonEmpty)
+    seenSides(nodes, storeDir).map(side =>
+      (seenScans(side, storeDir), side.collect { case e: ShuffleExchangeExec => e }.size))
   }
 
   test("seen anti-join reads the bucketed store with NO exchange on the seen side") {
     import graft.pipeline.CrawlEngine
     import graft.synth.WebConfig
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.execution.{FilterExec, ScalarSubquery}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     // 2 generations: generation 2's candidate dedup anti-joins the seen
     // rows generation 1 committed (bucketed by href)
+    val cfg = WebConfig(seed = 42, nHosts = 30, resultsPerPage = 6)
+    val seeds = (1 to 4).map(i => s"singapore topic $i query")
     val dir = tempDir("bucketed-seen")
     val nodes = staticPlans {
-      new CrawlEngine(spark, WebConfig(seed = 42, nHosts = 30, resultsPerPage = 6),
-        dir, batchSize = 2).run((1 to 4).map(i => s"singapore topic $i query"))
+      new CrawlEngine(spark, cfg, dir, batchSize = 2).run(seeds)
     }
     val aligned = seenAntiJoins(nodes, dir).exists { case (scans, exchanges) =>
       scans.forall(_.bucketedScan) && exchanges == 0
     }
     assert(aligned, "expected at least one LEFT ANTI SortMergeJoin whose seen side is a " +
       "bucketed scan of <store>/seen/data with zero shuffle exchanges below it")
+    // the same crawl with the runtime semi-filter forced on: the seen side
+    // gains Spark's might_contain over a scalar subquery, with no broadcast
+    // join, and still never exchanges
+    val semiDir = tempDir("bucketed-seen-semi")
+    val semiNodes = staticPlans {
+      new CrawlEngine(spark, cfg, semiDir, batchSize = 2, seenSemiFilterRows = 1L).run(seeds)
+    }
+    val sides = seenSides(semiNodes, semiDir)
+    assert(sides.nonEmpty, "no LEFT ANTI SortMergeJoin against seen was planned")
+    sides.foreach { side =>
+      val probes = side.collect { case f: FilterExec => f.condition.collect {
+        case m: BloomFilterMightContain => m
+      } }.flatten
+      assert(probes.nonEmpty && probes.forall(_.bloomFilterExpression.find(
+        _.isInstanceOf[ScalarSubquery]).isDefined),
+        s"expected a might_contain filter fed by a subquery on the seen side:\n$side")
+      assert(side.collect { case b: BroadcastNestedLoopJoinExec => b }.isEmpty,
+        s"broadcast cross-join on the seen side:\n$side")
+    }
+    seenAntiJoins(semiNodes, semiDir).foreach { case (scans, exchanges) =>
+      assert(scans.forall(_.bucketedScan), "the seen scan must stay bucketed under the filter")
+      assert(exchanges == 0, s"$exchanges shuffle exchange(s) on the filtered seen side")
+    }
   }
 
   test("seen anti-join at 30+ commit dirs: one bucketed seen scan, no exchange, no catalog table") {

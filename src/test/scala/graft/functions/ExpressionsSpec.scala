@@ -128,30 +128,4 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(withNull.select(
       call_function("rh_bucket_long", col("v"), lit(64), lit(8), lit(0x97a3e5L))).head().getLong(0) == 0L)
   }
-
-  test("tier probe expressions COMPILE under codegen and agree with interpreted eval") {
-    // GeneratePredicate.generate throws on a codegen compile error — this
-    // pins the probes to whole-stage codegen instead of the silent
-    // fall-back-to-interpreter path (which would still pass value checks)
-    import graft.functions.expressions.BloomMightContainExpr
-    import graft.operators.BlockedBloom
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
-    import org.apache.spark.sql.catalyst.expressions.codegen.GeneratePredicate
-    import org.apache.spark.sql.types.{BinaryType, StringType}
-    import org.apache.spark.unsafe.types.UTF8String
-
-    val bloom = BlockedBloom.sized(1000, 12)
-    (0 until 100).foreach(i => bloom.add(s"u$i"))
-    val bExpr = BloomMightContainExpr(
-      BoundReference(0, BinaryType, nullable = true),
-      BoundReference(1, StringType, nullable = true))
-    val bPred = GeneratePredicate.generate(bExpr) // throws if codegen breaks
-    (0 until 100).foreach { i =>
-      val row = InternalRow(bloom.toBytes, UTF8String.fromString(s"u$i"))
-      assert(bPred.eval(row) && bExpr.eval(row) == true)
-    }
-    assert(!bPred.eval(InternalRow(null, UTF8String.fromString("u1"))),
-      "null blob must probe as definitely-new")
-  }
 }

@@ -23,15 +23,6 @@ class FiltersSpec extends AnyFunSuite {
     assert(fps < 20000 * 0.03, s"fp rate too high: $fps/20000")
   }
 
-  test("blocked bloom merge == union") {
-    val a = BlockedBloom.sized(1000)
-    val b = BlockedBloom.sized(1000)
-    (0 until 500).foreach(i => a.add(s"a$i"))
-    (0 until 500).foreach(i => b.add(s"b$i"))
-    a.merge(b)
-    assert((0 until 500).forall(i => a.mightContain(s"a$i") && a.mightContain(s"b$i")))
-  }
-
   test("cuckoo filter: insert/lookup/delete, exact negatives below capacity") {
     val cf = CuckooFilter.sized(10000)
     val keys = (0 until 8000).map(i => s"https://hot.example/page$i")
@@ -42,33 +33,6 @@ class FiltersSpec extends AnyFunSuite {
     assert(!cf.contains(keys.head) || !cf.negativesAreExact)
     val fps = (0 until 20000).count(i => cf.contains(s"absent$i"))
     assert(fps < 20000 * 0.01, s"cuckoo fp rate too high: $fps")
-  }
-
-  test("bloom_agg distributed build equals local build; byte probes agree") {
-    val spark = graft.SparkTestSession.spark
-    import spark.implicits._
-    graft.functions.expressions.GraftFunctions.register(spark)
-    val keys = (0 until 5000).map(i => s"u$i")
-    val nb = BlockedBloom.blocksFor(5000, 10)
-    val blob = keys.toDF("k")
-      .agg(org.apache.spark.sql.functions.expr(s"bloom_agg(k, $nb, 7)"))
-      .head().getAs[Array[Byte]](0)
-    val local = BlockedBloom.sized(5000, bitsPerKey = 10)
-    keys.foreach(local.add)
-    assert(blob.sameElements(local.toBytes),
-      "TypedImperativeAggregate build must equal sequential build")
-    // static byte-blob probe == instance probe, incl. absent keys
-    val utf = (s: String) => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    assert(keys.forall(k => BlockedBloom.probeBytes(blob, utf(k))))
-    (0 until 2000).foreach { i =>
-      assert(BlockedBloom.probeBytes(blob, utf(s"absent$i")) ==
-        local.mightContain(s"absent$i"))
-    }
-    // or-merge in byte form == merge in object form
-    val b2 = BlockedBloom.sized(5000, bitsPerKey = 10)
-    (0 until 100).foreach(i => b2.add(s"v$i"))
-    val merged = BlockedBloom.orBytes(blob, b2.toBytes)
-    assert(BlockedBloom.fromBytes(merged).bitCount == local.merge(b2).bitCount)
   }
 
   test("cuckoo byte serialization round-trips; byte probe == instance probe") {

@@ -84,7 +84,7 @@ class OracleEngineParitySpec extends AnyFunSuite {
     assert(oraImages.nonEmpty, "fixture must produce image records")
   }
 
-  test("over-budget tiers: zero byte budget skips cuckoo builds and bloom broadcast, parity holds") {
+  test("zero byte budget: no gated broadcast, retired tier tables never written, parity holds") {
     // tierBroadcastBytes=1 turns every gated broadcast off; the exact
     // anti-join decides membership on its own, so the seen set stays
     // oracle-equal, and neither retired tier table is ever written
@@ -125,11 +125,12 @@ class OracleEngineParitySpec extends AnyFunSuite {
     val host = oldState.orderBy($"n_scheduled".desc, $"host").select($"host").as[String].head()
     val cf = graft.operators.CuckooFilter.sized(1024)
     eng1.cuckooT.replace(Seq((host, cf.toBytes, true)).toDF("host", "cf", "cf_exact"), 1)
+    // the retired tier's serialized filter: [k = 7][nb 64-byte blocks, all zero]
     val (bloomBuckets, capacity) = (32, 1L << 20)
-    val nb = graft.operators.BlockedBloom.blocksFor(capacity / bloomBuckets, 12)
-    val zeroBits = new graft.operators.BlockedBloom(new Array[Long](nb * 8), nb, 7).toBytes
+    val nb = (capacity / bloomBuckets * 12 + 511) / 512
+    val zeroBits = 7.toByte +: new Array[Byte](nb.toInt * 64)
     eng1.bloomT.replace((0 until bloomBuckets).map(b => (b, zeroBits)).toDF("bucket", "bits"), 1,
-      Map("capacity" -> capacity, "num_blocks" -> nb.toLong))
+      Map("capacity" -> capacity, "num_blocks" -> nb))
 
     val eng2 = new CrawlEngine(spark, denseCfg, dir, batchSize, expandTopK = 3)
     assert(eng2.hostStateT.read(spark).get.columns.contains("n_scheduled"))
@@ -179,10 +180,10 @@ class OracleEngineParitySpec extends AnyFunSuite {
   }
 
   test("over-budget host tables + expansion: gated broadcasts fall back to plain joins, parity holds") {
-    // tierBroadcastBytes=1 forces EVERY gated broadcast off — host
-    // profiles, host_state, and the expansion path's semi-filter —
-    // onto plain key joins; results must be oracle-identical (gates route
-    // the plan, never decide membership)
+    // tierBroadcastBytes=1 forces EVERY gated broadcast off — the host
+    // profiles on the schedule and expansion paths, and host_state — onto
+    // plain key joins; results must be oracle-identical (gates route the
+    // plan, never decide membership)
     val oracleExp = SequentialOracle.run(cfg, seeds, batchSize, expandTopK = 3)
     val eng = new CrawlEngine(SparkTestSession.spark, cfg, tempDir("hostgate"),
       batchSize, tierBroadcastBytes = 1L, expandTopK = 3)

@@ -71,7 +71,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(t.compact(spark, targetFileBytes = 1L << 30).isEmpty)
   }
 
-  test("bucketed commits: per-dir bucket registry, chunked bucket-aligned reads, bucket-preserving compact") {
+  test("bucketed commits: per-dir bucket registry, one bucket-aligned scan, bucket-preserving compact") {
     import org.apache.spark.sql.functions.{col, xxhash64}
     val t = freshTable("bucketed")
     def rows(g: Int) = (1 to 100).map(i => (g * 1000 + i).toLong).toDF("id")
@@ -163,7 +163,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(t2.readBucketSkipped(spark, "h", (_, _) => false).isEmpty)
   }
 
-  test("mixed bucketed/plain dirs: no table-level spec, chunked read falls back per dir") {
+  test("mixed bucketed/plain dirs: no table-level spec, no bucketed scan until rebucketed") {
     import org.apache.spark.sql.functions.{col, xxhash64}
     val t = freshTable("mixed")
     t.append((1 to 10).map(_.toLong).toDF("id")
@@ -191,7 +191,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(t.read(spark).get.as[(Long, Long)].collect().toSet == before)
   }
 
-  test("tiered compact folds ONLY the smallest dirs; rows, bucketing, chunk union preserved") {
+  test("tiered compact folds ONLY the smallest dirs; rows, bucketing, bucketed scan preserved") {
     import org.apache.spark.sql.functions.{col, xxhash64}
     val t = freshTable("tiered")
     def rows(g: Int, n: Int) = (1 to n).map(i => (g * 1000 + i).toLong).toDF("id")

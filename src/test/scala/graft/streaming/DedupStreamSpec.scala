@@ -217,9 +217,19 @@ class DedupStreamSpec extends AnyFunSuite {
     val b1 = ((8 until 16).map(i => (i.toLong, doc(300 + i))) ++
       Seq((1000L, doc(300) + " zzz"), (1012L, doc(312) + " zzz"))).toDF("doc_id", "text")
     val names = Seq("corpus", "near_dup_pairs", "band_index", "redirects")
+    // every call, clean or failing, must release what it checkpointed.
+    // Persisted RDDs are held in a weak-valued map: compare id sets, since
+    // GC may drop unrelated entries during the call
+    val sc = spark.sparkContext
     def commit(store: SnapshotStore, b: DataFrame, batchId: Long): Unit = {
       val Seq(c, p, i, r) = names.map(store.table)
-      DedupStream.commitBatch(spark, c, p, i, b, batchId, threshold = 0.8, redirectsTable = Some(r))
+      val cachedBefore = sc.getPersistentRDDs.keySet
+      val result = scala.util.Try(DedupStream.commitBatch(spark, c, p, i, b, batchId,
+        threshold = 0.8, redirectsTable = Some(r)))
+      assert(sc.getPersistentRDDs.keySet.diff(cachedBefore).isEmpty,
+        s"${store.root}: batch $batchId left RDDs persisted after commitBatch ${
+          if (result.isFailure) "threw" else "returned"}")
+      result.get
     }
     // every table's raw rows, sorted (duplicates kept), plus the redirect view
     def state(store: SnapshotStore) = (names.map { n =>
