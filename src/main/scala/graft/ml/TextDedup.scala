@@ -442,7 +442,7 @@ object TextDedup {
     *   - ≤ 1024 (`InListCap`): FILE-level bucket skip — the keys map
     *     driver-side to the storage-bucket ids the index writer stamped
     *     into its file names ([[graft.snapshot.SnapshotStore.bucketIdOfLong]]),
-    *     so only matching files are listed — plus a `bkey IN` row-group
+    *     so only matching files are scanned — plus a `bkey IN` row-group
     *     filter;
     *   - ≤ 2¹⁵ (`PruneMaxKeys`): the file skip alone, which has no
     *     plan-side cost at any key count;
@@ -518,7 +518,7 @@ object TextDedup {
       col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
         col("x.id") < col("y.id") && (col("x.isd") || col("y.isd")))
       .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
-      .transform(checkpointLocal(_, eager = false)) // read twice below: the id set and the verify join
+      .transform(checkpointLocal(_, eager = true)) // eager: two stages of one job read it below
     val candIds = cands.select($"a".as("id"))
       .unionByName(cands.select($"b".as("id"))).distinct()
     val corpusHits = corpus

@@ -2,15 +2,16 @@ package graft.snapshot
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, NoopCache, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -94,7 +95,40 @@ final class SnapshotTable(val root: Path, val name: String) {
     */
   def read(spark: SparkSession, at: Option[Long] = None): Option[DataFrame] = {
     val meta = at.map(snapshot).orElse(currentSnapshot)
-    meta.filter(_.files.nonEmpty).map(m => spark.read.parquet(m.files.map(_.path): _*))
+    meta.filter(_.files.nonEmpty).map(m => scan(spark, m.files, None))
+  }
+
+  /** Driver-side Hadoop statuses of manifest files (no Spark job), with the
+    * qualified paths the file index keys its leaf files by.
+    */
+  private def fileStatuses(spark: SparkSession, files: List[DataFileMeta]): List[FileStatus] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { f => val p = new HPath(f.path); p.getFileSystem(conf).getFileStatus(p) }
+  }
+
+  /** THE scan of manifest files, planned from the manifest alone: a file
+    * index rooted at the files, whose status cache already holds their
+    * driver-side stats, and the schema of the least path's footer (the file
+    * `spark.read` infers from, so files that differ in schema read the same
+    * columns). Building it starts no Spark job at any file or dir count.
+    * `bucket` claims a bucket spec over the stamped file ids. One cache per
+    * scan: a rollback then a re-commit reuses an `s<id>` dir name.
+    */
+  private def scan(spark: SparkSession, files: List[DataFileMeta],
+                   bucket: Option[(Int, String)]): DataFrame = {
+    val statuses = fileStatuses(spark, files)
+    val known = statuses.map(s => s.getPath -> Array(s)).toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: HPath): Option[Array[FileStatus]] = known.get(path)
+      def putLeafFiles(path: HPath, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), Map.empty, None, cache,
+      Some(PartitionSpec.emptySpec))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      parquetSchema(statuses.map(_.getPath).minBy(_.toString)),
+      bucket.map { case (n, bc) => BucketSpec(n, Seq(bc), Nil) },
+      new ParquetFileFormat(), Map.empty)(spark))
   }
 
   /** Append commit: write df as new data files, new snapshot = parent files
@@ -159,16 +193,10 @@ final class SnapshotTable(val root: Path, val name: String) {
         // commit path, measured).
         df.repartition(n, org.apache.spark.sql.functions.col(bc))
           .write.mode("overwrite").parquet(dataDir.toString)
-        val partRe = "part-(\\d+)-".r
         listParquet(dataDir).foreach { p =>
-          val nm = p.getFileName.toString
-          partRe.findFirstMatchIn(nm).foreach { m =>
-            val dot = nm.indexOf('.')
-            val stem = if (dot < 0) nm else nm.substring(0, dot)
-            val ext = if (dot < 0) "" else nm.substring(dot)
-            Files.move(p, p.resolveSibling(s"${stem}_${m.group(1)}$ext"),
-              StandardCopyOption.ATOMIC_MOVE)
-          }
+          val nm = p.getFileName.toString // part-00003-<uuid>.snappy.parquet
+          val stamped = nm.replaceFirst("^(part-(\\d+)-[^.]*)", "$1_$2")
+          if (stamped != nm) Files.move(p, p.resolveSibling(stamped), StandardCopyOption.ATOMIC_MOVE)
         }
       case None =>
         df.write.mode("overwrite").parquet(dataDir.toString)
@@ -219,30 +247,21 @@ final class SnapshotTable(val root: Path, val name: String) {
     }
   }
 
-  /** The current snapshot as ONE bucketed scan over every live commit dir:
-    * a file relation whose index is rooted at the dirs and whose bucket
-    * spec is the table's, so the scan reports `HashPartitioning(bucketCol,
-    * n)` across all dirs at once — a join keyed on the bucket column reads
-    * this side with NO exchange however many dirs the snapshot holds, and
-    * a filter on it prunes buckets. Bucket ids come from the stamped file
-    * names, so each bucket's task reads that bucket's file from every dir.
-    * Nothing is registered in the session catalog; the index lists the
-    * dirs afresh on every call (no shared file-status cache: a rollback
-    * followed by a re-commit reuses an `s<id>` dir name). No sort columns
-    * are claimed: the writer repartitions but does not sort. None when the
-    * table is empty; throws when the dirs do not share one spec — [[heal]]
-    * first.
+  /** The current snapshot as ONE bucketed [[scan]] under the table's
+    * spec: it reports `HashPartitioning(bucketCol, n)` across every live
+    * commit dir at once, so a join keyed on the bucket column reads this
+    * side with NO exchange however many dirs the snapshot holds, and a
+    * filter on it prunes buckets. Each bucket's task reads that bucket's
+    * file from every dir. Nothing is registered in the session catalog. No
+    * sort columns are claimed: the writer repartitions but does not sort.
+    * None when the table is empty; throws when the dirs do not share one
+    * spec — [[heal]] first.
     */
   def readBucketed(spark: SparkSession): Option[DataFrame] =
     currentSnapshot.filter(_.files.nonEmpty).map { cur =>
-      val (n, bc) = bucketSpec.getOrElse(throw new IllegalStateException(
+      val spec = bucketSpec.getOrElse(throw new IllegalStateException(
         s"table $name: commit dirs do not share one bucket spec (${cur.dirBuckets}); rebucket it"))
-      val dirs = cur.files.map(f => Paths.get(f.path).getParent).distinct
-      val index = new InMemoryFileIndex(spark, dirs.map(d => new HPath(d.toString)), Map.empty,
-        None, NoopCache, Some(PartitionSpec.emptySpec))
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
-        parquetSchema(Paths.get(cur.files.head.path)), Some(BucketSpec(n, Seq(bc), Nil)),
-        new ParquetFileFormat(), Map.empty)(spark))
+      scan(spark, cur.files, Some(spec))
     }
 
   /** Rewrite the table bucketed (`buckets`, `bucketCol`) unless it already
@@ -254,40 +273,17 @@ final class SnapshotTable(val root: Path, val name: String) {
     if (bucketSpec.contains((buckets, bucketCol))) None
     else rebucket(spark, buckets, bucketCol)
 
-  /** Bucket id stamped in a bucketed data file's name (the `_NNNNN` suffix
-    * [[appendBucketed]]'s rename puts before the extension). None for files
-    * from non-bucketed commits.
-    */
-  private def fileBucketId(fileName: String): Option[Int] = {
-    val stem = fileName.indexOf('.') match {
-      case -1 => fileName
-      case i => fileName.substring(0, i)
-    }
-    val u = stem.lastIndexOf('_')
-    if (u < 0) None
-    else {
-      val tail = stem.substring(u + 1)
-      if (tail.nonEmpty && tail.forall(_.isDigit)) Some(tail.toInt) else None
-    }
-  }
-
-  /** Plain scan of the current snapshot restricted to the data files whose
-    * stamped bucket id passes `keep(numBuckets, bucketId)` under their dir's
-    * recorded spec — FILE-level pruning decided at listing time from the
-    * manifest alone, so a probe that knows its occupied buckets reads
-    * O(occupied/total) of the table with ZERO plan-side cost (no thousand-
-    * literal `IN` for Catalyst to fold or parquet to stat-check; contrast
-    * the [[readBucketed]] + `isInCollection` route, whose planning cost
-    * grows with the key-list size). `bucketCol` names the column the
-    * caller's keys hash: dirs bucketed on ANY OTHER column are always kept
-    * in full — pruning them by ids routed under a different column's hash
-    * would silently drop matching rows — as are dirs with no spec at all
-    * (correct, just unpruned). None when the table is empty or every file
-    * was skipped (the caller supplies the empty-case plan).
-    *
-    * The scan does NOT report bucket partitioning (it is a plain
-    * `spark.read.parquet` over the kept paths) — use [[readBucketed]]
-    * when a downstream join needs the exchange-free bucketed shape.
+  /** Plain [[scan]] of the current snapshot's files whose stamped bucket
+    * id (parsed by `BucketingUtils.getBucketId`, as the bucketed scan
+    * assigns files) passes `keep(numBuckets, bucketId)` under their dir's
+    * spec — FILE-level pruning from the manifest alone, so a probe that
+    * knows its occupied buckets reads O(occupied/total) of the table with
+    * no plan-side cost (contrast a thousand-literal `isInCollection`).
+    * `bucketCol` names the column the caller's keys hash: dirs bucketed on
+    * ANY OTHER column, or with no spec, are kept in full — pruning them by
+    * ids routed under another hash would silently drop matching rows. None
+    * when the table is empty or every file was skipped. The scan reports no
+    * bucket partitioning; use [[readBucketed]] for that shape.
     */
   def readBucketSkipped(spark: SparkSession, bucketCol: String,
                         keep: (Int, Int) => Boolean): Option[DataFrame] =
@@ -299,11 +295,11 @@ final class SnapshotTable(val root: Path, val name: String) {
           case Some(spec) =>
             val Array(n, bc) = spec.split(":", 2)
             bc != bucketCol ||
-              fileBucketId(p.getFileName.toString).forall(keep(n.toInt, _))
+              BucketingUtils.getBucketId(p.getFileName.toString).forall(keep(n.toInt, _))
           case None => true
         }
       }
-      if (kept.isEmpty) None else Some(spark.read.parquet(kept.map(_.path): _*))
+      if (kept.isEmpty) None else Some(scan(spark, kept, None))
     }
 
   /** Number of live commit dirs in the current snapshot (manifest-only —
@@ -357,19 +353,15 @@ final class SnapshotTable(val root: Path, val name: String) {
           // bucketed table: fold k commit dirs × n files into ONE dir × n
           // files, preserving the bucket layout (the rewrite shuffles on the
           // bucket column — the price of keeping exchange-free reads)
-          val nDirs = cur.files.map(f => Paths.get(f.path).getParent).distinct.size
-          if (nDirs <= 1) None
-          else Some(replaceBucketed(spark.read.parquet(cur.files.map(_.path): _*),
-            cur.generation, n, bc, cur.counters))
+          if (commitDirCount <= 1) None
+          else Some(replaceBucketed(scan(spark, cur.files, None), cur.generation, n, bc, cur.counters))
         case None =>
-          val totalBytes = cur.files.map(f =>
-            try Files.size(Paths.get(f.path)) catch { case _: Exception => 0L }).sum
+          val totalBytes = fileStatuses(spark, cur.files).map(_.getLen).sum
           val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
           if (cur.files.size <= nFiles) None
           else {
-            val df = spark.read.parquet(cur.files.map(_.path): _*)
             // coalesce, not repartition: compaction is an IO rewrite, no shuffle
-            Some(replace(df.coalesce(nFiles), cur.generation, cur.counters))
+            Some(replace(scan(spark, cur.files, None).coalesce(nFiles), cur.generation, cur.counters))
           }
       }
     }
@@ -384,8 +376,7 @@ final class SnapshotTable(val root: Path, val name: String) {
     */
   def rebucket(spark: SparkSession, buckets: Int, bucketCol: String): Option[SnapshotMeta] =
     currentSnapshot.filter(_.files.nonEmpty).map { cur =>
-      replaceBucketed(spark.read.parquet(cur.files.map(_.path): _*),
-        cur.generation, buckets, bucketCol, cur.counters)
+      replaceBucketed(scan(spark, cur.files, None), cur.generation, buckets, bucketCol, cur.counters)
     }
 
   /** Size-tiered MINOR compaction for a bucketed table (the LSM merge shape):
@@ -416,8 +407,8 @@ final class SnapshotTable(val root: Path, val name: String) {
             .take(byDir.size - targetDirs + 1)
             .map(_._1).toSet
           val (folded, kept) = cur.files.partition(f => foldDirs(Paths.get(f.path).getParent))
-          val df = spark.read.parquet(folded.map(_.path): _*)
-          Some(commitRetaining(df, cur.generation, cur.counters, kept, Some((n, bc))))
+          Some(commitRetaining(scan(spark, folded, None), cur.generation, cur.counters, kept,
+            Some((n, bc))))
         }
       }
     }
@@ -468,24 +459,32 @@ final class SnapshotTable(val root: Path, val name: String) {
   private def listParquet(dir: Path): List[Path] =
     listDir(dir).filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
 
-  private def openFooter(p: Path): ParquetFileReader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(p.toString), new Configuration()))
+  private def openFooter(p: HPath): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(p, new Configuration()))
 
   /** Row count from the parquet footer (no data read). */
   private def parquetRows(p: Path): Long = {
-    val r = openFooter(p)
+    val r = openFooter(new HPath(p.toString))
     try r.getRecordCount finally r.close()
   }
 
   /** Spark schema from one file's footer, read on the driver: inferring
-    * it through `spark.read` would run a Spark job per scan built. Columns
-    * are made nullable, as a `spark.read` relation makes them.
+    * it through `spark.read` would run a Spark job per scan built. Every
+    * field, nested ones included, is made nullable, as a `spark.read`
+    * relation makes them.
     */
-  private def parquetSchema(p: Path): StructType = {
+  private def parquetSchema(p: HPath): StructType = {
     val r = openFooter(p)
-    val s = try ParquetFileFormat.readSchemaFromFooter(new Footer(new HPath(p.toString), r.getFooter),
+    val s = try ParquetFileFormat.readSchemaFromFooter(new Footer(p, r.getFooter),
       new ParquetToSparkSchemaConverter(SQLConf.get)) finally r.close()
-    StructType(s.fields.map(_.copy(nullable = true)))
+    nullable(s).asInstanceOf[StructType]
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
   }
 }
 

@@ -278,7 +278,7 @@ object DedupStream {
     * driver-side to the stamped bucket ids of the files that can hold
     * their rows ([[graft.snapshot.SnapshotStore.bucketIdOfLong]] /
     * [[SnapshotTable.readBucketSkipped]] — the same machinery the band
-    * index uses) and the scan lists only those files: O(affected buckets)
+    * index uses) and the scan reads only those files: O(affected buckets)
     * of the table, independent of how much superseded history the chain
     * carries between [[compactRedirects]] passes. The one remaining full
     * scan is the roots→members lookup, which keys on `survivor_id` — NOT
@@ -305,11 +305,11 @@ object DedupStream {
       return TextDedup.memberRedirects(docs, pairs, quality)
     // the file skip arms only once the table outgrows the jobs it costs
     // (the crawl engine's seenSemiFilterRows gate is the same kind of
-    // crossover, measured in BENCH/BASELINE.md): each skipped read replaces a shared lazy scan with its own
-    // id-collect job + fresh file listing — ~2 extra driver round-trips per
-    // pairful batch — which a sub-[[redirectSkipMinRows]] columnar scan
-    // never costs in the first place (measured: +4 s/drain at the 3-batch
-    // sf0.1 fixture with the skip unconditional). Above the threshold the
+    // crossover, measured in BENCH/BASELINE.md): each skipped read replaces
+    // a shared lazy scan with its own id-collect job (~2 driver round-trips
+    // per pairful batch), which a sub-[[redirectSkipMinRows]] scan never
+    // costs (measured +4 s/drain at the 3-batch sf0.1 fixture, skip always
+    // on, when skipped reads also listed files). Above the threshold the
     // scan is the dominant term and the skip reads O(affected buckets).
     val skipWorthIt = rt.currentSnapshot.exists(_.rowCount >= redirectSkipMinRows)
     val hist = rt.read(spark).map(_.select(col("doc_id"), col("survivor_id"), col("gen")))
@@ -362,9 +362,9 @@ object DedupStream {
   private val redirectIdCap: Int = 1 << 15
 
   /** Default arming threshold for the redirects file skip: below this many
-    * stored rows the two extra id-collect jobs + per-read file listings
-    * cost more than the full columnar scans they avoid (measured +4 s per
-    * 3-batch drain at the sf0.1 fixture); above it the scan term dominates
+    * stored rows the two extra id-collect jobs cost more than the full
+    * columnar scans they avoid (measured +4 s per 3-batch drain at sf0.1,
+    * when skipped reads also listed files); above it the scan term dominates
     * and the skip reads O(affected buckets) instead of O(history). 2¹⁷ rows
     * ≈ a few MB columnar — the same order as the CC driver-endgame bound,
     * and safely past the crossover on any hardware this engine targets.

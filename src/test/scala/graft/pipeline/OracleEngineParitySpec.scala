@@ -366,20 +366,27 @@ class OracleEngineParitySpec extends AnyFunSuite {
     Paths.get(dir)
   }
 
+  private def failCommitAndResume(table: String): Unit = failAndResume(table)
+
   /** Fail generation 2's commit to `table` by planting a directory at its
     * next manifest path: run() must throw IOException with nothing left
     * committing and no generation cache left persisted, and a resume on a
-    * fresh engine must equal the oracle (= the uninjected run).
+    * fresh engine must equal the oracle (= the uninjected run). The
+    * maintenance points fail the commit `ahead` manifests on, in a copy of
+    * `base`, run by `engine` engines: a failure after generation 2's
+    * barrier leaves `committed = 2` and nothing for the resume to crawl.
     */
-  private def failCommitAndResume(table: String): Unit = {
-    val dir = StoreCopy(sweepBase).toString
-    val eng = sweepEngine(dir)
+  private def failAndResume(table: String, base: Path = sweepBase, ahead: Long = 1,
+                            engine: String => CrawlEngine = sweepEngine,
+                            committed: Int = 1): Unit = {
+    val dir = StoreCopy(base).toString
+    val eng = engine(dir)
     val tables = Seq(eng.seenT, eng.linksT, eng.docsT, eng.imagesT, eng.pdfT,
       eng.processedT, eng.hostStateT, eng.metricsT, eng.eventsT, eng.frontierT,
       eng.partitionMetricsT)
     val target = tables.find(_.name == table).getOrElse(fail(s"no table $table"))
     val plant = Paths.get(dir, table, "snapshots",
-      s"snapshot-${target.currentSnapshotId.fold(0L)(_ + 1)}.json")
+      s"snapshot-${target.currentSnapshotId.fold(ahead - 1)(_ + ahead)}.json")
     Files.createDirectories(plant)
     // persisted RDDs are held in a weak-valued map: compare ids, since GC
     // may drop unrelated entries during the run
@@ -391,10 +398,10 @@ class OracleEngineParitySpec extends AnyFunSuite {
     val atThrow = tables.map(_.currentSnapshotId)
     Thread.sleep(500)
     assert(tables.map(_.currentSnapshotId) == atThrow, s"$table: a commit landed after run() threw")
-    assert(eng.lastCommittedGeneration == 1, table)
+    assert(eng.lastCommittedGeneration == committed, table)
     Files.delete(plant)
-    val resumed = sweepEngine(dir)
-    assert(resumed.run(sweepSeeds) == 1, table)
+    val resumed = engine(dir)
+    assert(resumed.run(sweepSeeds) == 2 - committed, table)
     assert(resumed.seenSet() == sweepOracle.seen, table)
     assert(resumed.crawlOrder() == sweepOracle.crawlOrder, table)
     assert(resumed.docs().map(_.doc_id).toSet == sweepOracle.docs.map(_.doc_id).toSet, table)
@@ -408,6 +415,31 @@ class OracleEngineParitySpec extends AnyFunSuite {
   test("a commit that fails after the window (frontier, metrics, the processed_queries barrier): resume is oracle-equal") {
     assert(sweepOracle.counters("expanded") > 0, "fixture must expand links")
     Seq("frontier", "metrics", "processed_queries").foreach(failCommitAndResume)
+  }
+
+  test("a maintenance commit that fails (the start-of-run seen heal, the in-run tiered seen fold): resume is oracle-equal") {
+    // the heal: generation 1's seen rows as the legacy layout of the heal
+    // spec above (a plain dir, then bucketed ones), so run() rebuckets seen
+    // before generation 2
+    val spark = SparkTestSession.spark
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val legacyBase: Path = {
+      val dir = StoreCopy(sweepBase)
+      val seenT = sweepEngine(dir.toString).seenT
+      val gen1 = seenT.read(spark).get
+      val (n, _) = seenT.bucketSpec.get
+      def third(k: Int) = gen1.filter(pmod(xxhash64(col("href")), lit(3)) === k)
+      seenT.replace(third(0), 1)
+      seenT.appendBucketed(third(1), 1, n, "href")
+      seenT.appendBucketed(third(2), 1, n, "href")
+      assert(seenT.bucketSpec.isEmpty && seenT.commitDirCount == 3, "fixture must be a legacy seen table")
+      dir
+    }
+    failAndResume("seen", base = legacyBase)
+    // the fold: at a 2-dir cadence generation 2's seen append makes the
+    // second dir, so the compactTiered commit right after it fails
+    failAndResume("seen", ahead = 2, committed = 2, engine = dir =>
+      new CrawlEngine(spark, cfg, dir, sweepBatch, expandTopK = 1, autoMaintainSeenDirs = 2))
   }
 
   test("dedup idempotence: re-running the same seeds is a no-op") {

@@ -163,6 +163,55 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(t2.readBucketSkipped(spark, "h", (_, _) => false).isEmpty)
   }
 
+  test("every read plans from the manifest: zero Spark jobs to build it over 33+ dirs; rows equal spark.read.parquet") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val t = freshTable("plan")
+    // 34 dirs: more roots than spark.read's 32-path parallel-listing threshold
+    (1 to 34).foreach(g => t.appendBucketed((1 to 20).map(i => (g * 1000 + i).toLong).toDF("id")
+      .select(xxhash64(col("id")).as("h"), col("id")), g, buckets = 2, bucketCol = "h"))
+    assert(t.commitDirCount == 34 && t.currentSnapshot.get.files.size == 68)
+    val sc = spark.sparkContext
+    // the job group of every job started, tagged per read while it is BUILT
+    // (planned, no action run)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach(started.add)
+    }
+    def inGroup[A](group: String)(body: => A): A = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    val built = try {
+      val reads = Seq(
+        "read" -> inGroup("read")(t.read(spark)),
+        "read-at" -> inGroup("read-at")(t.read(spark, at = Some(5L))),
+        "read-bucketed" -> inGroup("read-bucketed")(t.readBucketed(spark)),
+        "read-skipped" -> inGroup("read-skipped")(t.readBucketSkipped(spark, "h", (_, b) => b == 1)))
+      // a marker job after every build: the listener queue is FIFO, so once
+      // its start arrives every earlier job start has been delivered
+      inGroup("drain")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains("drain") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains("drain"), "listener events were not drained")
+      reads.map { case (g, df) => g -> df.get }
+    } finally sc.removeSparkListener(listener)
+    val jobs = built.map { case (g, _) => g -> started.asScala.count(_ == g) }
+    assert(jobs.forall(_._2 == 0), s"Spark jobs started while planning each read: $jobs")
+    def rowsOf(df: DataFrame) = df.select($"h", $"id").as[(Long, Long)].collect().sorted.toSeq
+    def parquetOf(files: Seq[DataFileMeta]) = rowsOf(spark.read.parquet(files.map(_.path): _*))
+    val cur = t.currentSnapshot.get.files
+    val oddBucket = cur.filter(f => org.apache.spark.sql.execution.datasources.BucketingUtils
+      .getBucketId(java.nio.file.Paths.get(f.path).getFileName.toString).contains(1))
+    val want = Map("read" -> parquetOf(cur), "read-at" -> parquetOf(t.snapshot(5L).files),
+      "read-bucketed" -> parquetOf(cur), "read-skipped" -> parquetOf(oddBucket))
+    assert(oddBucket.size == 34 && want("read-at").size == 6 * 20)
+    built.foreach { case (g, df) => assert(rowsOf(df) == want(g), s"$g rows differ") }
+  }
+
   test("mixed bucketed/plain dirs: no table-level spec, no bucketed scan until rebucketed") {
     import org.apache.spark.sql.functions.{col, xxhash64}
     val t = freshTable("mixed")

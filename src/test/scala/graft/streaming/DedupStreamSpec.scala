@@ -262,6 +262,41 @@ class DedupStreamSpec extends AnyFunSuite {
     }
   }
 
+  test("the in-run tiered band_index fold fails once: commitBatch throws after every append landed, replay equals the uninjected drain") {
+    // at a 2-dir cadence batch 1's index append makes the index's second
+    // dir, so the compactTiered commit right after the appends fails
+    val b0 = (0 until 8).map(i => (i.toLong, doc(300 + i))).toDF("doc_id", "text")
+    val b1 = ((8 until 16).map(i => (i.toLong, doc(300 + i))) ++
+      Seq((1000L, doc(300) + " zzz"), (1012L, doc(312) + " zzz"))).toDF("doc_id", "text")
+    val names = Seq("corpus", "near_dup_pairs", "band_index", "redirects")
+    def commit(store: SnapshotStore, b: DataFrame, batchId: Long): Unit = {
+      val Seq(c, p, i, r) = names.map(store.table)
+      DedupStream.commitBatch(spark, c, p, i, b, batchId, threshold = 0.8, autoCompactDirs = 2,
+        redirectsTable = Some(r))
+    }
+    def state(store: SnapshotStore) = (names.map { n =>
+      store.table(n).read(spark).map(_.collect().map(_.toString).sorted.toSeq).getOrElse(Nil)
+    }, DedupStream.latestRedirects(spark, store.table("redirects"))
+      .as[(Long, Long, Boolean)].collect().toSet)
+    val base = Files.createTempDirectory("graft-dstream-fold-base")
+    commit(SnapshotStore(base.toString), b0, 0L)
+    val clean = SnapshotStore(graft.StoreCopy(base).toString)
+    commit(clean, b1, 1L)
+    assert(clean.table("band_index").commitDirCount == 1, "the uninjected batch 1 must fold the index")
+    val store = SnapshotStore(graft.StoreCopy(base).toString)
+    val indexT = store.table("band_index")
+    val plant = store.root.resolve("band_index").resolve("snapshots")
+      .resolve(s"snapshot-${indexT.currentSnapshotId.get + 2}.json")
+    Files.createDirectories(plant)
+    intercept[java.io.IOException](commit(store, b1, 1L))
+    assert(names.forall(store.table(_).currentSnapshot.exists(_.generation == 2)) &&
+      indexT.commitDirCount == 2, "every append must land before the fold fails")
+    Files.delete(plant)
+    commit(store, b1, 1L)
+    assert(indexT.commitDirCount == 1, "the replay must fold the index")
+    assert(state(store) == state(clean), "replay differs from the uninjected drain")
+  }
+
   test("compactRedirects folds latest-wins history to one row per doc; the stream keeps working after") {
     val store = SnapshotStore(Files.createTempDirectory("graft-dstream-compact").toString)
     val corpusT = store.table("corpus")

@@ -12,28 +12,45 @@ Prints every run as it finishes, then, for each end-to-end metric declared in
 the parent's BENCHMARK.json: the median and quartiles of each side, the
 number of pairs the change won, the change's median relative to the
 parent's, and a verdict:
+  - "better-all": the parent's IQR, relative to its median, is wider than
+    the metric's bound, but every change run beats every parent run;
   - "unresolved": the parent's IQR, relative to its median, is wider than
     the metric's bound, so a shift within the bound cannot be told apart;
   - "worse>bound": the change's median is worse than the parent's by more
     than the bound;
   - "ok" otherwise.
-A run that produced no result counts as failed on its side and is never a
-sample. Exits non-zero if any run failed or reported `correct: false`.
+A run that produced no result, or ran past RUN_CAP_S seconds, counts as
+failed on its side and is never a sample; the last 20 stderr lines of every
+failed run are printed. Exits non-zero if any run failed or reported `correct: false`.
 """
 import json
 import os
+import signal
 import statistics
 import subprocess
 import sys
+
+RUN_CAP_S = 900  # wall cap of one perfbench run; a run past it counts as failed
 
 
 def run_once(checkout, workload, seed, trace=0):
     cmd = [sys.executable, os.path.join(checkout, "perfbench", "run.py"),
            "--workload", workload, "--seed", str(seed), "--seconds", "10", "--trace", str(trace)]
-    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-                       text=True)
-    lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
+    # own session, so a run past the cap is killed with the JVMs it started
+    p = subprocess.Popen(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                         text=True, start_new_session=True)
+    try:
+        out, err = p.communicate(timeout=RUN_CAP_S)
+        why = f"exit {p.returncode}"
+    except subprocess.TimeoutExpired:
+        os.killpg(p.pid, signal.SIGKILL)
+        _, err = p.communicate()
+        out, why = "", f"past the {RUN_CAP_S} s cap"
+    lines = [l for l in out.splitlines() if l.startswith("{")]
     if not lines:
+        tail = "\n".join(err.splitlines()[-20:])
+        print(f"{checkout} {workload} seed {seed}: no result ({why}); stderr tail:\n{tail}",
+              flush=True)
         return None
     return json.loads(lines[-1])
 
@@ -79,8 +96,10 @@ def main():
         won = sum(1 for p, c in zip(val["parent"], val["change"]) if (c > p if higher else c < p))
         ratio = cq[1] / pq[1] if pq[1] else float("nan")
         worse = (1 - ratio) if higher else (ratio - 1)
+        beats_all = (min(val["change"]) > max(val["parent"]) if higher
+                     else max(val["change"]) < min(val["parent"]))
         if pq[1] and (pq[2] - pq[0]) / pq[1] > bound:
-            verdict = "unresolved"
+            verdict = "better-all" if beats_all else "unresolved"
         elif worse > bound:
             verdict = "worse>bound"
         else:
