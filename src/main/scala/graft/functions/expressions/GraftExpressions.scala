@@ -2,7 +2,7 @@ package graft.functions.expressions
 
 import graft.util.Hashing
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -379,48 +379,46 @@ object GraftFunctions {
   private def litStr(e: Expression): String =
     e.eval(null).asInstanceOf[UTF8String].toString
 
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction(
-      "rolling_fingerprint", exprs => RollingFingerprintExpr(exprs.head), "built-in")
-    r.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64Expr(exprs.head), "built-in")
-    r.createOrReplaceTempFunction(
-      "winnow_fingerprints",
-      exprs => WinnowingFingerprintsExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-    r.createOrReplaceTempFunction(
-      "minhash_sigs", exprs => MinHashSigsExpr(exprs(0), exprs(1)), "built-in")
-    r.createOrReplaceTempFunction(
-      "greedy_pack", exprs => GreedyPackExpr(exprs(0), exprs(1)), "built-in")
-    r.createOrReplaceTempFunction(
-      "confirms_pdf", exprs => ConfirmsPdfExpr(exprs(0), exprs(1)), "built-in")
-    r.createOrReplaceTempFunction(
-      "link_score", exprs => LinkScoreExpr(exprs(0), exprs(1)), "built-in")
+  /** Every native function, as (SQL name, expression factory). `simhash64` is last:
+    * it is graft-only, so its presence marks a fully registered registry.
+    */
+  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "rolling_fingerprint" -> (e => RollingFingerprintExpr(e.head)),
+    "winnow_fingerprints" -> (e => WinnowingFingerprintsExpr(e(0), e(1), e(2))),
+    "minhash_sigs" -> (e => MinHashSigsExpr(e(0), e(1))),
+    "greedy_pack" -> (e => GreedyPackExpr(e(0), e(1))),
+    "confirms_pdf" -> (e => ConfirmsPdfExpr(e(0), e(1))),
+    "link_score" -> (e => LinkScoreExpr(e(0), e(1))),
     // vector/ANN kernels (graft.ml.Similarity / TextDedup.embeddingNearDups)
-    r.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimExpr(exprs(0), exprs(1)), "built-in")
-    r.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatDotExpr(exprs(0), exprs(1)), "built-in")
-    r.createOrReplaceTempFunction(
-      "float_norm", exprs => FloatNormExpr(exprs.head), "built-in")
-    r.createOrReplaceTempFunction(
-      "nearest_cell", exprs => NearestCellExpr(exprs(0), litStr(exprs(1))), "built-in")
-    r.createOrReplaceTempFunction(
-      "ranked_cells",
-      exprs => RankedCellsExpr(exprs(0), litStr(exprs(1)), litInt(exprs(2))), "built-in")
-    r.createOrReplaceTempFunction(
-      "hyperplane_bucket",
-      exprs => HyperplaneBucketExpr(exprs(0), litInt(exprs(1)), litInt(exprs(2)), litLong(exprs(3))), "built-in")
-    r.createOrReplaceTempFunction(
-      "rh_bucket_long",
-      exprs => HyperplaneBucketLongExpr(exprs(0), litInt(exprs(1)), litInt(exprs(2)), litLong(exprs(3))), "built-in")
+    "cosine_sim" -> (e => CosineSimExpr(e(0), e(1))),
+    "float_dot" -> (e => FloatDotExpr(e(0), e(1))),
+    "float_norm" -> (e => FloatNormExpr(e.head)),
+    "nearest_cell" -> (e => NearestCellExpr(e(0), litStr(e(1)))),
+    "ranked_cells" -> (e => RankedCellsExpr(e(0), litStr(e(1)), litInt(e(2)))),
+    "hyperplane_bucket" ->
+      (e => HyperplaneBucketExpr(e(0), litInt(e(1)), litInt(e(2)), litLong(e(3)))),
+    "rh_bucket_long" ->
+      (e => HyperplaneBucketLongExpr(e(0), litInt(e(1)), litInt(e(2)), litLong(e(3)))),
     // Spark's own runtime bloom filter (build + probe over LONG keys) under
     // session names: the crawl engine's seen semi-filter calls both through
     // call_function (the analyzer wraps the AggregateFunction)
-    r.createOrReplaceTempFunction(
-      "bloom_filter_agg", exprs => new BloomFilterAggregate(exprs(0), exprs(1)), "built-in")
-    r.createOrReplaceTempFunction(
-      "might_contain", exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
+    "bloom_filter_agg" -> (e => new BloomFilterAggregate(e(0), e(1))),
+    "might_contain" -> (e => BloomFilterMightContain(e(0), e(1))),
+    "simhash64" -> (e => SimHash64Expr(e.head)))
+
+  /** The SQL names [[register]] installs. */
+  val names: Seq[String] = functions.map(_._1)
+
+  /** Register every native function into `spark`'s function registry,
+    * once per registry: a session that already resolves `simhash64` is
+    * left alone, so the many call sites neither replace functions nor log a
+    * warning per function per call. A `newSession()` starts from Spark's
+    * built-ins and registers afresh; a cloned session inherits the set.
+    */
+  def register(spark: SparkSession): Unit = {
+    val r = spark.sessionState.functionRegistry
+    if (!r.functionExists(FunctionIdentifier(functions.last._1)))
+      functions.foreach { case (name, f) => r.createOrReplaceTempFunction(name, f, "built-in") }
   }
 }
 

@@ -74,16 +74,6 @@ final class CrawlEngine(
 
   @transient private val store = SnapshotStore(storeRoot)
   @transient val seenT: SnapshotTable = store.table("seen")
-
-  /** Bucket count for the seen table's storage layout: pinned by any
-    * existing bucketed commit (manifest registry — append compatibility
-    * across sessions beats re-deriving it from session conf), else the
-    * session's shuffle parallelism.
-    */
-  @transient private lazy val seenBuckets: Int =
-    seenT.currentSnapshot.flatMap(_.dirBuckets).flatMap(_.values.headOption)
-      .map(_.split(":", 2)(0).toInt)
-      .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
   @transient val linksT: SnapshotTable = store.table("links")
   @transient val docsT: SnapshotTable = store.table("documents")
   @transient val imagesT: SnapshotTable = store.table("images")
@@ -219,7 +209,7 @@ final class CrawlEngine(
     rollbackPartial()
     // a seen table with plain (legacy) or mixed-spec dirs is rewritten
     // bucketed once, so every not-in-seen check can read it as one scan
-    seenT.heal(spark, seenBuckets, "href")
+    seenT.heal(spark, "href")
     var round = lastCommittedGeneration
     var executed = 0
     var remaining = currentRemaining(seedQueries)
@@ -469,7 +459,7 @@ final class CrawlEngine(
     // bucketed commit (manifest registry) so later generations stay
     // join-compatible even if the session's shuffle partitioning changes.
     val Seq(seenMeta, linksMeta, pdfMeta, eventsMeta, _, docsMeta, _, _) = CommitWindow(spark,
-      "seen" -> (() => seenT.appendBucketed(seenDelta, round, seenBuckets, "href")),
+      "seen" -> (() => seenT.appendBucketed(seenDelta, round, seenT.bucketCount(spark), "href")),
       "links" -> (() => linksT.append(kept.toDF(), round)),
       "pdf" -> (() => pdfT.append(
         pdfLinks.select($"href".as("url"), lit(round).as("generation")).coalesce(4), round)),

@@ -247,6 +247,16 @@ final class SnapshotTable(val root: Path, val name: String) {
     }
   }
 
+  /** THE bucket count of a bucketed table: the count pinned by the
+    * manifest's `dirBuckets` registry (an existing store keeps its layout
+    * across sessions, so [[heal]] never rebuckets it for a conf change),
+    * else the session's shuffle parallelism: one file per shuffle task.
+    */
+  def bucketCount(spark: SparkSession): Int =
+    currentSnapshot.flatMap(_.dirBuckets).flatMap(_.values.headOption)
+      .map(_.split(":", 2)(0).toInt)
+      .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+
   /** The current snapshot as ONE bucketed [[scan]] under the table's
     * spec: it reports `HashPartitioning(bucketCol, n)` across every live
     * commit dir at once, so a join keyed on the bucket column reads this
@@ -264,14 +274,15 @@ final class SnapshotTable(val root: Path, val name: String) {
       scan(spark, cur.files, Some(spec))
     }
 
-  /** Rewrite the table bucketed (`buckets`, `bucketCol`) unless it already
-    * is: the self-heal for a table whose dirs carry mixed or stale specs
-    * (a restart with a different bucket count, or plain commits from
-    * before the table was bucketed). No-op on an empty or healthy table.
+  /** Rewrite the table bucketed on `bucketCol` at its [[bucketCount]]
+    * unless it already is: the self-heal for a table whose dirs carry mixed
+    * specs or plain commits from before the table was bucketed. No-op on an
+    * empty or healthy table.
     */
-  def heal(spark: SparkSession, buckets: Int, bucketCol: String): Option[SnapshotMeta] =
-    if (bucketSpec.contains((buckets, bucketCol))) None
-    else rebucket(spark, buckets, bucketCol)
+  def heal(spark: SparkSession, bucketCol: String): Option[SnapshotMeta] = {
+    val n = bucketCount(spark)
+    if (bucketSpec.contains((n, bucketCol))) None else rebucket(spark, n, bucketCol)
+  }
 
   /** Plain [[scan]] of the current snapshot's files whose stamped bucket
     * id (parsed by `BucketingUtils.getBucketId`, as the bucketed scan
@@ -436,9 +447,12 @@ final class SnapshotTable(val root: Path, val name: String) {
     }
     val keepIds = keep.map(_.snapshotId).toSet
     val referenced = keep.flatMap(_.files.map(f => Paths.get(f.path).normalize.toString)).toSet
-    // drop expired manifests (everything not on the kept chain)
-    history.filterNot(m => keepIds(m.snapshotId))
-      .foreach(m => Files.deleteIfExists(snapDir.resolve(s"snapshot-${m.snapshotId}.json")))
+    // drop expired manifests (everything not on the kept chain) by FILE NAME:
+    // parsing would choke on the truncated manifest a killed commit leaves
+    listDir(snapDir).foreach(p => p.getFileName.toString match {
+      case s"snapshot-$id.json" if id.toLongOption.exists(!keepIds(_)) => Files.deleteIfExists(p)
+      case _ => ()
+    })
     // delete unreferenced data files, then empty s<id> dirs
     val dataRoot = tableDir.resolve("data")
     if (!Files.exists(dataRoot)) return 0

@@ -99,18 +99,17 @@ object DedupStream {
              checkpointDir: String, threshold: Double = 0.8,
              trigger: Trigger = Trigger.AvailableNow(),
              maxFilesPerTrigger: Int = 1,
-             indexBuckets: Int = 32,
              autoCompactDirs: Int = 16,
              redirectsTable: Option[SnapshotTable] = None,
              quality: Column => Column = TextAnalysis.qualityScore,
              redirectSkipMinRows: Long = DefaultRedirectSkipMinRows): StreamingQuery = {
     TextDedup.requireThresholdInDomain(threshold)
-    // self-heal ONCE at stream start: a restart against tables written
-    // with a different bucket count (or pre-bucketing history) would
-    // otherwise create mixed-spec chains, silently disabling the tiered
-    // fold and the file skip for the stream's whole lifetime
-    indexTable.heal(spark, indexBuckets, "bkey")
-    redirectsTable.foreach(_.heal(spark, indexBuckets, "doc_id"))
+    // self-heal ONCE at stream start: a table with plain (pre-bucketing)
+    // or mixed-spec dirs would otherwise keep them, silently disabling the
+    // tiered fold and the file skip for the stream's whole lifetime. A
+    // uniformly bucketed table is left alone: its registry pins its count.
+    indexTable.heal(spark, "bkey")
+    redirectsTable.foreach(_.heal(spark, "doc_id"))
     spark.readStream.schema("doc_id BIGINT, text STRING")
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
       .writeStream
@@ -118,7 +117,7 @@ object DedupStream {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         commitBatch(spark, corpusTable, pairsTable, indexTable, batch, batchId,
-          threshold, indexBuckets, autoCompactDirs, redirectsTable, quality,
+          threshold, autoCompactDirs, redirectsTable, quality,
           redirectSkipMinRows)
       }
       .start()
@@ -157,17 +156,16 @@ object DedupStream {
     * because each doc now has exactly one row).
     *
     * Also the SELF-HEALING pass for a table whose dirs carry MIXED bucket
-    * specs (a restart with a different `indexBuckets`, or history from
-    * before redirects were bucketed): mixed specs make `bucketSpec` None,
-    * which silently disables the in-run tiered fold — so the None arm
-    * REBUCKETS the whole view at `buckets` instead of cementing the plain
-    * layout with a plain replace.
+    * specs (history from before redirects were bucketed): mixed specs make
+    * `bucketSpec` None, which silently disables the in-run tiered fold — so
+    * the None arm REBUCKETS the whole view at the table's
+    * [[SnapshotTable.bucketCount]] instead of cementing the plain layout
+    * with a plain replace.
     */
-  def compactRedirects(spark: SparkSession, table: SnapshotTable,
-                       buckets: Int = 32): Unit =
+  def compactRedirects(spark: SparkSession, table: SnapshotTable): Unit =
     table.currentSnapshot.foreach { cur =>
       val view = latestRedirects(spark, table).withColumn("gen", lit(cur.generation))
-      val (n, bc) = table.bucketSpec.getOrElse((buckets, "doc_id"))
+      val (n, bc) = table.bucketSpec.getOrElse((table.bucketCount(spark), "doc_id"))
       table.replaceBucketed(view, cur.generation, n, bc)
       ()
     }
@@ -181,7 +179,6 @@ object DedupStream {
   private[streaming] def commitBatch(spark: SparkSession, corpusTable: SnapshotTable,
                                      pairsTable: SnapshotTable, indexTable: SnapshotTable,
                                      batch: DataFrame, batchId: Long, threshold: Double,
-                                     indexBuckets: Int = 32,
                                      autoCompactDirs: Int = 16,
                                      redirectsTable: Option[SnapshotTable] = None,
                                      quality: Column => Column = TextAnalysis.qualityScore,
@@ -224,7 +221,7 @@ object DedupStream {
             updatedRedirects(spark, rt, corpus.unionByName(delta), pairs, quality,
               redirectSkipMinRows)
               .withColumn("gen", lit(gen)),
-            generation = gen, buckets = indexBuckets, bucketCol = "doc_id")
+            generation = gen, buckets = rt.bucketCount(spark), bucketCol = "doc_id")
         }
       }
       // index and corpus appends are INDEPENDENT once pairs+redirects have
@@ -245,7 +242,7 @@ object DedupStream {
         // (bit-identical either way — the pipeline is deterministic)
         Option.when(needIndex)("index" -> (() => indexTable.appendBucketed(
           deltaBandRows.getOrElse(TextDedup.bandIndexOf(delta)),
-          generation = gen, buckets = indexBuckets, bucketCol = "bkey"))),
+          generation = gen, buckets = indexTable.bucketCount(spark), bucketCol = "bkey"))),
         Option.when(needCorpus)("corpus" -> (() => corpusTable.append(delta, generation = gen)))
       ).flatten: _*)
       if (autoCompactDirs > 0) {

@@ -128,4 +128,24 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(withNull.select(
       call_function("rh_bucket_long", col("v"), lit(64), lit(8), lit(0x97a3e5L))).head().getLong(0) == 0L)
   }
+
+  test("register runs once per session registry: a repeat replaces nothing; a new session resolves every function from SQL") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    GraftFunctions.register(spark)
+    val r = spark.sessionState.functionRegistry
+    // each registration makes a fresh ExpressionInfo, so identity shows a replace
+    def infos = GraftFunctions.names.map(n => r.lookupFunction(FunctionIdentifier(n)))
+    val before = infos
+    assert(before.forall(_.isDefined) && GraftFunctions.names.size == 16)
+    GraftFunctions.register(spark)
+    assert(infos.zip(before).forall { case (a, b) => a.get eq b.get },
+      "a second register replaced registered functions")
+    val fresh = spark.newSession()
+    GraftFunctions.register(fresh)
+    GraftFunctions.names.foreach(n =>
+      assert(fresh.catalog.functionExists(n), s"$n does not resolve in a new session"))
+    val row = fresh.sql("SELECT simhash64('a b c') = simhash64('a b c'), " +
+      "rolling_fingerprint('x y') = rolling_fingerprint('x  Y'), float_norm(array(3.0f, 4.0f))").head()
+    assert(row.getBoolean(0) && row.getBoolean(1) && row.getDouble(2) == 5.0)
+  }
 }

@@ -100,7 +100,9 @@ class DedupStreamSpec extends AnyFunSuite {
     val recomputed = TextDedup.bandIndexOf(allDocs.toDF("doc_id", "text"))
       .select($"id", $"band", $"bkey").as[(Long, Int, Long)].collect().toSet
     assert(streamed == recomputed)
-    assert(indexT.bucketSpec.contains((32, "bkey")), "index must be stored bucketed by bkey")
+    assert(indexT.bucketSpec.contains(
+      (spark.conf.get("spark.sql.shuffle.partitions").toInt, "bkey")),
+      "index must be stored bucketed by bkey at the session's shuffle parallelism")
   }
 
   test("ingest rejects a threshold outside [0.8, 1] before the stream starts") {
@@ -443,10 +445,10 @@ class DedupStreamSpec extends AnyFunSuite {
   }
 
   test("restart with a different bucket count self-heals: tables rebucket at stream start, drain unchanged") {
-    // run 1 drains two files at indexBuckets=8; run 2 resumes the SAME
-    // checkpoint over a third file at the default 32. Without the heal the
-    // second run's appends create mixed-spec chains: bucketSpec None, the
-    // in-run fold dead for the stream's lifetime, the file skip unpruned.
+    // run 1 drains two files at 8 shuffle partitions; run 2 resumes the
+    // SAME checkpoint over a third file at the session's own count. The
+    // tables' registries pin 8, so run 2 appends at 8: no rebucket, no
+    // mixed-spec chain (which would kill the in-run fold and the file skip).
     val store = SnapshotStore(Files.createTempDirectory("graft-dstream-heal").toString)
     val corpusT = store.table("corpus")
     val pairsT = store.table("near_dup_pairs")
@@ -459,18 +461,29 @@ class DedupStreamSpec extends AnyFunSuite {
     val f2 = Seq((2100L, doc(100) + " yyy"), (1105L, doc(105) + " zzz"))
     writeFile(src, "0.parquet", f0)
     writeFile(src, "1.parquet", f1)
-    DedupStream.ingest(spark, src.toString, corpusT, pairsT, indexT, ckpt,
-      threshold = 0.8, indexBuckets = 8, redirectsTable = Some(redirT))
-      .awaitTermination(120000)
+    val key = "spark.sql.shuffle.partitions"
+    val sessionParts = spark.conf.get(key)
+    assert(sessionParts != "8", "the restart must change the session's count")
+    spark.conf.set(key, "8")
+    try DedupStream.ingest(spark, src.toString, corpusT, pairsT, indexT, ckpt,
+      threshold = 0.8, redirectsTable = Some(redirT)).awaitTermination(120000)
+    finally spark.conf.set(key, sessionParts)
     assert(indexT.bucketSpec.contains((8, "bkey")))
+    assert(redirT.bucketSpec.contains((8, "doc_id")))
+    val (index1, redir1) = (indexT.currentSnapshot.get, redirT.currentSnapshot.get)
     writeFile(src, "2.parquet", f2)
     DedupStream.ingest(spark, src.toString, corpusT, pairsT, indexT, ckpt,
-      threshold = 0.8, redirectsTable = Some(redirT)) // default 32
-      .awaitTermination(120000)
-    assert(indexT.bucketSpec.contains((32, "bkey")),
-      "index must be uniformly rebucketed at the new count, not mixed")
-    assert(redirT.bucketSpec.exists(_._2 == "doc_id"),
-      "redirects must stay uniformly bucketed after the heal")
+      threshold = 0.8, redirectsTable = Some(redirT)).awaitTermination(120000)
+    assert(indexT.bucketSpec.contains((8, "bkey")), "the index must keep its pinned count")
+    assert(redirT.bucketSpec.contains((8, "doc_id")), "redirects must keep their pinned count")
+    // no rebucket commit: run 2's only index commit is its batch's append,
+    // whose parent is run 1's last snapshot (no heal replaced it)
+    val index2 = indexT.currentSnapshot.get
+    assert(index2.snapshotId == index1.snapshotId + 1 && index2.parentId == index1.snapshotId &&
+      index2.generation == 3)
+    assert(indexT.deltaRows(index2) > 0, "run 2 must append, not replace")
+    val redir2 = redirT.currentSnapshot.get
+    assert(redir2.snapshotId == redir1.snapshotId + 1 && redir2.parentId == redir1.snapshotId)
     val all = (f0 ++ f1 ++ f2).toDF("doc_id", "text")
     assert(pairSet(pairsT.read(spark).get) ==
       pairSet(TextDedup.minhashNearDups(all, 0.8)),
@@ -479,5 +492,45 @@ class DedupStreamSpec extends AnyFunSuite {
       .select($"doc_id", $"survivor_id").as[(Long, Long)].collect().toSet
     assert(view.filter(v => Set(100L, 1100L, 2100L)(v._1)).map(_._2).size == 1,
       "the cross-restart cluster must resolve to one survivor")
+  }
+
+  test("a legacy plain band_index is rebucketed uniformly when ingest starts; drain unchanged") {
+    // run 1 drains the base file; its index is then rewritten in the layout
+    // of a store from before the index was bucketed (two plain dirs, no
+    // registry). Resuming the checkpoint, ingest's stream-start heal must
+    // rewrite it as ONE dir bucketed by bkey at the session's count before
+    // the next micro-batch appends.
+    val store = SnapshotStore(Files.createTempDirectory("graft-dstream-legacy").toString)
+    val corpusT = store.table("corpus")
+    val pairsT = store.table("near_dup_pairs")
+    val indexT = store.table("band_index")
+    val ckpt = Files.createTempDirectory("graft-dstream-legacy-ckpt").toString
+    val src = Files.createTempDirectory("graft-dstream-legacy-src")
+    val base = (120 until 126).map(i => (i.toLong, doc(i)))
+    val delta = Seq((1120L, doc(120) + " zzz"), (1124L, doc(124) + " zzz"))
+    writeFile(src, "0.parquet", base)
+    DedupStream.ingest(spark, src.toString, corpusT, pairsT, indexT, ckpt, threshold = 0.8)
+      .awaitTermination(120000)
+    val baseDf = base.toDF("doc_id", "text")
+    indexT.replace(TextDedup.bandIndexOf(baseDf.filter($"doc_id" < 123L)), generation = 1)
+    indexT.append(TextDedup.bandIndexOf(baseDf.filter($"doc_id" >= 123L)), generation = 1)
+    val legacy = indexT.currentSnapshot.get
+    assert(indexT.bucketSpec.isEmpty && indexT.commitDirCount == 2 && legacy.dirBuckets.isEmpty)
+    writeFile(src, "1.parquet", delta)
+    DedupStream.ingest(spark, src.toString, corpusT, pairsT, indexT, ckpt, threshold = 0.8)
+      .awaitTermination(120000)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(indexT.bucketSpec.contains((parts, "bkey")), "the heal must bucket the whole index")
+    // the heal: one replace over the legacy snapshot, rows and generation kept
+    val healed = indexT.snapshot(legacy.snapshotId + 1)
+    assert(healed.parentId == legacy.snapshotId && healed.generation == legacy.generation &&
+      healed.rowCount == legacy.rowCount && healed.dirBuckets.exists(_.size == 1))
+    assert(indexT.currentSnapshot.get.parentId == healed.snapshotId, "then the batch appends")
+    val all = (base ++ delta).toDF("doc_id", "text")
+    assert(indexT.read(spark).get.select($"id", $"band", $"bkey").as[(Long, Int, Long)]
+      .collect().toSet == TextDedup.bandIndexOf(all).select($"id", $"band", $"bkey")
+      .as[(Long, Int, Long)].collect().toSet)
+    assert(pairSet(pairsT.read(spark).get) == pairSet(TextDedup.minhashNearDups(all, 0.8)))
+    assert(pairSet(pairsT.read(spark).get).contains((120L, 1120L)), "the fixture must pair")
   }
 }

@@ -19,6 +19,10 @@ parent's, and a verdict:
   - "worse>bound": the change's median is worse than the parent's by more
     than the bound;
   - "ok" otherwise.
+A "claim" column says whether a gain claim holds on that metric: "gain" when
+the change won at least 9 of every 10 pairs run (a failed pair or a tie is no
+win) and its median is better than the parent's by more than the parent's
+IQR, "-" otherwise.
 A run that produced no result, or ran past RUN_CAP_S seconds, counts as
 failed on its side and is never a sample; the last 20 stderr lines of every
 failed run are printed. Exits non-zero if any run failed or reported `correct: false`.
@@ -85,7 +89,7 @@ def main():
     ok_pairs = [i for i in range(pairs) if runs["parent"][i] and runs["change"][i]]
     print(f"\n{workload}: {pairs} pairs, {len(ok_pairs)} with a result on both sides")
     print(f"{'metric':16s} {'parent q1/med/q3':>28s} {'change q1/med/q3':>28s} "
-          f"{'won':>7s} {'change/parent':>13s}  verdict")
+          f"{'won':>7s} {'change/parent':>13s} {'claim':>5s}  verdict")
     for m in metrics:
         name, bound, higher = m["name"], m["bound"], m["better"] == "higher"
         val = {s: [runs[s][i]["metrics"][name]["value"] for i in ok_pairs] for s in runs}
@@ -104,9 +108,11 @@ def main():
             verdict = "worse>bound"
         else:
             verdict = "ok"
+        shift = (cq[1] - pq[1]) if higher else (pq[1] - cq[1])
+        claim = "gain" if won >= 0.9 * pairs and shift > pq[2] - pq[0] else "-"
         fmt = lambda q: f"{q[0]:.4g}/{q[1]:.4g}/{q[2]:.4g}"
         print(f"{name:16s} {fmt(pq):>28s} {fmt(cq):>28s} {won:3d}/{len(ok_pairs):<3d} "
-              f"{ratio:13.3f}  {verdict} (bound {bound})")
+              f"{ratio:13.3f} {claim:>5s}  {verdict} (bound {bound})")
     bad = 0
     for side in runs:
         status = ["none" if r is None else f"{str(r['correct']).lower()}/{r['failed']}"
